@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions import vector as V
 from .operators import filter_expr, knn, mutation
 
 # Core schema: fixed columns + dynamic-field overflow map (the Milvus
@@ -349,6 +350,14 @@ class VectorCollection:
         )
         return resolved.filter(F.col("op") != "delete").drop("op", "seq")
 
+    def _read_base(self) -> DataFrame:
+        """The frame reads plan over: the loaded snapshot while Spark
+        still caches it (see ``load``), else ``snapshot()``."""
+        loaded = self._loaded
+        if loaded is not None and loaded._jdf.storageLevel().isValid():  # noqa: SLF001
+            return loaded
+        return self.snapshot()
+
     @property
     def current_seq(self) -> int:
         """The latest writer sequence in the log — the token a caller
@@ -430,7 +439,19 @@ class VectorCollection:
         assignment when an index exists) so repeated searches skip the
         log-resolve window. MEMORY_AND_DISK: an executor that can't
         hold its partitions spills instead of failing — load is an
-        optimization, never a correctness gate."""
+        optimization, never a correctness gate.
+
+        While loaded, ``search``, ``search_diverse`` and ``query`` plan
+        over this pinned snapshot instead of re-listing the log and
+        re-analyzing the last-writer-wins window per call. A write
+        made in THIS Spark session — upsert, delete, compact, through
+        this object or another one on the same path — is visible to
+        the next search: Spark re-caches every cached plan over a path
+        it appends to, and compact refreshes the path. A write from
+        another Spark application is not seen until ``release()`` +
+        ``load()``. If the cached snapshot is dropped behind the
+        collection's back (``spark.catalog.clearCache()``), reads fall
+        back to resolving the log."""
         from pyspark import StorageLevel
 
         self._loaded = self.snapshot().persist(StorageLevel.MEMORY_AND_DISK)
@@ -553,7 +574,7 @@ class VectorCollection:
               output_fields: list[str] | None = None) -> DataFrame:
         """client.query(filter=..., limit=..., output_fields=[...])
         analog (milvus-app/describe.py:26-31)."""
-        snap = self.snapshot()
+        snap = self._read_base()
         df = snap.filter(filter_expr.translate(filter, snap))
         if output_fields:
             df = df.select(*output_fields)
@@ -571,7 +592,11 @@ class VectorCollection:
         nprobe/nlist of the clusters are scanned instead of the full
         collection — the reference's IVF_FLAT search path (L2 only;
         create_index rejects other metrics). Approx results are
-        (key, cluster_id, distance)."""
+        (key, cluster_id, distance).
+
+        A query whose length is not ``dim``, or with a NaN/inf element,
+        raises ValueError instead of ranking NULL or NaN distances."""
+        qvec = V.check_query_vector(qvec, self.dim)
         if approx:
             if self._ivf is None:
                 raise ValueError("no index: call create_index() first "
@@ -580,7 +605,7 @@ class VectorCollection:
                 raise ValueError("approx search does not support filters; "
                                  "use exact search for filtered queries")
             return self._ivf.search(qvec, k, nprobe=self._nprobe)
-        snap = self.snapshot()
+        snap = self._read_base()
         base = snap.filter(filter_expr.translate(filter, snap))
         return knn.knn_topk(
             base, qvec, k, vec_col="embedding", id_col="key",
@@ -597,8 +622,10 @@ class VectorCollection:
         the RAG retrieval mode that refuses to spend the result budget
         on near-duplicates of the first hit. Optional filter applies
         before the candidate scan (filter-then-rank, one plan).
-        Returns (key, relevance, mmr_score, mmr_rank)."""
-        snap = self.snapshot()
+        Returns (key, relevance, mmr_score, mmr_rank); a bad query
+        vector raises ValueError as in ``search``."""
+        qvec = V.check_query_vector(qvec, self.dim)
+        snap = self._read_base()
         base = snap.filter(filter_expr.translate(filter, snap))
         return knn.mmr_topk(
             base, qvec, k=k, fetch_k=fetch_k, lambda_=lambda_,

@@ -22,8 +22,51 @@ so a 100 TB scan of embeddings never crosses the JVM/Python boundary.
 
 from __future__ import annotations
 
+import math
+import struct
+from typing import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.utils import get_active_spark_context
+
+
+def vector_literal(values: Iterable[float]) -> Column:
+    """One ``array<double>`` Literal holding the whole vector.
+
+    ``F.array(*[F.lit(x) for x in v])`` costs one py4j round trip per
+    element plus the analysis of a dim-child CreateArray (~0.3 s for a
+    384-dim query on the driver). Here the values cross the gateway as
+    ONE big-endian byte buffer, are copied into a JVM ``double[]`` and
+    wrapped by ``functions.lit`` — a constant number of py4j calls at
+    any dim. Catalyst's constant folding turned the per-element form
+    into the same array literal, so the values computed from it are
+    unchanged."""
+    vals = [float(x) for x in values]
+    sc = get_active_spark_context()
+    jvm = sc._jvm  # noqa: SLF001
+    arr = sc._gateway.new_array(jvm.double, len(vals))  # noqa: SLF001
+    buf = bytearray(struct.pack(f">{len(vals)}d", *vals))
+    jvm.java.nio.ByteBuffer.wrap(buf).asDoubleBuffer().get(arr)
+    return Column(jvm.org.apache.spark.sql.functions.lit(arr))
+
+
+def check_query_vector(qvec: Iterable[float], dim: int) -> list[float]:
+    """The query vector as floats, or ValueError when it cannot be
+    searched: a wrong-length query zips into a NULL distance for every
+    row and a NaN/inf element into NaN distances, so an unchecked bad
+    query returns k plausible-looking rows instead of failing."""
+    try:
+        vals = [float(x) for x in qvec]
+    except (TypeError, ValueError) as e:
+        raise ValueError(f"query vector has a non-numeric element: {e}") from e
+    if len(vals) != dim:
+        raise ValueError(
+            f"query vector has {len(vals)} dimensions, expected {dim}"
+        )
+    if not all(math.isfinite(x) for x in vals):
+        raise ValueError("query vector has a NaN or infinite element")
+    return vals
 
 
 def squared_l2(a: Column | str, b: Column | str) -> Column:

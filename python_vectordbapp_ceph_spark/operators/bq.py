@@ -67,15 +67,11 @@ def fit_bq(df: DataFrame, vec_col: str, dim: int) -> BQParams:
     return BQParams(means=[float(row[f"_m{i}"]) for i in range(dim)])
 
 
-def _mean_arr(params: BQParams):
-    return F.array(*[F.lit(m) for m in params.means])
-
-
 def bq_encode(df: DataFrame, vec_col: str, params: BQParams, out_col: str = "bq_code") -> DataFrame:
     """Pack sign bits into ``array<bigint>`` (little-endian within and
     across words): bit (w*64+b) set ⟺ v[w*64+b] > mean[w*64+b]."""
     dim, n_words = params.dim, params.n_words
-    means = _mean_arr(params)
+    means = V.vector_literal(params.means)
     words = F.expr(
         f"transform(sequence(0, {n_words - 1}), w ->"
         f" aggregate(sequence(0, 63), 0L, (acc, b) ->"
@@ -141,7 +137,7 @@ def bq_search(
         .limit(k * refine_factor)
         .select(id_col, "_hd")
     )
-    qarr = F.array(*[F.lit(float(x)) for x in qvec])
+    qarr = V.vector_literal(qvec)
     exact = encoded.join(F.broadcast(cands), id_col).select(
         id_col,
         "_hd",

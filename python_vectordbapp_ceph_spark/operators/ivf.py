@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import vector as V
+from .knn import topk_by_distance
 
 _log = logging.getLogger(__name__)
 
@@ -110,24 +111,14 @@ class IVFIndex:
         ``target_recall=`` resolves nprobe from the index's recorded
         recall curve (resolve_nprobe) instead of the caller guessing.
         """
+        qvec = V.check_query_vector(qvec, len(self.centroids[0]))
         if target_recall is not None:
             nprobe = self.resolve_nprobe(target_recall)
         probes = self.probe_clusters(qvec, nprobe)
-        qlit = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
         cand = self.assigned.filter(F.col("cluster_id").isin(probes))
-        return (
-            cand.withColumn(
-                "distance", F.round(V.l2_distance(F.col(self.vec_col), qlit), 6)
-            )
-            .select(self.id_col, "cluster_id", "distance")
-            # nulls LAST: a null/wrong-dim embedding yields a NULL
-            # distance, and Spark's bare asc() is NULLS FIRST — which
-            # would rank every such row ahead of all real neighbors
-            # (knn.py and search_batch already order nulls-last)
-            .orderBy(
-                F.col("distance").asc_nulls_last(), F.col(self.id_col).asc()
-            )
-            .limit(k)
+        return topk_by_distance(
+            cand, qvec, k, [self.id_col, "cluster_id"],
+            self.vec_col, self.id_col, "l2",
         )
 
 
@@ -274,10 +265,13 @@ def build_ivf(
     # count() + first() pair cost two scheduling-bound jobs per build;
     # first(ignorenulls) over size(vec) inside the same aggregate
     # returns the dimension of the first non-null vector, the identical
-    # value the old filtered first() produced
+    # value the old filtered first() produced. The when() guard keeps a
+    # NULL vector NULL: with ANSI off size(NULL) is -1, not NULL, and
+    # first(ignorenulls) would report a "-1-dimensional" input
+    vec = F.col(vec_col)
     probe = df.agg(
         F.count(F.lit(1)).alias("_n"),
-        F.first(F.size(F.col(vec_col)), ignorenulls=True).alias("_d"),
+        F.first(F.when(vec.isNotNull(), F.size(vec)), ignorenulls=True).alias("_d"),
     ).first()
     n = int(probe["_n"])
     if n == 0:

@@ -6,7 +6,11 @@ Reference behavior being reproduced (Spark-first, not a port):
     output_fields=[...])`` (milvus-app/search.py:13-19), metric L2.
 
 Plan shapes (scale notes):
-  - single query vector: literal-array distance column →
+  - single query vector: the query is ONE array literal
+    (``V.vector_literal``) projected as ``_q``, and the distance column
+    ``round(distance(vec, _q), 6)`` is built once per (column, metric)
+    and reused by every search — CollapseProject inlines the literal,
+    so the optimized plan is the literal-array distance column →
     ``orderBy(dist).limit(k)``. Catalyst plans TakeOrderedAndProject —
     a per-partition top-k + tiny final merge on the driver. No shuffle
     of the base table; at 100 TB this is a full scan + k-row merge,
@@ -23,14 +27,48 @@ and oracle-hashable.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
 
 
-def _query_vec_literal(qvec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
+_Q = "_q"
+
+
+@lru_cache(maxsize=None)
+def _query_distance(vec_col: str, metric: str) -> Column:
+    """``round(distance(vec_col, _q), 6)`` — built once per (column,
+    metric): constructing the higher-order zip_with/aggregate Column
+    costs tens of py4j calls, paid per search before. Reusing it is
+    safe, a Column is an unresolved expression bound at analysis."""
+    return F.round(V.distance(F.col(vec_col), F.col(_Q), metric), 6)
+
+
+def topk_by_distance(
+    df: DataFrame,
+    qvec: list[float],
+    k: int,
+    cols: list[str],
+    vec_col: str,
+    id_col: str,
+    metric: str = "l2",
+) -> DataFrame:
+    """``cols`` + ``distance`` of the k rows of ``df`` nearest ``qvec``,
+    ties broken by ``id_col``: the shared plan of exact and IVF search.
+
+    nulls LAST: cosine distance is NULL for zero-norm vectors and a
+    null/wrong-dim embedding yields a NULL distance, while plain asc()
+    is NULLS FIRST — degenerate rows must not outrank every real
+    neighbor."""
+    return (
+        df.select("*", V.vector_literal(qvec).alias(_Q))
+        .select(*cols, _query_distance(vec_col, metric).alias("distance"))
+        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 def knn_topk(
@@ -46,16 +84,8 @@ def knn_topk(
 
     TakeOrderedAndProject plan: no shuffle, scales linearly in rows.
     """
-    dist = F.round(V.distance(F.col(vec_col), _query_vec_literal(qvec), metric), 6)
-    out = df.withColumn("distance", dist)
-    cols = output_cols or [id_col]
-    # nulls LAST: cosine distance is NULL for zero-norm vectors, and
-    # plain asc() is NULLS FIRST — degenerate rows must not outrank
-    # every real neighbor
-    return (
-        out.select(*cols, "distance")
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
+    return topk_by_distance(
+        df, qvec, k, output_cols or [id_col], vec_col, id_col, metric
     )
 
 
@@ -96,7 +126,7 @@ def similarity_topk(
 ) -> DataFrame:
     """Cosine-similarity top-k (descending similarity)."""
     sim = F.round(
-        V.cosine_similarity(F.col(vec_col), _query_vec_literal(qvec)), 6
+        V.cosine_similarity(F.col(vec_col), V.vector_literal(qvec)), 6
     )
     return (
         df.withColumn("similarity", sim)
@@ -143,7 +173,7 @@ def mmr_topk(
         df.withColumn(
             "_sim",
             F.round(
-                V.cosine_similarity(F.col(vec_col), _query_vec_literal(qvec)), 6
+                V.cosine_similarity(F.col(vec_col), V.vector_literal(qvec)), 6
             ),
         )
         .select(id_col, vec_col, "_sim")

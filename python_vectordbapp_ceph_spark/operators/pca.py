@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
+
 _SCALE = 10**6          # the 1e-6 value grid both moment paths share
 _PROD_SCALE = _SCALE * _SCALE
 
@@ -214,7 +216,7 @@ def pca_fit(
 def project_col(vec_col: str, component: np.ndarray) -> Column:
     """JVM-side dot product of the vector column against one literal
     component — codegen'd, no Python in the hot path."""
-    comp = F.array(*[F.lit(float(c)) for c in component])
+    comp = V.vector_literal(component)
     return F.aggregate(
         F.zip_with(
             F.col(vec_col).cast("array<double>"),

@@ -158,7 +158,7 @@ def pq_search(
     for i in range(m):
         qs = q[i * sub : (i + 1) * sub]
         lut[i] = ((cent[i] - qs[None, :]) ** 2).sum(axis=1)
-    flat = F.array(*[F.lit(float(x)) for x in lut.ravel()])
+    flat = V.vector_literal(lut.ravel())
     idx = F.transform(F.col(code_col), lambda _, i: i)
     approx2 = F.aggregate(
         F.zip_with(
@@ -176,7 +176,7 @@ def pq_search(
         .orderBy(F.col("_approx2").asc(), F.col(id_col).asc())
         .limit(k * refine_factor)
     )
-    qd = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
+    qd = V.vector_literal(qvec)
     return (
         original.join(F.broadcast(cands), id_col)
         .withColumn("distance", F.round(V.l2_distance(F.col(vec_col), qd), 6))

@@ -69,16 +69,12 @@ def fit_sq8(df: DataFrame, vec_col: str, dim: int) -> SQ8Params:
     return SQ8Params(mins=mins, scales=scales)
 
 
-def _lit_arr(vals: list[float]):
-    return F.array(*[F.lit(float(x)) for x in vals])
-
-
 def sq8_encode(
     df: DataFrame, params: SQ8Params, vec_col: str, code_col: str = "code"
 ) -> DataFrame:
     """Narrow map adding the 8-bit code column; no shuffle."""
     v = F.col(vec_col).cast("array<double>")
-    mins, scales = _lit_arr(params.mins), _lit_arr(params.scales)
+    mins, scales = V.vector_literal(params.mins), V.vector_literal(params.scales)
     idx = F.transform(v, lambda _, i: i)
     code = F.zip_with(
         v,
@@ -115,8 +111,8 @@ def sq8_search(
     by reconstructed distance (TakeOrderedAndProject: no global
     sort). Stage 2 joins the originals for those few candidates and
     re-ranks exactly. The join side is k*refine rows → broadcast."""
-    mins, scales = _lit_arr(params.mins), _lit_arr(params.scales)
-    qlit = _lit_arr([float(x) for x in qvec])
+    mins, scales = V.vector_literal(params.mins), V.vector_literal(params.scales)
+    qlit = V.vector_literal(qvec)
     idx = F.transform(F.col(code_col), lambda _, i: i)
     # reconstructed[i] = mins[i] + code[i]*scales[i]; asymmetric L2
     diff = F.zip_with(
@@ -134,11 +130,10 @@ def sq8_search(
         .orderBy(F.col("_approx2").asc(), F.col(id_col).asc())
         .limit(k * refine_factor)
     )
-    qd = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
     return (
         original.join(F.broadcast(cands), id_col)
         .withColumn(
-            "distance", F.round(V.l2_distance(F.col(vec_col), qd), 6)
+            "distance", F.round(V.l2_distance(F.col(vec_col), qlit), 6)
         )
         .select(id_col, "distance")
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())

@@ -61,19 +61,20 @@ _SMALL_PLAN_DEFAULT = 64 << 20
 
 
 def _small_plan_gate_bytes(spark) -> int:
+    """The gate in bytes. An override that is not an integer raises:
+    falling back to the default would run the plan shape the caller
+    set the override to change, with nothing to say so."""
+    key, v = _SMALL_PLAN_CONF, spark.conf.get(_SMALL_PLAN_CONF, None)
+    if v is None:
+        key, v = _SMALL_PLAN_ENV, os.environ.get(_SMALL_PLAN_ENV) or None
+    if v is None:
+        return _SMALL_PLAN_DEFAULT
     try:
-        v = spark.conf.get(_SMALL_PLAN_CONF, None)
-        if v is not None:
-            return int(v)
-    except Exception:
-        pass
-    env = os.environ.get(_SMALL_PLAN_ENV)
-    if env:
-        try:
-            return int(env)
-        except ValueError:
-            pass
-    return _SMALL_PLAN_DEFAULT
+        return int(v)
+    except ValueError:
+        raise ValueError(
+            f"{key}={v!r} is not an integer byte count"
+        ) from None
 
 
 # plan nodes that can MULTIPLY rows relative to their inputs — with any

@@ -899,7 +899,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.row_number().over(wt).alias("rt"))
     )
     e = T(spark, sf_dir, "embeddings")
-    qarr = F.array(*[F.lit(float(x)) for x in QVEC])
+    qarr = V.vector_literal(QVEC)
     ev = e.select(
         F.col("vec_id").alias("doc_id"),
         F.round(
@@ -1168,7 +1168,7 @@ def q_hybrid_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ns"),
     )
     e = T(spark, sf_dir, "embeddings")
-    qarr = F.array(*[F.lit(float(x)) for x in QVEC])
+    qarr = V.vector_literal(QVEC)
     ev = e.select(
         F.col("vec_id").alias("doc_id"),
         F.round(

@@ -78,7 +78,7 @@ def q_vector_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference A14: metric L2 (pythonvectordbceph.py:114), cosine≡dot
     on normalized vectors. All three metrics in one scan."""
     e = T(spark, sf_dir, "embeddings")
-    q = F.array(*[F.lit(x) for x in QVEC]).cast("array<double>")
+    q = V.vector_literal(QVEC)
     return e.select(
         "vec_id",
         F.round(V.l2_distance(F.col("embedding"), q), 6).alias("l2_dist"),
@@ -437,7 +437,7 @@ def q_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why filtered search at 100 TB is CHEAPER than unfiltered, not
     an add-on cost."""
     e = T(spark, sf_dir, "embeddings").filter(F.col("label").isin(3, 7))
-    q = F.array(*[F.lit(x) for x in QVEC]).cast("array<double>")
+    q = V.vector_literal(QVEC)
     return (
         e.select(
             "vec_id",
@@ -476,7 +476,7 @@ def q_grouped_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per group. Composes with the IVF/SQ8/BQ tiers exactly like
     plain KNN (swap the distance scan)."""
     e = T(spark, sf_dir, "embeddings")
-    q = F.array(*[F.lit(x) for x in QVEC]).cast("array<double>")
+    q = V.vector_literal(QVEC)
     d = e.select(
         "vec_id",
         "label",
@@ -525,7 +525,7 @@ def q_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     cursor, which is exactly how a vector-search iterator stays
     consistent across pages)."""
     e = T(spark, sf_dir, "embeddings")
-    q = F.array(*[F.lit(x) for x in QVEC]).cast("array<double>")
+    q = V.vector_literal(QVEC)
     d = e.select(
         "vec_id",
         "label",
@@ -568,7 +568,7 @@ def q_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel and composes with the IVF layout (probe
     only cells whose centroid distance <= radius + cell radius)."""
     e = T(spark, sf_dir, "embeddings")
-    q = F.array(*[F.lit(x) for x in QVEC]).cast("array<double>")
+    q = V.vector_literal(QVEC)
     d = F.round(V.l2_distance(F.col("embedding"), q), 6)
     return e.select("vec_id", d.alias("distance")).filter(
         F.col("distance") < 1.15

@@ -278,3 +278,96 @@ def test_search_diverse_skips_near_duplicate(spark, coll):
         .collect()
     ]
     assert got[0] == "dup"
+
+
+def _plan_node_names(jplan) -> list[str]:
+    """Node names of a logical plan tree; the plan cached inside an
+    InMemoryRelation is not walked."""
+    out, stack = [], [jplan]
+    while stack:
+        p = stack.pop()
+        out.append(p.nodeName())
+        children = p.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_loaded_search_plans_over_snapshot_and_sees_session_writes(
+    spark, coll, monkeypatch
+):
+    """A loaded collection's searches read the cached snapshot
+    (InMemoryRelation, no per-search last-writer-wins Window) and still
+    see every same-session write: upsert, delete_keys, compact and a
+    write through a second VectorCollection on the same path."""
+    import numpy as np
+
+    from python_vectordbapp_ceph_spark.operators import mutation
+
+    rng = np.random.default_rng(5)
+    live = {f"k{i}": [float(x) for x in rng.uniform(-1, 1, DIM)] for i in range(20)}
+    coll.upsert(make_rows(spark, [(k, v, None) for k, v in live.items()]))
+    coll.load()
+    resolves = []
+    real = mutation.upsert_last_writer
+    monkeypatch.setattr(
+        mutation, "upsert_last_writer",
+        lambda *a, **kw: resolves.append(1) or real(*a, **kw),
+    )
+    q = [0.3, -0.3, 0.3, -0.3]
+
+    def expected():
+        d = {k: round(float(np.linalg.norm(np.float32(v) - np.array(q))), 6)
+             for k, v in live.items()}
+        return sorted(d, key=lambda k: (d[k], k))[:3]
+
+    def top():
+        before = len(resolves)
+        df = coll.search(q, k=3, output_fields=["key"])
+        nodes = _plan_node_names(df._jdf.queryExecution().optimizedPlan())
+        assert "InMemoryRelation" in nodes and "Window" not in nodes
+        assert len(resolves) == before  # no snapshot resolve per search
+        return [r.key for r in df.collect()]
+
+    assert top() == expected()
+    coll.upsert(make_rows(spark, [("near", q, None)]))
+    live["near"] = q
+    assert top() == expected() and top()[0] == "near"
+    coll.delete_keys(["near"])
+    del live["near"]
+    assert top() == expected()
+    first = expected()[0]
+    coll.upsert(make_rows(spark, [(first, [9.0] * DIM, None)]))
+    live[first] = [9.0] * DIM
+    coll.compact()
+    assert top() == expected() and first not in top()
+    other = VectorCollection(spark=spark, path=coll.path, dim=DIM, name="t")
+    other.upsert(make_rows(spark, [("other", q, None)]))
+    live["other"] = q
+    assert top() == expected() and top()[0] == "other"
+
+
+def test_loaded_search_falls_back_when_cache_dropped(spark, coll):
+    """A snapshot unpersisted behind the collection's back is no longer
+    refreshed by Spark; reads go back to resolving the log."""
+    coll.upsert(make_rows(spark, [("k1", [1.0, 0.0, 0.0, 0.0], None)]))
+    coll.load()
+    coll._loaded.unpersist()
+    coll.upsert(make_rows(spark, [("k2", [0.0, 1.0, 0.0, 0.0], None)]))
+    hits = coll.search([0.0, 1.0, 0.0, 0.0], k=1, output_fields=["key"]).collect()
+    assert [h.key for h in hits] == ["k2"]
+    assert {r.key for r in coll.query().collect()} == {"k1", "k2"}
+
+
+@pytest.mark.parametrize("method", ["search", "search_diverse"])
+@pytest.mark.parametrize("qvec", [
+    [1.0, 0.0, 0.0],                      # too short
+    [1.0, 0.0, 0.0, 0.0, 0.0],            # too long
+    [1.0, float("nan"), 0.0, 0.0],        # NaN element
+    [1.0, float("inf"), 0.0, 0.0],        # infinite element
+])
+def test_bad_query_vector_raises(spark, coll, method, qvec):
+    """A wrong-length query used to return k rows with distance NULL,
+    and a NaN element NaN distances; both must fail loudly."""
+    coll.upsert(make_rows(spark, [("k1", [1.0, 0.0, 0.0, 0.0], None)]))
+    with pytest.raises(ValueError, match="query vector"):
+        getattr(coll, method)(qvec, k=1)

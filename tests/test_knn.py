@@ -944,3 +944,101 @@ def test_persisted_ivf_batch_probe_prunes_partitions(vec_df, tmp_path, spark):
     )
     got = sorted([(r.q_id, r.vec_id, r.distance) for r in got_df.collect()])
     assert got == want
+
+
+def _old_topk(df, qvec, k, cols, id_col="vec_id"):
+    """The per-element literal form searches used before vector_literal."""
+    from python_vectordbapp_ceph_spark.functions import vector as V
+
+    qlit = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
+    return (
+        df.withColumn("distance", F.round(V.l2_distance(F.col("embedding"), qlit), 6))
+        .select(*cols, "distance")
+        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
+        .limit(k)
+    )
+
+
+def _plan_classes(jplan) -> list:
+    """(class name, dataType) of every node and expression in a plan."""
+    import json
+
+    out = []
+
+    def walk(o):
+        if isinstance(o, dict):
+            if "class" in o:
+                out.append((o["class"].rsplit(".", 1)[-1], o.get("dataType")))
+            for v in o.values():
+                walk(v)
+        elif isinstance(o, list):
+            for v in o:
+                walk(v)
+
+    walk(json.loads(jplan.toJSON()))
+    return out
+
+
+@pytest.mark.parametrize("kind", ["exact", "ivf"])
+def test_search_plans_one_array_literal(vec_df, kind):
+    """The query vector reaches Catalyst as ONE array<double> literal:
+    no dim-child CreateArray to build or analyze, and one literal in
+    the optimized plan."""
+    if kind == "exact":
+        out = knn_topk(vec_df, QUERY, K)
+    else:
+        out = build_ivf(vec_df, nlist=4).search(QUERY, K, nprobe=2)
+    qe = out._jdf.queryExecution()
+    assert not [c for c, _ in _plan_classes(qe.analyzed()) if c == "CreateArray"]
+    opt = _plan_classes(qe.optimizedPlan())
+    assert not [c for c, _ in opt if c == "CreateArray"]
+    arrays = [t for c, t in opt if c == "Literal" and isinstance(t, dict)]
+    assert arrays == [{"type": "array", "elementType": "double", "containsNull": True}]
+
+
+def test_search_results_bit_identical_to_per_element_literal(vec_df):
+    """Exact, filtered and IVF top-10 keys and distances equal, bit for
+    bit, the per-element literal expression they replaced."""
+    rows = lambda df: [tuple(r) for r in df.collect()]  # noqa: E731
+    filtered = vec_df.filter(F.col("vec_id") % 3 == 0)
+    index = build_ivf(vec_df, nlist=4)
+    for qi in range(3):
+        q = RNG.uniform(-1, 1, size=DIM).tolist()
+        assert rows(knn_topk(vec_df, q, K)) == rows(_old_topk(vec_df, q, K, ["vec_id"]))
+        assert rows(knn_topk(filtered, q, K)) == rows(
+            _old_topk(filtered, q, K, ["vec_id"])
+        )
+        cand = index.assigned.filter(
+            F.col("cluster_id").isin(index.probe_clusters(q, 2))
+        )
+        assert rows(index.search(q, K, nprobe=2)) == rows(
+            _old_topk(cand, q, K, ["vec_id", "cluster_id"])
+        )
+
+
+@pytest.mark.parametrize(
+    "qvec", [[0.1] * (DIM - 1), [0.1] * (DIM + 1), [0.1] * (DIM - 1) + [float("nan")]]
+)
+def test_ivf_search_rejects_bad_query_vector(vec_df, qvec):
+    index = build_ivf(vec_df, nlist=4)
+    with pytest.raises(ValueError, match="query vector"):
+        index.search(qvec, K, nprobe=2)
+
+
+def test_ivf_dim_probe_null_safe_without_ansi(spark):
+    """With ANSI off size(NULL) is -1, not NULL: the dim probe must
+    skip a NULL vector rather than report a -1-dimensional input."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        rows = [(0, None)] + [(i, VECS[i].tolist()) for i in range(1, 20)]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        index = build_ivf(df.coalesce(1), nlist=2)
+        assert len(index.centroids[0]) == DIM
+        all_null = spark.createDataFrame(
+            [(0, None), (1, None)], "vec_id long, embedding array<float>"
+        )
+        with pytest.raises(ValueError, match="every embedding is NULL"):
+            build_ivf(all_null, nlist=2)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -10,11 +10,14 @@ dtypes) and the conf switch itself."""
 
 from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from python_vectordbapp_ceph_spark.operators.twophase import (
     _SMALL_PLAN_CONF,
+    _SMALL_PLAN_ENV,
+    _small_plan_gate_bytes,
     global_cumsum,
 )
 
@@ -220,3 +223,19 @@ def test_small_gate_conf_switch(spark):
     assert "rangepartitioning" in dist_plan.lower()
     assert "rangepartitioning(_pid" not in small_plan.lower()
     assert "spark_partition_id" not in small_plan.lower()
+
+
+def test_small_gate_bad_conf_override_raises(spark):
+    """An unparsable conf override names itself instead of silently
+    running the default 64 MiB gate."""
+    with _gate_bytes(spark, "64MB"):
+        with pytest.raises(ValueError, match=f"{_SMALL_PLAN_CONF}='64MB'"):
+            _small_plan_gate_bytes(spark)
+
+
+def test_small_gate_bad_env_override_raises(spark, monkeypatch):
+    monkeypatch.setenv(_SMALL_PLAN_ENV, "lots")
+    with pytest.raises(ValueError, match=f"{_SMALL_PLAN_ENV}='lots'"):
+        _small_plan_gate_bytes(spark)
+    monkeypatch.setenv(_SMALL_PLAN_ENV, "123")
+    assert _small_plan_gate_bytes(spark) == 123
