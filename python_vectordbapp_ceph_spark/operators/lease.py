@@ -28,62 +28,46 @@ maintenance COMPOSITIONS above (vacuum/swap vs in-flight staging) and
 an optional serialization convenience for order-dependent appenders
 (a ledger's segment tail) that prefer waiting over retrying.
 
-Mechanics — built from the SAME primitive the commit protocol trusts:
-the pluggable atomic JSON publish (operators/publish.py, selected by
-a per-store capability probe): stage+rename-without-overwrite where
-rename is exclusive (HDFS/local — probed empirically on this stack:
-rename onto an existing file returns False and leaves both files
-intact), conditional create (If-None-Match) on S3-like stores whose
-rename is copy+delete. Destinations here are always files, never
-directories (renaming onto an existing DIRECTORY moves the source
-into it).
+Mechanics — one FENCING-TOKEN protocol on every store, built from the
+SAME primitive the commit protocol trusts: the per-store atomic JSON
+publish (operators/publish.py) — stage+rename-without-overwrite where
+rename is exclusive (HDFS/local), a conditional create (If-None-Match)
+on S3-like stores whose rename is copy+delete. Both answer one
+question atomically: "create this record iff nothing exists there
+yet". The backend is resolved once per acquire, before any lease
+transition, so a store with no safe publish fails fast with
+:class:`~.publish.UnsafePublishStoreError` instead of timing out as
+"locked".
 
-TWO protocols, selected by the same per-store capability probe that
-selects the publish backend (operators/publish.py):
+The lease is the HIGHEST-numbered record in a dedicated
+``<lease_path>.epochs/`` directory, and every transition is one
+publish of the NEXT epoch record — first-writer-wins, no rename of a
+live record and no delete of anyone else's:
 
-  - rename-exclusive stores (HDFS/local) → :class:`WriterLease`, the
-    tombstone protocol below: one lease FILE, atomically renamed
-    aside to break/verify/release.
-  - conditional-put stores (S3-like copy+delete rename) →
-    :class:`EpochWriterLease`, FENCING-TOKEN shaped: the lease is the
-    HIGHEST-numbered record in a dedicated ``*.epochs/`` directory and
-    every transition (acquire, heartbeat, break, release) is one
-    conditional create of the NEXT epoch — first-writer-wins without
-    any rename. A successful create is then re-verified against a
-    fresh listing (still the maximum?) so a fenced-out writer whose
-    old next-epoch slot was garbage-collected can never resurrect
-    below the live holder: the holder's current record always exists
-    and always outranks it. This closes the r11 residual where break/
-    take-aside still required atomic rename — on the reference's own
-    backend (Ceph RGW S3) every lease transition is now a conditional
-    PUT, the one primitive that store makes atomic.
-
-  - ``acquire_writer_lease`` stages ``.tmp-*`` and renames it onto the
-    lease file; rename success IS acquisition. A fresh existing lease
-    (heartbeat younger than its TTL) makes the acquire poll briefly,
-    then raise :class:`LedgerLockedError` naming the holder.
-  - An EXPIRED lease (holder died without release) is broken by
-    renaming it to a breaker-unique tombstone — atomic, so exactly ONE
-    of several racing breakers wins; the winner re-verifies the
-    tombstoned record really is expired (renames it back if a
-    heartbeat slipped in) before re-racing the acquire. A bare delete
-    here would let breaker B delete the FRESH lease breaker A just
-    published — the dual-writer state this module exists to prevent.
-  - ``heartbeat()`` re-verifies ownership and republishes with a fresh
-    timestamp (serialized by an in-process lock — the per-batch
-    heartbeat and the auto-heartbeat thread must not interleave their
-    delete+publish). If the file was stolen/broken in the meantime the
-    heartbeat raises and the lease is marked lost — the displaced
-    writer FAILS its batch instead of publishing into a layout someone
-    else now maintains.
+  - ``acquire_writer_lease`` publishes ``e+1`` over an absent,
+    released or expired max record ``e`` (or any record, with
+    ``steal=True``); a fresh foreign record makes the acquire poll
+    briefly, then raise :class:`LedgerLockedError` naming the holder.
+    Exactly one of any number of racing acquirers/breakers wins.
+  - every successful publish is re-verified against a fresh listing
+    (still the maximum?): a fenced-out writer whose next-epoch slot
+    was garbage-collected can never resurrect below the live holder,
+    whose current record always exists and always outranks it.
+  - ``heartbeat()`` publishes ``epoch+1`` with a fresh timestamp
+    (serialized by an in-process lock with the auto-heartbeat
+    thread). A breaker who already took ``epoch+1`` makes it fail:
+    the lease is marked lost and the displaced writer FAILS its batch
+    instead of publishing into a layout someone else now maintains.
   - ``start_auto_heartbeat()`` keeps the lease fresh from a daemon
     thread — for long-running holders whose work doesn't tick (a
     continuous stream with an idle source, a 100 TB KMeans refit):
     without it, an idle gap longer than the TTL presents as "expired"
     and routine maintenance displaces a healthy writer.
-  - ``release()`` uses the same tombstone pattern: atomically rename
-    the lease aside, verify it is ours, delete; restore it if not (a
-    read-check-then-delete would delete a thief's fresh lease).
+  - ``release()`` publishes ``epoch+1`` carrying ``released: true``,
+    so the next acquirer skips the TTL wait.
+  - a publish that reports "exists" is reconciled before it counts as
+    lost: if the record at that epoch is OURS (a lost acknowledgment
+    on either backend), the transition already happened.
 
 Reference anchor: the reference delegates concurrent-writer safety to
 its backends (milvus upsert is backend-atomic,
@@ -100,7 +84,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from .merge import _COMMITS, _fs, _read_json, _stage_rename_json
+from .merge import _COMMITS
+from .publish import HadoopFsOps, backend_for
 
 LEASE_FILE = "_writer.lease"
 # Generous enough that no single micro-batch outlives it (and the
@@ -123,30 +108,168 @@ def _now_ms() -> int:
 
 
 def sibling_lease_path(path: str) -> str:
-    """Lease file for a layout whose directory itself gets atomically
-    SWAPPED (IVF rebuild, collection compact): a lease stored inside
-    the directory would swap out with the data it guards, so it lives
-    as a sibling ``<path>._lease``."""
+    """Lease location for a layout whose directory itself gets
+    atomically SWAPPED (IVF rebuild, collection compact): a lease
+    stored inside the directory would swap out with the data it
+    guards, so it lives as a sibling ``<path>._lease`` (its records
+    under ``<path>._lease.epochs/``)."""
     return path.rstrip("/") + "._lease"
 
 
-class _AutoHeartbeat:
-    """Shared auto-heartbeat lifecycle for both lease protocols
-    (tombstone :class:`WriterLease`, fencing-token
-    :class:`EpochWriterLease` — one copy so a contract change cannot
-    silently drift between them).
+class EpochWriterLease:
+    """A held fencing-token writer lease (see module docstring). Obtain
+    one via :func:`acquire_writer_lease`.
 
-    Keeps the lease fresh from a daemon thread (every ttl/3 by
-    default) — for holders whose work doesn't tick: a continuous
-    stream whose source goes idle past the TTL would otherwise present
-    an expired lease and be displaced by routine maintenance, then
-    fail its next real batch. Transient FS errors are retried next
-    tick; a genuine loss (LedgerLockedError) stops the thread and the
-    holder's next explicit heartbeat raises. Idempotent: a second call
-    on the same lease is a no-op, so a leased section whose body also
-    heartbeats (compact inside leased()) can't stack threads."""
+    State = the highest-numbered record in ``<lease_path>.epochs/``
+    (its OWN directory so scans never pay the commit listing):
+
+      - acquire over an absent/released/expired/stolen max epoch e =
+        publish ``e+1`` — exactly one of any number of racing
+        acquirers/breakers wins, no delete of the loser's file is ever
+        needed (the dead record is simply outranked);
+      - heartbeat = publish ``self.epoch+1`` with a fresh timestamp; a
+        breaker who already took ``epoch+1`` makes the publish fail →
+        the displaced writer marks itself lost and raises, never
+        publishing into a layout someone else maintains;
+      - every successful publish re-verifies against a fresh listing
+        that it is still the MAXIMUM epoch: the one resurrection
+        hazard (our next-epoch slot was GC'd by a holder now two
+        epochs ahead, so our publish "succeeds" below the true max) is
+        caught because the true holder's current record is published
+        BEFORE its predecessor is GC'd, so a listing always shows it;
+      - release = publish ``epoch+1`` carrying ``released: true`` — the
+        next acquirer skips the TTL wait;
+      - GC: after each verified transition the writer deletes records
+        below its own epoch, so the directory holds O(1) files (the
+        current record, transiently its predecessor) instead of one
+        per heartbeat forever.
+    """
+
+    def __init__(self, path: str, ttl_ms: int, lease_path: str, ops, backend):
+        self.path = path
+        self.lease_path = lease_path
+        self.ttl_ms = int(ttl_ms)
+        self.owner = uuid.uuid4().hex
+        self.acquired_ms: int | None = None
+        self.lost = False
+        self.epoch = 0
+        self._hb_lock = threading.Lock()
+        self._stop = threading.Event()
+        self._auto_hb = False
+        self._dir = f"{lease_path}.epochs"
+        self._ops = ops
+        self._backend = backend
+
+    # -- epoch plumbing -----------------------------------------------------
+    def _epoch_file(self, e: int) -> str:
+        return f"{self._dir}/e{e:012d}.json"
+
+    def _list_epochs(self) -> list[int]:
+        out = []
+        for name in self._ops.list_names(self._dir):
+            if name.startswith("e") and name.endswith(".json"):
+                try:
+                    out.append(int(name[1:-5]))
+                except ValueError:
+                    continue
+        return sorted(out)
+
+    def _read_epoch(self, e: int) -> dict:
+        return json.loads(bytes(self._ops.read_bytes(self._epoch_file(e))))
+
+    def _scan(self) -> tuple[int, dict | None]:
+        """(max epoch, its record) — (0, None) when no epoch exists.
+        A record unreadable at the max (listing raced a GC below a
+        brand-new max we then also miss) falls back to the next lower
+        one; the callers' publish-then-verify makes any staleness here
+        harmless (they just lose the publish race and rescan)."""
+        for e in reversed(self._list_epochs()):
+            try:
+                return e, self._read_epoch(e)
+            except Exception:
+                continue
+        return 0, None
+
+    def _advance(self, nxt: int, extra: dict | None = None) -> bool:
+        """One lease transition: publish epoch ``nxt`` through the
+        store's backend, then verify it is still the maximum. True =
+        we own epoch ``nxt``; False = fenced (publish lost to another
+        writer, or a higher epoch appeared — our record is left as
+        outranked garbage for the winner's GC). Transient store errors
+        PROPAGATE — they are retryable, not a fence: treating a
+        503/timeout as "lost" would permanently kill a healthy lease
+        (and if the publish actually landed with the response lost,
+        the orphan fresh record would block acquirers for a full TTL).
+        A publish that reports "exists" therefore RECONCILES first: if
+        the existing record at ``nxt`` is OURS — a previous attempt
+        whose acknowledgment was lost — the transition already
+        happened and is claimed, not failed."""
+        payload = {
+            "owner": self.owner,
+            "epoch": nxt,
+            "acquired_ms": self.acquired_ms or _now_ms(),
+            "heartbeat_ms": _now_ms(),
+            "ttl_ms": self.ttl_ms,
+        }
+        if extra:
+            payload.update(extra)
+        if not self._backend.publish_json(self._epoch_file(nxt), payload):
+            try:
+                rec = self._read_epoch(nxt)
+            except Exception:
+                return False
+            if rec.get("owner") != self.owner:
+                return False
+            # ours from a lost acknowledgment — fall through to verify
+        epochs = self._list_epochs()
+        return bool(epochs) and max(epochs) == nxt
+
+    def _gc(self, below: int) -> None:
+        for e in self._list_epochs():
+            if e < below:
+                try:
+                    self._ops.delete(self._epoch_file(e))
+                except Exception:
+                    pass
+
+    # -- lifecycle ----------------------------------------------------------
+    def heartbeat(self) -> None:
+        """Refresh by advancing one epoch; raises LedgerLockedError if
+        fenced out (a breaker/acquirer holds a higher epoch) — the
+        caller must abort its write: someone else's maintenance may
+        now reclaim its staging. Transient store errors propagate
+        as-is WITHOUT marking the lease lost: the auto-heartbeat
+        thread retries them next tick and an explicit caller may retry
+        its batch — only a genuine fence is terminal."""
+        with self._hb_lock:
+            if self.lost:
+                raise LedgerLockedError(
+                    f"writer lease for {self.path} already lost"
+                )
+            nxt = self.epoch + 1
+            if self._advance(nxt):
+                self.epoch = nxt
+                self._gc(nxt)
+                return
+            self.lost = True
+            raise LedgerLockedError(
+                f"writer lease for {self.path} lost (epoch {nxt} taken or "
+                "outranked by another writer) — aborting: continuing could "
+                "publish into a layout another writer is "
+                "compacting/vacuuming/swapping"
+            )
 
     def start_auto_heartbeat(self, interval_s: float | None = None) -> None:
+        """Keep the lease fresh from a daemon thread (every ttl/3 by
+        default) — for holders whose work doesn't tick: a continuous
+        stream whose source goes idle past the TTL would otherwise
+        present an expired lease and be displaced by routine
+        maintenance, then fail its next real batch. Transient FS errors
+        are retried next tick; a genuine loss (LedgerLockedError) stops
+        the thread and the holder's next explicit heartbeat raises.
+        Idempotent: a second call on the same lease is a no-op, so a
+        leased section whose body also heartbeats (compact inside
+        leased()) can't stack threads."""
         if self._auto_hb:
             return
         self._auto_hb = True
@@ -168,341 +291,6 @@ class _AutoHeartbeat:
             name=f"lease-heartbeat-{self.owner[:8]}",
             daemon=True,
         ).start()
-
-
-class WriterLease(_AutoHeartbeat):
-    """A held lease. Use :func:`acquire_writer_lease` to obtain one."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        ttl_ms: int,
-        lease_path: str | None = None,
-    ):
-        self._spark = spark
-        self.path = path
-        self.ttl_ms = int(ttl_ms)
-        self.owner = uuid.uuid4().hex
-        self.acquired_ms: int | None = None
-        self.lost = False
-        self._hb_lock = threading.Lock()
-        self._stop = threading.Event()
-        self._auto_hb = False
-        # default location: inside the ledger's _commits dir; swapped
-        # layouts pass sibling_lease_path(path) instead.
-        self._lease_path = lease_path or f"{path}/{_COMMITS}/{LEASE_FILE}"
-
-    # -- file plumbing ----------------------------------------------------
-    @property
-    def lease_path(self) -> str:
-        return self._lease_path
-
-    def _read(self) -> dict | None:
-        """The current lease record, or None if absent/unreadable (a
-        torn read can only happen inside a heartbeat's republish
-        window — treated as absent, the acquire race decides)."""
-        try:
-            return _read_json(self._spark, self._lease_path)
-        except Exception:
-            return None
-
-    def _try_publish(self) -> bool:
-        """Stage + rename-without-overwrite. True = we own the file."""
-        return _stage_rename_json(
-            self._spark,
-            self._lease_path,
-            {
-                "owner": self.owner,
-                "acquired_ms": self.acquired_ms or _now_ms(),
-                "heartbeat_ms": _now_ms(),
-                "ttl_ms": self.ttl_ms,
-            },
-        )
-
-    def _take_aside(self) -> tuple[str, dict | None] | None:
-        """Atomically rename the lease file to a caller-unique
-        tombstone and read it. Returns (tombstone_path, record) — the
-        caller now exclusively holds whatever was there — or None if
-        there was nothing to take (no lease file, or another taker won
-        the rename)."""
-        fs, hpath = _fs(self._spark, self.path)
-        tomb = f"{self._lease_path}.taken-{uuid.uuid4().hex[:8]}"
-        try:
-            if not fs.rename(hpath(self._lease_path), hpath(tomb)):
-                return None
-        except Exception:
-            return None
-        try:
-            rec = _read_json(self._spark, tomb)
-        except Exception:
-            rec = None
-        return tomb, rec
-
-    def _restore_or_drop(self, tomb: str) -> None:
-        """Put a taken-aside lease back. If a NEW lease appeared in the
-        meantime (an acquirer saw the empty slot — legitimate), the
-        restore rename fails and the tombstone is dropped: the record
-        it held was superseded either way, and its owner's next
-        heartbeat raises (fail-fast, never dual-write)."""
-        fs, hpath = _fs(self._spark, self.path)
-        if not fs.rename(hpath(tomb), hpath(self._lease_path)):
-            fs.delete(hpath(tomb), False)
-
-    # -- lifecycle ---------------------------------------------------------
-    def heartbeat(self) -> None:
-        """Refresh the lease timestamp; raises LedgerLockedError if the
-        lease was stolen or broken since (the caller must abort its
-        write — someone else's maintenance may now reclaim its
-        staging). Thread-safe: the per-batch call and the
-        auto-heartbeat thread serialize on an in-process lock, so two
-        of OUR OWN heartbeats can't race each other's republish.
-
-        Tombstone-based like release(): the lease file is atomically
-        renamed aside BEFORE ownership is verified. A read-check-then-
-        delete would open a window where an expired-lease breaker plus
-        a new acquirer publish a fresh lease between our read and our
-        delete — which the delete then destroys, yielding two live
-        writers. With the take-aside, whatever we verify is exclusively
-        ours to delete; anyone else's fresh lease makes the take return
-        their record, which we restore untouched and fail fast."""
-        with self._hb_lock:
-            if self.lost:
-                raise LedgerLockedError(
-                    f"writer lease for {self.path} already lost"
-                )
-            taken = self._take_aside()
-            if taken is None:
-                # no lease file (broken and not yet re-published) or a
-                # concurrent taker won the rename — either way the
-                # lease is no longer ours to refresh.
-                self.lost = True
-                raise LedgerLockedError(
-                    f"writer lease for {self.path} lost (lease file "
-                    "absent or taken by a breaker) — aborting: continuing "
-                    "could publish into a layout another writer is "
-                    "compacting/vacuuming/swapping"
-                )
-            tomb, rec = taken
-            fs, hpath = _fs(self._spark, self.path)
-            if rec is None or rec.get("owner") != self.owner:
-                # someone else's lease — put it back exactly as found
-                self._restore_or_drop(tomb)
-                self.lost = True
-                raise LedgerLockedError(
-                    f"writer lease for {self.path} lost (now held by "
-                    f"{rec.get('owner', '<none>') if rec else '<none>'}) — "
-                    "aborting: continuing could publish into a layout "
-                    "another writer is compacting/vacuuming/swapping"
-                )
-            # exclusively ours: republish FIRST, then drop the
-            # tombstone — the lease file is absent between the
-            # take-aside and the republish, and a polling acquirer
-            # landing in that window legitimately seizes the slot;
-            # republish-before-delete keeps the window one FS op
-            # (stage+rename) instead of two. The residual window is
-            # inherent to a one-file protocol with no atomic replace;
-            # acquirers poll at 200 ms so a healthy holder losing this
-            # race is rare, and it fails FAST, never dual-writes.
-            ok = self._try_publish()
-            fs.delete(hpath(tomb), False)
-            if not ok:
-                self.lost = True
-                raise LedgerLockedError(
-                    f"writer lease for {self.path} lost during heartbeat "
-                    "(another writer acquired in the republish window)"
-                )
-
-
-    def release(self) -> None:
-        """Delete the lease iff still ours (idempotent, never raises —
-        called from finally paths). Tombstone-based: rename the file
-        aside atomically, verify ownership, delete — never a
-        read-check-then-delete, which could delete the fresh lease of
-        a writer who took over in between."""
-        self._stop.set()
-        try:
-            with self._hb_lock:
-                taken = self._take_aside()
-                if taken is None:
-                    return
-                tomb, rec = taken
-                fs, hpath = _fs(self._spark, self.path)
-                if rec is not None and rec.get("owner") == self.owner:
-                    fs.delete(hpath(tomb), False)
-                else:
-                    self._restore_or_drop(tomb)
-        except Exception:
-            pass
-
-
-class EpochWriterLease(_AutoHeartbeat):
-    """Fencing-token writer lease for stores without atomic rename
-    (conditional-put stores: S3-like, probed — see module docstring).
-    Same duck-typed surface as :class:`WriterLease` (``heartbeat``,
-    ``start_auto_heartbeat``, ``release``, ``lost``, ``owner``,
-    ``lease_path``); obtain via :func:`acquire_writer_lease`, which
-    selects the protocol per store.
-
-    State = the highest-numbered record in ``<lease_path>.epochs/``
-    (its OWN directory so scans never pay the commit listing):
-
-      - acquire over an absent/released/expired/stolen max epoch e =
-        conditional create of ``e+1`` — exactly one of any number of
-        racing acquirers/breakers wins, no delete of the loser's file
-        is ever needed (the dead record is simply outranked);
-      - heartbeat = conditional create of ``self.epoch+1`` with a
-        fresh timestamp; a breaker who already took ``epoch+1`` makes
-        the create fail → the displaced writer marks itself lost and
-        raises, never publishing into a layout someone else maintains;
-      - every successful create re-verifies against a fresh listing
-        that it is still the MAXIMUM epoch: the one resurrection
-        hazard (our next-epoch slot was GC'd by a holder now two
-        epochs ahead, so our create "succeeds" below the true max) is
-        caught because the true holder's current record is created
-        BEFORE its predecessor is GC'd, so a listing always shows it;
-      - release = conditional create of ``epoch+1`` carrying
-        ``released: true`` — the next acquirer skips the TTL wait;
-      - GC: after each verified transition the writer deletes records
-        below its own epoch, so the directory holds O(1) files (the
-        current record, transiently its predecessor) instead of one
-        per heartbeat forever.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        ttl_ms: int,
-        lease_path: str | None = None,
-        ops=None,
-    ):
-        self.path = path
-        self.ttl_ms = int(ttl_ms)
-        self.owner = uuid.uuid4().hex
-        self.acquired_ms: int | None = None
-        self.lost = False
-        self.epoch = 0
-        self._hb_lock = threading.Lock()
-        self._stop = threading.Event()
-        self._auto_hb = False
-        self._lease_path = lease_path or f"{path}/{_COMMITS}/{LEASE_FILE}"
-        self._dir = f"{self._lease_path}.epochs"
-        if ops is None:
-            from .publish import HadoopFsOps
-
-            ops = HadoopFsOps(spark, self._dir)
-        self._ops = ops
-
-    @property
-    def lease_path(self) -> str:
-        return self._lease_path
-
-    # -- epoch plumbing -----------------------------------------------------
-    def _epoch_file(self, e: int) -> str:
-        return f"{self._dir}/e{e:012d}.json"
-
-    def _list_epochs(self) -> list[int]:
-        out = []
-        for name in self._ops.list_names(self._dir):
-            if name.startswith("e") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    def _scan(self) -> tuple[int, dict | None]:
-        """(max epoch, its record) — (0, None) when no epoch exists.
-        A record unreadable at the max (listing raced a GC below a
-        brand-new max we then also miss) falls back to the next lower
-        one; the callers' create-then-verify makes any staleness here
-        harmless (they just lose the create race and rescan)."""
-        for e in reversed(self._list_epochs()):
-            try:
-                rec = json.loads(bytes(self._ops.read_bytes(self._epoch_file(e))))
-                return e, rec
-            except Exception:
-                continue
-        return 0, None
-
-    def _advance(self, nxt: int, extra: dict | None = None) -> bool:
-        """One lease transition: conditional-create epoch ``nxt``,
-        then verify it is still the maximum. True = we own epoch
-        ``nxt``; False = fenced (create lost to another writer, or a
-        higher epoch appeared — our record is left as outranked
-        garbage for the winner's GC). Transient store errors PROPAGATE
-        — they are retryable, not a fence: treating a 503/timeout as
-        "lost" would permanently kill a healthy lease (and if the
-        create actually landed server-side with the response lost, the
-        orphan fresh record would block acquirers for a full TTL).
-        The FileExistsError path therefore RECONCILES first: if the
-        existing record at ``nxt`` is OURS — a previous attempt whose
-        acknowledgment was lost — the transition already happened and
-        is claimed, not failed."""
-        payload = {
-            "owner": self.owner,
-            "epoch": nxt,
-            "acquired_ms": self.acquired_ms or _now_ms(),
-            "heartbeat_ms": _now_ms(),
-            "ttl_ms": self.ttl_ms,
-        }
-        if extra:
-            payload.update(extra)
-        try:
-            self._ops.create_bytes(
-                self._epoch_file(nxt),
-                json.dumps(payload).encode("utf-8"),
-                overwrite=False,
-            )
-        except FileExistsError:
-            try:
-                rec = json.loads(
-                    bytes(self._ops.read_bytes(self._epoch_file(nxt)))
-                )
-            except Exception:
-                return False
-            if rec.get("owner") != self.owner:
-                return False
-            # ours from a lost acknowledgment — fall through to verify
-        epochs = self._list_epochs()
-        return bool(epochs) and max(epochs) == nxt
-
-    def _gc(self, below: int) -> None:
-        for e in self._list_epochs():
-            if e < below:
-                try:
-                    self._ops.delete(self._epoch_file(e))
-                except Exception:
-                    pass
-
-    # -- lifecycle ----------------------------------------------------------
-    def heartbeat(self) -> None:
-        """Refresh by advancing one epoch; raises LedgerLockedError if
-        fenced out (a breaker/acquirer holds a higher epoch) — the
-        caller must abort its write, exactly like the rename twin.
-        Transient store errors propagate as-is WITHOUT marking the
-        lease lost: the auto-heartbeat thread retries them next tick
-        and an explicit caller may retry its batch — only a genuine
-        fence is terminal."""
-        with self._hb_lock:
-            if self.lost:
-                raise LedgerLockedError(
-                    f"writer lease for {self.path} already lost"
-                )
-            nxt = self.epoch + 1
-            if self._advance(nxt):
-                self.epoch = nxt
-                self._gc(nxt)
-                return
-            self.lost = True
-            raise LedgerLockedError(
-                f"writer lease for {self.path} lost (epoch {nxt} taken or "
-                "outranked by another writer) — aborting: continuing could "
-                "publish into a layout another writer is "
-                "compacting/vacuuming/swapping"
-            )
-
 
     def release(self) -> None:
         """Publish a ``released`` record one epoch up (idempotent,
@@ -549,32 +337,44 @@ def release_on_termination(query, lease) -> None:
     ).start()
 
 
-def _protocol_for(spark: SparkSession, lease_path: str, ops=None) -> str:
-    """"rename" (tombstone WriterLease) or "conditional-put"
-    (EpochWriterLease) — whichever publish backend the per-store
-    capability probe selected for the lease file's store (same probe,
-    same cache, same forced-override lever as the commit publish)."""
-    from .publish import HadoopFsOps, backend_for
-
-    if ops is None:
-        ops = HadoopFsOps(spark, lease_path)
-    parent = lease_path.rsplit("/", 1)[0]
-    return backend_for(ops, parent, ops.scheme_authority(lease_path)).name
-
-
-def _acquire_epoch(
-    lease: EpochWriterLease,
-    timeout_ms: int,
-    steal: bool,
-    ttl_ms: int,
+def acquire_writer_lease(
+    spark: SparkSession,
+    path: str,
+    ttl_ms: int = LEASE_TTL_MS,
+    timeout_ms: int = ACQUIRE_TIMEOUT_MS,
+    steal: bool = False,
+    lease_path: str | None = None,
+    ops=None,
 ) -> EpochWriterLease:
-    """Acquire loop for the fencing-token protocol: free slots (no
-    record / released / expired / steal) are taken by conditional-
-    creating the next epoch; a live holder makes the loop poll then
-    raise, exactly like the rename twin. EVERY path falls through to
-    the deadline check and the poll sleep — a free slot whose create
+    """Acquire the single-writer lease for the layout at ``path``.
+
+    Polls up to ``timeout_ms`` (a just-finished writer's async release
+    lands within milliseconds; a live writer keeps its heartbeat fresh
+    for the whole window), then raises :class:`LedgerLockedError`.
+    ``steal=True`` breaks a live lease unconditionally — only for an
+    operator who KNOWS the holder is dead (e.g. restarting the one
+    stream that owns this checkpoint after a hard kill).
+    ``lease_path`` overrides the lease location (default
+    ``<path>/_commits/_writer.lease``, records under ``.epochs/`` next
+    to it); swapped layouts use :func:`sibling_lease_path`. ``ops``
+    injects the filesystem (contract tests drive fake stores through
+    it); the publish backend is the one the per-store probe selects.
+
+    Free slots (no record / released / expired / steal / our own
+    lost-ack record) are taken by publishing the next epoch; a live
+    holder makes the loop poll then raise. EVERY path falls through to
+    the deadline check and the poll sleep — a free slot whose publish
     keeps losing (or a store whose records list but won't read) must
     exhaust timeout_ms and raise, never hot-spin LIST+PUT forever."""
+    lease_path = lease_path or f"{path}/{_COMMITS}/{LEASE_FILE}"
+    if ops is None:
+        ops = HadoopFsOps(spark, lease_path)
+    # resolved ONCE, outside the retry below: a store with no safe
+    # publish must raise UnsafePublishStoreError, not time out as locked
+    backend = backend_for(
+        ops, lease_path.rsplit("/", 1)[0], ops.scheme_authority(lease_path)
+    )
+    lease = EpochWriterLease(path, ttl_ms, lease_path, ops, backend)
     deadline = _now_ms() + max(0, int(timeout_ms))
     while True:
         cur_epoch, rec = lease._scan()
@@ -584,13 +384,13 @@ def _acquire_epoch(
             or rec.get("released")
             or steal
             # OUR OWN record at the max: a previous _advance in this
-            # loop landed server-side but its acknowledgment was lost
-            # as a generic transient error (not FileExistsError, which
-            # _advance reconciles itself). Without this, the scan reads
-            # our orphan as a live FOREIGN holder and acquisition
+            # loop landed but its acknowledgment was lost as a generic
+            # transient error (not an "exists" answer, which _advance
+            # reconciles itself). Without this, the scan reads our
+            # orphan as a live FOREIGN holder and acquisition
             # self-blocks until timeout while the orphan blocks every
             # other acquirer for a full TTL. owner is a per-handle
-            # uuid4, so a match can only be this handle's own create —
+            # uuid4, so a match can only be this handle's own publish —
             # claim the slot by advancing past it.
             or rec.get("owner") == lease.owner
             or now > int(rec.get("heartbeat_ms", 0)) + int(
@@ -613,95 +413,9 @@ def _acquire_epoch(
             holder = rec.get("owner", "<unknown>") if rec else "<racer>"
             age = now - int(rec.get("heartbeat_ms", now)) if rec else 0
             raise LedgerLockedError(
-                f"ledger at {lease.path} already has a live writer (lease "
+                f"ledger at {path} already has a live writer (lease "
                 f"owner {holder}, heartbeat {age} ms ago, epoch "
                 f"{cur_epoch}). One writer per path: stop the other writer, "
                 "or pass steal=True if you KNOW it is dead."
-            )
-        time.sleep(_POLL_MS / 1000.0)
-
-
-def acquire_writer_lease(
-    spark: SparkSession,
-    path: str,
-    ttl_ms: int = LEASE_TTL_MS,
-    timeout_ms: int = ACQUIRE_TIMEOUT_MS,
-    steal: bool = False,
-    lease_path: str | None = None,
-    ops=None,
-) -> WriterLease:
-    """Acquire the single-writer lease for the layout at ``path``.
-
-    Polls up to ``timeout_ms`` (a just-finished writer's async release
-    lands within milliseconds; a live writer keeps its heartbeat fresh
-    for the whole window), then raises :class:`LedgerLockedError`.
-    ``steal=True`` breaks a live lease unconditionally — only for an
-    operator who KNOWS the holder is dead (e.g. restarting the one
-    stream that owns this checkpoint after a hard kill).
-    ``lease_path`` overrides the lease file location (default
-    ``<path>/_commits/_writer.lease``); swapped layouts use
-    :func:`sibling_lease_path`.
-
-    The lease PROTOCOL is store-dependent (module docstring): rename-
-    exclusive stores get the tombstone :class:`WriterLease`,
-    conditional-put stores the fencing-token :class:`EpochWriterLease`
-    — same surface, same fail-fast semantics. ``ops`` injects the
-    filesystem (contract tests drive the fake S3 store through it)."""
-    resolved = lease_path or f"{path}/{_COMMITS}/{LEASE_FILE}"
-    if _protocol_for(spark, resolved, ops=ops) == "conditional-put":
-        epoch_lease = EpochWriterLease(
-            spark, path, ttl_ms, lease_path=lease_path, ops=ops
-        )
-        return _acquire_epoch(epoch_lease, timeout_ms, steal, ttl_ms)
-    if ops is not None:
-        # the tombstone protocol runs through the Spark-resolved Hadoop
-        # FS (_stage_rename_json/_take_aside), NOT the injected ops —
-        # silently probing one store and operating on another would be
-        # exactly the divergence this module exists to prevent.
-        raise NotImplementedError(
-            "ops= injection is only supported for conditional-put "
-            "stores (the epoch protocol); this store probed "
-            "rename-exclusive and the tombstone protocol operates "
-            "through the Spark-resolved filesystem."
-        )
-    lease = WriterLease(spark, path, ttl_ms, lease_path=lease_path)
-    deadline = _now_ms() + max(0, int(timeout_ms))
-    while True:
-        cur = lease._read()
-        now = _now_ms()
-        if cur is None:
-            lease.acquired_ms = now
-            if lease._try_publish():
-                return lease
-            # lost the rename race — someone else just acquired
-        elif steal or now > int(cur.get("heartbeat_ms", 0)) + int(
-            cur.get("ttl_ms", ttl_ms)
-        ):
-            # expired (or explicit steal): break it ATOMICALLY — rename
-            # to a breaker-unique tombstone so exactly one of several
-            # racing breakers wins; a bare delete here could destroy
-            # the FRESH lease another breaker already re-published.
-            taken = lease._take_aside()
-            if taken is not None:
-                tomb, rec = taken
-                fs, hpath = _fs(spark, path)
-                stale = rec is None or _now_ms() > int(
-                    rec.get("heartbeat_ms", 0)
-                ) + int(rec.get("ttl_ms", ttl_ms))
-                if steal or stale:
-                    fs.delete(hpath(tomb), False)
-                else:
-                    # a heartbeat slipped in between our read and the
-                    # take: the holder is alive — put it back
-                    lease._restore_or_drop(tomb)
-            continue
-        if _now_ms() > deadline:
-            holder = cur.get("owner", "<unknown>") if cur else "<racer>"
-            raise LedgerLockedError(
-                f"ledger at {path} already has a live writer (lease owner "
-                f"{holder}, heartbeat "
-                f"{now - int(cur.get('heartbeat_ms', now)) if cur else 0} ms "
-                "ago). One writer per path: stop the other writer, or pass "
-                "steal=True if you KNOW it is dead."
             )
         time.sleep(_POLL_MS / 1000.0)

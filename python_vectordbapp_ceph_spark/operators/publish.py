@@ -50,14 +50,13 @@ overwrites an existing destination, "succeeds" for both racers) — the
 proof that the probe catches exactly the store the rename backend
 would corrupt.
 
-The lease protocol is store-dependent too (operators/lease.py,
-selected by this same probe): rename-exclusive stores keep the
-tombstone WriterLease; conditional-put stores get the fencing-token
-EpochWriterLease, whose every transition — acquire, heartbeat,
-expired-lease break, release — is one conditional create of the
-next-numbered epoch record. This closed the r11 residual where the
-lease BREAK/take-aside still required atomic rename: on S3-like
-stores no rename remains anywhere in the commit/lease protocol.
+The writer lease (operators/lease.py) runs ONE fencing-token protocol
+on every store through this same selection: each transition —
+acquire, heartbeat, expired-lease break, release — is one
+``publish_json`` of the next-numbered epoch record. On rename-
+exclusive stores that is stage+rename-without-overwrite; on S3-like
+stores it is the conditional create, so no rename remains anywhere in
+the commit/lease protocol there.
 """
 
 from __future__ import annotations

@@ -77,13 +77,28 @@ def _small_plan_gate_bytes(spark) -> int:
         ) from None
 
 
-# plan nodes that can MULTIPLY rows relative to their inputs — with any
-# of these present the leaf-sum fallback below is not an upper bound
-_CARDINALITY_NODES = (
-    "Generate", "MapInPandas", "MapInArrow", "PythonMapInArrow",
+# logical plan node classes that can MULTIPLY rows relative to their
+# inputs — with any of these present the leaf-sum fallback below is not
+# an upper bound (Expand: rollup/cube/grouping sets emit one row per
+# grouping set)
+_CARDINALITY_NODES = frozenset({
+    "Generate", "Expand", "MapInPandas", "MapInArrow", "PythonMapInArrow",
     "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas", "CoGroup",
     "MapGroups", "FlatMapGroupsWithState",
-)
+})
+
+
+def _node_classes(plan) -> set[str]:
+    """Simple class names of every node in a logical plan tree —
+    matched by class, never by substrings of ``treeString()``, where a
+    column named ``Generated_w`` reads as a Generate node."""
+    names, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        names.add(node.getClass().getSimpleName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
 
 
 def _fits_single_task(df: DataFrame) -> bool:
@@ -95,11 +110,11 @@ def _fits_single_task(df: DataFrame) -> bool:
     overshoots a broadcast-dim join over a small fact by orders of
     magnitude. When the plan estimate misses the gate, fall back to the
     SUM of the leaf-relation estimates, accepted only when no plan node
-    can multiply rows (no Generate/explode, no Python map/cogroup —
-    checkpointed/unknown leaves report Long.Max and fail the sum, the
-    conservative direction). A many-to-many join fanning small inputs
-    far past their size is the residual miss; it costs one oversized
-    window task, never a wrong result."""
+    can multiply rows (no Generate/explode, no Expand/rollup, no Python
+    map/cogroup — checkpointed/unknown leaves report Long.Max and fail
+    the sum, the conservative direction). A many-to-many join fanning
+    small inputs far past their size is the residual miss; it costs one
+    oversized window task, never a wrong result."""
     gate = _small_plan_gate_bytes(df.sparkSession)
     if gate <= 0:
         return False
@@ -108,8 +123,7 @@ def _fits_single_task(df: DataFrame) -> bool:
         est = int(plan.stats().sizeInBytes())
         if 0 <= est <= gate:
             return True
-        tree = plan.treeString()
-        if any(n in tree for n in _CARDINALITY_NODES):
+        if _node_classes(plan) & _CARDINALITY_NODES:
             return False
         leaves = plan.collectLeaves()
         total = 0

@@ -1,17 +1,19 @@
 """Contract tests for the fencing-token (epoch) writer lease
-(operators/lease.py EpochWriterLease) — the r11 verdict's documented
-residual: on conditional-put stores (Ceph RGW S3, the reference's own
+(operators/lease.py EpochWriterLease), the one lease protocol on every
+store. On conditional-put stores (Ceph RGW S3, the reference's own
 backend — s3vectors-app/rook-resources.yaml) rename is copy+delete,
-so the tombstone lease's BREAK/take-aside was not atomic there. The
-epoch protocol makes every lease transition one conditional create of
-the next-numbered record, the single primitive such stores make
-atomic. These tests drive the full protocol against the same fake S3
-store the publish contract tests use (extended with listing), plus
-the real local Hadoop FS with the backend forced, proving:
+so no lease transition may rely on rename there: each transition is
+one publish of the next-numbered record through the store's selected
+backend — a conditional create on S3-like stores, stage+rename-
+without-overwrite on HDFS/local. These tests drive the full protocol
+against the fake stores the publish contract tests use (extended with
+listing), plus the real local Hadoop FS on both backends, proving:
 
-  - protocol selection: S3-semantics stores get the epoch lease, the
-    local FS keeps the tombstone lease;
-  - mutual exclusion: racing acquirers → one winner, loser raises;
+  - backend routing: S3-semantics stores publish records by
+    conditional create, the local FS by rename — and no plain lease
+    file ever appears;
+  - mutual exclusion: racing acquirers → one winner, loser raises, on
+    both backends;
   - fail-fast displacement: a broken/stolen holder's next heartbeat
     raises instead of dual-writing;
   - the GC-resurrection hazard is closed: a fenced-out writer whose
@@ -72,19 +74,45 @@ def _acquire(fs, ttl_ms=600_000, timeout_ms=0, steal=False):
     )
 
 
-# --- protocol selection ---------------------------------------------------------
+# --- backend routing ------------------------------------------------------------
 
 
 def test_s3_semantics_store_selects_epoch_protocol():
     lease = _acquire(ListingFakeS3Fs())
     assert isinstance(lease, L.EpochWriterLease)
+    assert isinstance(lease._backend, P.ConditionalPutPublish)
     lease.release()
 
 
-def test_local_fs_keeps_tombstone_protocol(spark, tmp_path):
-    lease = L.acquire_writer_lease(spark, str(tmp_path / "led"))
-    assert isinstance(lease, L.WriterLease)
+def test_local_fs_runs_epoch_lease_through_rename_publish(spark, tmp_path):
+    """The probe selects the rename backend on the local FS, and the
+    epoch lease publishes its records through it: acquire, heartbeat
+    and release each leave exactly the expected max record, and no
+    plain ``_writer.lease`` file (nor a staged tmp) is ever left."""
+    import os
+
+    led = str(tmp_path / "led")
+    epochs = os.path.join(led, "_commits", "_writer.lease.epochs")
+
+    def check(epoch, released):
+        files = [f for _r, _d, fs in os.walk(led) for f in fs]
+        assert "_writer.lease" not in files
+        names = [n for n in os.listdir(epochs) if not n.endswith(".crc")]
+        assert names == [f"e{epoch:012d}.json"], names
+        rec = json.load(open(os.path.join(epochs, names[0])))
+        assert rec["epoch"] == epoch and rec["owner"] == lease.owner
+        assert bool(rec.get("released")) is released
+
+    lease = L.acquire_writer_lease(spark, led, timeout_ms=0)
+    assert isinstance(lease, L.EpochWriterLease)
+    assert isinstance(lease._backend, P.RenamePublish)
+    check(1, False)
+    lease.heartbeat()
+    check(2, False)
+    with pytest.raises(L.LedgerLockedError, match="live writer"):
+        L.acquire_writer_lease(spark, led, timeout_ms=0)
     lease.release()
+    check(3, True)
 
 
 def test_epoch_protocol_forced_on_local_fs(spark, tmp_path):
@@ -263,11 +291,11 @@ def test_shard_ledger_commits_and_epoch_lease_coexist(spark, tmp_path):
 # --- concurrency stress -----------------------------------------------------------
 
 
-class ThreadSafeFakeS3Fs(ListingFakeS3Fs):
-    """The S3-semantics fake with a real lock around the conditional
-    create's check-then-set — the atomicity a real conditional PUT
-    provides — so a multi-threaded stress run models the store
-    honestly instead of racing a plain dict."""
+class _ThreadSafe:
+    """A real lock around the fake store's check-then-set steps — the
+    atomicity a real conditional PUT or namespace rename provides — so
+    a multi-threaded stress run models the store honestly instead of
+    racing a plain dict."""
 
     def __init__(self):
         super().__init__()
@@ -277,24 +305,47 @@ class ThreadSafeFakeS3Fs(ListingFakeS3Fs):
 
     def create_bytes(self, path, data, overwrite):
         with self._lock:
-            if not overwrite and path in self.files:
-                raise FileExistsError(path)
-            self.files[path] = data
+            super().create_bytes(path, data, overwrite)
+
+    def rename(self, src, dst):
+        with self._lock:
+            return super().rename(src, dst)
 
     def delete(self, path):
         with self._lock:
-            self.files.pop(path, None)
+            super().delete(path)
+
+    def list_names(self, dir_path):
+        with self._lock:
+            return super().list_names(dir_path)
 
 
-def test_epoch_lease_mutual_exclusion_under_contention():
+class ThreadSafeFakeS3Fs(_ThreadSafe, ListingFakeS3Fs):
+    pass
+
+
+class ThreadSafeFakePosixFs(_ThreadSafe, ListingFakePosixFs):
+    pass
+
+
+@pytest.mark.parametrize(
+    "store, backend",
+    [(ThreadSafeFakePosixFs, P.RenamePublish),
+     (ThreadSafeFakeS3Fs, P.ConditionalPutPublish)],
+    ids=["ListingFakePosixFs", "ListingFakeS3Fs"],
+)
+def test_epoch_lease_mutual_exclusion_under_contention(store, backend):
     """8 threads hammer acquire→(heartbeat, work)→release against one
     store with a generous TTL (no expiry-based takeover in play): at
     every instant at most ONE thread may sit between a successful
     acquire and its release. A counter guarded by its own lock
-    observes the critical section; any overlap is a protocol hole."""
+    observes the critical section; any overlap is a protocol hole.
+    Run on both backends: posix semantics publish every record by
+    stage+rename, S3 semantics by conditional create."""
     import threading
 
-    fs = ThreadSafeFakeS3Fs()
+    fs = store()
+    backends = set()
     inside = 0
     max_inside = 0
     meter = threading.Lock()
@@ -315,6 +366,7 @@ def test_epoch_lease_mutual_exclusion_under_contention():
                 inside += 1
                 max_inside = max(max_inside, inside)
                 acquired_total += 1
+                backends.add(type(lease._backend))
             try:
                 lease.heartbeat()
                 lease.heartbeat()
@@ -331,6 +383,7 @@ def test_epoch_lease_mutual_exclusion_under_contention():
     assert all(not t.is_alive() for t in threads), "stress run wedged"
     assert acquired_total >= stop_at
     assert max_inside == 1, f"dual writers observed: {max_inside}"
+    assert backends == {backend}
 
 
 # --- the collection surface on the conditional-put protocol -----------------------
@@ -372,7 +425,7 @@ def test_collection_mutations_under_conditional_put(spark, tmp_path):
         assert after == before
         reopened.delete_keys(["k1"])
         assert reopened.snapshot().count() == 0
-        # no rename-protocol lease file anywhere under the path
+        # no plain lease file anywhere under the path
         import os
 
         for root, _dirs, files in os.walk(coll.path):
@@ -484,16 +537,6 @@ def test_acquire_respects_timeout_when_records_unreadable():
         _acquire(fs, timeout_ms=500)
     elapsed = time.time() - t0
     assert 0.4 <= elapsed < 10, f"hot spin or hang: {elapsed:.2f}s"
-
-
-def test_ops_injection_rejected_on_rename_protocol():
-    """Injected ops are only honored by the epoch protocol; silently
-    probing one store and operating on another (the tombstone protocol
-    runs through the Spark-resolved FS) must be an explicit error."""
-    with pytest.raises(NotImplementedError, match="conditional-put"):
-        L.acquire_writer_lease(
-            None, "/led", timeout_ms=0, ops=ListingFakePosixFs()
-        )
 
 
 def test_backend_cache_is_per_instance_for_fakes():

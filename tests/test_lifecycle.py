@@ -32,6 +32,7 @@ from python_vectordbapp_ceph_spark.operators.shards import read_ledger
 from python_vectordbapp_ceph_spark.plans.inspect import explain_str
 from python_vectordbapp_ceph_spark.streaming.ivf_ingest import stream_into_ivf
 from python_vectordbapp_ceph_spark.streaming.shard_ingest import stream_append
+from tests.test_lease import wait_released
 
 SFX10 = "/tmp/sfx10"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -123,10 +124,7 @@ def test_corpus_refresh_lifecycle_sfx10(spark, sfx10_dir, tmp_path):
     n_commits = len([n for n in os.listdir(os.path.join(led, "_commits"))
                      if n.endswith(".json")])
     assert n_commits <= 2
-    deadline = time.time() + 15
-    while os.path.exists(os.path.join(led, "_commits", "_writer.lease")):
-        assert time.time() < deadline, "lease not released"
-        time.sleep(0.1)
+    wait_released(os.path.join(led, "_commits", "_writer.lease"))
     ledger_files = _count_parquet(led)
     assert ledger_files <= 40, f"ledger file count unbounded: {ledger_files}"
 

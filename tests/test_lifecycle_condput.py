@@ -15,7 +15,6 @@ enough to run in every suite.
 """
 
 import os
-import time
 
 import pytest
 from pyspark.sql import Window
@@ -35,6 +34,7 @@ from python_vectordbapp_ceph_spark.operators.lease import (
 from python_vectordbapp_ceph_spark.operators.shards import read_ledger
 from python_vectordbapp_ceph_spark.streaming.ivf_ingest import stream_into_ivf
 from python_vectordbapp_ceph_spark.streaming.shard_ingest import stream_append
+from tests.test_lease import wait_released
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.1")
 
@@ -98,17 +98,10 @@ def test_lifecycle_on_conditional_put_protocol(
     assert rows.count() == n_docs, "dedup must eat exactly the redelivery"
     assert rows.select("doc_id").distinct().count() == n_docs
 
-    # the rename-protocol artifact must never have existed; the epoch
-    # protocol's released record must appear once the stream terminates
+    # no plain lease file ever exists; the released epoch record must
+    # appear once the stream terminates
     assert not os.path.exists(os.path.join(led, "_commits", "_writer.lease"))
-    deadline = time.time() + 15
-    while True:
-        probe = EpochWriterLease(spark, led, ttl_ms=600_000)
-        e, rec = probe._scan()
-        if rec is not None and rec.get("released"):
-            break
-        assert time.time() < deadline, f"epoch lease not released: {rec}"
-        time.sleep(0.1)
+    wait_released(os.path.join(led, "_commits", "_writer.lease"))
 
     # immediately re-acquirable (released record, no TTL wait), and it
     # is the epoch protocol that answers

@@ -531,3 +531,40 @@ def test_describe_history_tracks_commits_and_retention(spark, tmp_path):
     vacuum(spark, path, keep_versions=2)
     hist2 = describe_history(spark, path).collect()
     assert [r.version for r in hist2] == [1, 2]
+
+
+def test_merge_write_plan_has_one_kb_exchange(spark, tmp_path, monkeypatch):
+    """files_per_bucket=1: the survivors reach the staged write still
+    hash-partitioned on ``_kb`` from the resolve window's exchange, so
+    the written plan holds exactly ONE shuffle exchange, on ``_kb``
+    alone — a planner change that brings back the second alignment
+    shuffle fails here."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from python_vectordbapp_ceph_spark.plans.inspect import explain_str
+
+    path = str(tmp_path / "base")
+    write_bucketed_base(_base_rows(spark), path, "key", N_BUCKETS)
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, p, *a, **kw):
+        if "/gen=" in str(p):
+            plans.append(explain_str(self._df, "simple"))
+        return real_parquet(self, p, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    changes = spark.createDataFrame(
+        [("k1", 111, 1, "upsert"), ("k2", 0, 1, "delete")],
+        "key string, val long, ts long, op string",
+    )
+    merge_into(spark, path, changes, key_col="key", ts_col="ts",
+               n_buckets=N_BUCKETS, files_per_bucket=1)
+    assert len(plans) == 1, plans
+    exchanges = re.findall(r"(?<!\w)Exchange (\w+\([^)]*\))", plans[0])
+    assert len(exchanges) == 1, plans[0]
+    assert re.fullmatch(r"hashpartitioning\(_kb#\d+L?, \d+\)", exchanges[0]), (
+        exchanges[0]
+    )

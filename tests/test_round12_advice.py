@@ -1,13 +1,7 @@
 """Regression tests for the round-11 ADVICE findings, fixed in round
-12:
+12 (the lease heartbeat and compact auto-heartbeat pins live in
+tests/test_lease.py):
 
-  1. lease heartbeat() used read-check-then-delete: between the read
-     and the delete, a breaker+acquirer could publish a FRESH lease
-     which the delete destroyed — dual writers. Now tombstone-based.
-  2. collection.compact() held the lease across snapshot+rewrite+swap
-     without heartbeating: a compaction longer than the TTL presented
-     an expired lease and a concurrent appender legitimately broke it
-     mid-swap. Now auto-heartbeated.
   3. zonemap compare mixed types: long sidecar kmin/kmax vs the
      batch's native min/max — TypeError on numeric-string doc_ids
      (and lexicographic string ranges cast to long can INVERT and
@@ -21,87 +15,13 @@
 
 import json
 import os
-import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from python_vectordbapp_ceph_spark.collection import VectorCollection
-from python_vectordbapp_ceph_spark.operators.lease import (
-    LedgerLockedError,
-    acquire_writer_lease,
-)
 from python_vectordbapp_ceph_spark.operators import merge as M
 from python_vectordbapp_ceph_spark.operators import shards as S
-
-
-# --- 1: heartbeat is tombstone-atomic ------------------------------------------
-
-
-def test_heartbeat_raises_and_preserves_thiefs_lease(spark, tmp_path):
-    """A displaced holder's heartbeat must fail fast AND leave the new
-    holder's lease exactly as it found it — never delete it (the
-    dual-writer hazard the advice named)."""
-    path = str(tmp_path / "ledger")
-    l1 = acquire_writer_lease(spark, path, timeout_ms=0)
-    l2 = acquire_writer_lease(spark, path, timeout_ms=0, steal=True)
-    with pytest.raises(LedgerLockedError):
-        l1.heartbeat()
-    assert l1.lost is True
-    # l2's lease survived l1's failed heartbeat — and still works
-    l2.heartbeat()
-    rec = json.loads(open(l1.lease_path.replace("file:", "")).read())
-    assert rec["owner"] == l2.owner
-    l2.release()
-
-
-def test_heartbeat_raises_when_lease_file_absent(spark, tmp_path):
-    path = str(tmp_path / "ledger")
-    l1 = acquire_writer_lease(spark, path, timeout_ms=0)
-    os.remove(l1.lease_path)
-    with pytest.raises(LedgerLockedError):
-        l1.heartbeat()
-    assert l1.lost is True
-
-
-def test_heartbeat_refreshes_own_lease(spark, tmp_path):
-    path = str(tmp_path / "ledger")
-    l1 = acquire_writer_lease(spark, path, timeout_ms=0)
-    before = json.loads(open(l1.lease_path).read())["heartbeat_ms"]
-    time.sleep(0.05)
-    l1.heartbeat()
-    after = json.loads(open(l1.lease_path).read())
-    assert after["owner"] == l1.owner
-    assert after["heartbeat_ms"] > before
-    l1.release()
-
-
-# --- 2: compact auto-heartbeats its lease ---------------------------------------
-
-
-def test_collection_compact_starts_auto_heartbeat(spark, tmp_path, monkeypatch):
-    """compact() must keep its lease fresh across a long rewrite —
-    pinned by spying start_auto_heartbeat (the same protection
-    rebuild_ivf uses; a TTL-long compaction otherwise presents an
-    expired lease that a concurrent appender may break mid-swap)."""
-    from python_vectordbapp_ceph_spark.operators import lease as L
-
-    started = []
-    orig = L.WriterLease.start_auto_heartbeat
-    monkeypatch.setattr(
-        L.WriterLease, "start_auto_heartbeat",
-        lambda self, *a, **k: started.append(self.path) or orig(self, *a, **k),
-    )
-    path = str(tmp_path / "col")
-    col = VectorCollection(spark, path, dim=2, lease_timeout_ms=0)
-    col.upsert(
-        spark.createDataFrame(
-            [("k1", [1.0, 2.0])], "key string, embedding array<float>"
-        )
-    )
-    col.compact()
-    assert path in started
-    assert col.snapshot().count() == 1
+from tests.test_lease import wait_released
 
 
 # --- 3: zonemap gated on integral key types --------------------------------------
@@ -289,4 +209,4 @@ def test_ingest_batch_shape_upsert_then_delete_one_lease(spark, tmp_path):
     keys = sorted(r.key for r in col.snapshot().select("key").collect())
     assert keys == ["b"]
     # the lease was released with the section
-    assert not os.path.exists(path.rstrip("/") + "._lease")
+    wait_released(path.rstrip("/") + "._lease", timeout=0)

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from python_vectordbapp_ceph_spark.operators.twophase import (
     _SMALL_PLAN_CONF,
     _SMALL_PLAN_ENV,
+    _fits_single_task,
     _small_plan_gate_bytes,
     global_cumsum,
 )
@@ -239,3 +240,41 @@ def test_small_gate_bad_env_override_raises(spark, monkeypatch):
         _small_plan_gate_bytes(spark)
     monkeypatch.setenv(_SMALL_PLAN_ENV, "123")
     assert _small_plan_gate_bytes(spark) == 123
+
+
+def _fact_dim_join(spark, dim_col="w"):
+    """2000-row fact x 50-row dim: Catalyst's non-CBO join estimate
+    (the product) misses a 200 000-byte gate, the leaf sum fits it."""
+    fact = spark.range(2000).select(
+        "id",
+        F.pmod(F.col("id"), F.lit(50)).alias("k"),
+        (F.col("id") % 7).alias("v"),
+    )
+    dim = spark.range(50).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias(dim_col)
+    )
+    return fact.join(dim, "k")
+
+
+def test_small_gate_matches_node_classes_not_column_names(spark):
+    """A column whose name contains a row-multiplying node's name
+    (``Generated_w`` ⊃ ``Generate``) must not fail the leaf-sum
+    fallback; a real Generate (explode) still does."""
+    with _gate_bytes(spark, 200_000):
+        assert _fits_single_task(_fact_dim_join(spark))
+        assert _fits_single_task(_fact_dim_join(spark, "Generated_w"))
+        exploded = _fact_dim_join(spark).select(
+            "k", F.explode(F.array("v", "w")).alias("x")
+        )
+        assert not _fits_single_task(exploded)
+
+
+def test_small_gate_rejects_expand(spark):
+    """rollup/cube plan an Expand that emits one row per grouping set:
+    the leaf-size sum is no upper bound there, so the gate must not
+    accept it through the fallback."""
+    with _gate_bytes(spark, 200_000):
+        rolled = _fact_dim_join(spark).rollup("k", "v", "w").agg(
+            F.count("*").alias("n")
+        )
+        assert not _fits_single_task(rolled)

@@ -1,11 +1,13 @@
-"""Multi-process contention twin for the conditional-put composed path
-(r12 verdict ask #4). test_epoch_lease covers racing acquirers
-IN-process; this tool races two OS PROCESSES — each with its own JVM,
-its own SparkSession, its own lease handle — against one ledger with
-``force_publish_backend("conditional-put")`` and INJECTED transient
-errors on the epoch-lease creates (the 503 and lost-acknowledgment
-shapes operators/lease.py `_advance`/`_acquire_epoch` claim to
-reconcile). The pytest orchestrator (tests/test_contention_twin.py)
+"""Multi-process contention twin for the writer lease (r12 verdict ask
+#4). test_epoch_lease covers racing acquirers IN-process; this tool
+races two OS PROCESSES — each with its own JVM, its own SparkSession,
+its own lease handle — against one ledger, with INJECTED transient
+errors on the epoch-record publishes (the 503 and lost-acknowledgment
+shapes operators/lease.py `_advance`/`acquire_writer_lease` claim to
+reconcile). ``--protocol=condput`` (the default) forces the
+conditional-put backend; ``--protocol=rename`` leaves the store probe
+to select the rename backend on the local FS. The pytest orchestrator
+(tests/test_contention_twin.py)
 pins: exactly one winner, the loser aborts clean BEFORE any append,
 the winner's ledger row-identical to a serial single-process run, and
 no orphan epoch-record growth.
@@ -22,12 +24,12 @@ Modes (marker files on the shared filesystem order the race):
                            short timeout — MUST lose (LedgerLockedError)
                            and write its marker without touching data
 
-Flaky schedule (writer): epoch-create call 1 = lost acknowledgment
-(create lands server-side, generic error raised — the _acquire_epoch
-owner-adoption path), call 4 = pure transient (nothing lands — retry
-path), call 5 = lost acknowledgment on a heartbeat (the _advance
-FileExistsError owner-reconcile path). All three reconciliations the
-protocol documents, exercised in one run.
+Flaky schedule (writer, both protocols): record-publish call 1 = lost
+acknowledgment (the record lands, generic error raised — the acquire
+loop's owner-adoption path), call 4 = pure transient (nothing lands —
+retry path), call 5 = lost acknowledgment on a heartbeat (the
+_advance "exists" owner-reconcile path). All three reconciliations
+the protocol documents, exercised in one run.
 """
 
 from __future__ import annotations
@@ -107,12 +109,20 @@ def _batches(spark):
     ]
 
 
+def _is_epoch_record(path: str) -> bool:
+    parent, _, name = path.rpartition("/")
+    return parent.endswith(".epochs") and name.startswith("e")
+
+
 class FlakyOps(P.HadoopFsOps):
-    """HadoopFsOps whose epoch-record creates fail per a deterministic
-    schedule: 'lost_ack' lands the create server-side then raises a
-    generic error (the lost-acknowledgment shape); 'transient' raises
-    without landing anything (the plain 503 shape). Only `.epochs/`
-    paths count — manifest commits and probes stay honest."""
+    """HadoopFsOps whose epoch-record publishes fail per a
+    deterministic schedule, injected at the one step that makes a
+    record visible: the rename onto ``.epochs/e*.json`` under the
+    rename backend, the conditional create under conditional-put.
+    'lost_ack' lands the step then raises a generic error (the
+    lost-acknowledgment shape); 'transient' raises without landing
+    anything (the plain 503 shape). Staged tmps, manifest commits and
+    probes stay honest."""
 
     def __init__(self, spark, path, schedule):
         super().__init__(spark, path)
@@ -120,20 +130,35 @@ class FlakyOps(P.HadoopFsOps):
         self.calls = 0
         self.fired = []
 
+    def _inject(self, land):
+        self.calls += 1
+        mode = self.schedule.get(self.calls)
+        if mode == "lost_ack":
+            land()
+            self.fired.append((self.calls, mode))
+            raise RuntimeError(
+                "injected 503 Slow Down (record landed, response lost)"
+            )
+        if mode == "transient":
+            self.fired.append((self.calls, mode))
+            raise RuntimeError("injected 503 Slow Down (nothing landed)")
+        return land()
+
     def create_bytes(self, path, data, overwrite):
-        if ".epochs/" in path:
-            self.calls += 1
-            mode = self.schedule.get(self.calls)
-            if mode == "lost_ack":
-                super().create_bytes(path, data, overwrite)
-                self.fired.append((self.calls, mode))
-                raise RuntimeError(
-                    "injected 503 Slow Down (create landed, response lost)"
-                )
-            if mode == "transient":
-                self.fired.append((self.calls, mode))
-                raise RuntimeError("injected 503 Slow Down (nothing landed)")
-        return super().create_bytes(path, data, overwrite)
+        def land():
+            return P.HadoopFsOps.create_bytes(self, path, data, overwrite)
+
+        if overwrite or not _is_epoch_record(path):
+            return land()
+        return self._inject(land)
+
+    def rename(self, src, dst):
+        def land():
+            return P.HadoopFsOps.rename(self, src, dst)
+
+        if not _is_epoch_record(dst):
+            return land()
+        return self._inject(land)
 
 
 def _wait_for(path: str, timeout_s: float = 120.0) -> None:
@@ -170,10 +195,6 @@ def main() -> int:
     mdir = args[2] if len(args) > 2 else None
     if protocol == "condput":
         P.force_publish_backend("conditional-put")
-    # "rename": leave the probe to select the tombstone protocol on the
-    # local FS — the flaky-ops injection is condput-only (the rename
-    # lease refuses ops injection by design), so the rename twin pins
-    # cross-process mutual exclusion + serial-identical content.
     spark = get_spark(
         app_name=f"contention-{mode.strip('-')}", master="local[4]",
         shuffle_partitions=4,
@@ -257,23 +278,14 @@ def main() -> int:
         return 0
 
     if mode == "--writer":
-        if protocol == "condput":
-            flaky = FlakyOps(
-                spark, ledger, {1: "lost_ack", 4: "transient", 5: "lost_ack"}
-            )
-            lease = acquire_writer_lease(
-                spark, ledger, ttl_ms=600_000, timeout_ms=10_000, ops=flaky
-            )
-        else:
-            flaky = None
-            lease = acquire_writer_lease(
-                spark, ledger, ttl_ms=600_000, timeout_ms=10_000
-            )
+        flaky = FlakyOps(
+            spark, ledger, {1: "lost_ack", 4: "transient", 5: "lost_ack"}
+        )
+        lease = acquire_writer_lease(
+            spark, ledger, ttl_ms=600_000, timeout_ms=10_000, ops=flaky
+        )
         with open(f"{mdir}/held.json", "w") as f:
-            json.dump(
-                {"epoch": getattr(lease, "epoch", None),
-                 "owner": lease.owner}, f,
-            )
+            json.dump({"epoch": lease.epoch, "owner": lease.owner}, f)
         # hold the lease until the contender has provably lost
         _wait_for(f"{mdir}/contender.json")
         retries = 0
@@ -285,9 +297,9 @@ def main() -> int:
             json.dump({
                 "role": "winner", "appended": N_BATCHES,
                 "protocol": protocol,
-                "injected_fired": flaky.fired if flaky else [],
+                "injected_fired": flaky.fired,
                 "hb_retries": retries,
-                "final_epoch": getattr(lease, "epoch", None),
+                "final_epoch": lease.epoch,
             }, f)
         spark.stop()
         return 0
