@@ -71,7 +71,13 @@ class VectorCollection:
     dim: int
     name: str = "collection"
     metric: str = "l2"
-    _seq: int = field(default=0, repr=False)
+    # the log's max(seq) as of our last write, and its row count (None:
+    # unknown). Both stay valid while the lease chain is unbroken — see
+    # _writer_lease
+    _seq: int | None = field(default=None, repr=False)
+    _log_rows: int | None = field(default=None, repr=False)
+    # owner of this object's last writer-lease handle
+    _lease_owner: str | None = field(default=None, repr=False)
     _ivf: object = field(default=None, repr=False)
     _nprobe: int = field(default=4, repr=False)
     _index_params: dict = field(default_factory=dict, repr=False)
@@ -81,14 +87,6 @@ class VectorCollection:
     _compact_stats: tuple = field(default=(None, None), repr=False)
     # writer-lease acquire timeout override (tests set 0 for fail-fast)
     lease_timeout_ms: int | None = field(default=None, repr=False)
-    # lease held by an enclosing leased() section, reused by _append
-    _held_lease: object = field(default=None, repr=False)
-    # True once max(seq) was re-read under the CURRENT lease — it
-    # cannot change while the lease is held, so later mutations in the
-    # same leased section reuse the cached floor instead of re-running
-    # the log aggregation (an ingest micro-batch doing upsert +
-    # tombstones was paying the max(seq) driver job twice)
-    _seq_synced: bool = field(default=False, repr=False)
 
     # --- DDL -------------------------------------------------------
     def ensure_exists(self) -> "VectorCollection":
@@ -114,6 +112,7 @@ class VectorCollection:
                         [], collection_schema(self.dim)
                     )
                     empty.write.mode("ignore").parquet(self.path)
+                    self._seq, self._log_rows = 0, 0
             finally:
                 lease.release()
         return self
@@ -144,164 +143,173 @@ class VectorCollection:
         upserts are backend-atomic); the parquet-log rebuild owns it.
         Concurrent mutators from OTHER sessions serialize on it or
         fail fast after the acquire timeout; a process killed
-        mid-mutation leaves a lease that expires after its TTL."""
+        mid-mutation leaves a lease that expires after its TTL.
+
+        The lease chain: when the new lease moved past a record of this
+        object's previous handle, no other writer held the lease in
+        between, so the log is exactly as this object last left it and
+        the cached ``_seq`` and ``_log_rows`` stay valid. Any other
+        predecessor (another writer, a steal, a breaker that fenced a
+        lost release, a wiped record directory) drops both, and the
+        next write re-reads them from the log."""
         from .operators.lease import acquire_writer_lease, sibling_lease_path
 
         kw = {} if self.lease_timeout_ms is None else {
             "timeout_ms": self.lease_timeout_ms
         }
-        return acquire_writer_lease(
+        lease = acquire_writer_lease(
             self.spark, self.path,
             lease_path=sibling_lease_path(self.path), **kw,
         )
+        if self._lease_owner is None or lease.predecessor_owner != self._lease_owner:
+            self._seq, self._log_rows = None, None
+        self._lease_owner = lease.owner
+        return lease
 
-    def leased(self):
-        """Hold ONE writer lease across several mutations — the ingest
-        micro-batch shape (upsert + tombstones in one batch). Each
-        mutation inside the section skips its own acquire/release AND
-        the per-mutation max(seq) re-read: seq cannot advance while the
-        lease is held, so the first mutation's re-read floors the whole
-        section. compact() inside the section reuses the held lease
-        (it would otherwise deadlock against it)."""
-        from contextlib import contextmanager
+    def _append(self, df: DataFrame) -> None:
+        """ONE leased, observed append of ``df`` (collection columns
+        except ``seq``), every row stamped with one fresh seq. The
+        rows written are counted by an observation on the write job
+        itself, and the count keeps ``_log_rows`` current without a
+        separate count job.
 
-        @contextmanager
-        def _section():
-            lease = self._writer_lease()
-            # the section spans a whole micro-batch — embedding UDFs on
-            # a big backlog batch can run past the 10-min TTL with no
-            # mutation ticking the lease, and an "expired" lease lets a
-            # concurrent compact legitimately break it and swap the log
-            # out from under the in-flight append (the same reason
-            # compact() itself auto-heartbeats across its swap)
-            lease.start_auto_heartbeat()
-            self._held_lease = lease
-            self._seq_synced = False
-            try:
-                yield lease
-            finally:
-                self._held_lease = None
-                self._seq_synced = False
-                lease.release()
+        The seq is assigned INSIDE the lease from the chain-checked
+        floor: two sessions mutating the same collection serialize on
+        the lease, so each write orders ABOVE everything the other
+        committed — a per-process counter kept outside the lease made
+        last-writer-wins resolve by stale local ordering (a later
+        delete could silently lose to an earlier session's upsert)."""
+        from pyspark.sql import Observation
 
-        return _section()
-
-    def _append(self, df: DataFrame, stamp_seq: bool = False) -> None:
-        held = self._held_lease
-        lease = held if held is not None else self._writer_lease()
-        if held is None:
-            self._seq_synced = False  # fresh acquisition, fresh floor
+        lease = self._writer_lease()
         try:
-            if stamp_seq:
-                # seq is assigned INSIDE the leased section, re-synced
-                # from the log: two sessions mutating the same
-                # collection serialize on the lease, and each re-read
-                # orders the new write ABOVE everything the other
-                # committed — assigning seq from a per-process cached
-                # counter outside the lease made last-writer-wins
-                # resolve by stale local ordering (a later delete could
-                # silently lose to an earlier session's upsert).
-                df = df.withColumn(
-                    "seq", F.lit(self._next_seq()).cast("long")
-                ).select(*[f.name for f in collection_schema(self.dim).fields])
-            df.write.mode("append").parquet(self.path)
+            # the write job runs the upstream plan — an ingest batch's
+            # embedding UDF included — and a big backlog batch can
+            # outlive the TTL with nothing ticking the lease; an
+            # "expired" lease lets a concurrent compact break it and
+            # swap the log out from under the in-flight append
+            lease.start_auto_heartbeat()
+            seq = F.lit(self._next_seq()).cast("long").alias("seq")
+            written = Observation()
+            out = df.select(*[
+                seq if f.name == "seq" else F.col(f.name)
+                for f in collection_schema(self.dim).fields
+            ]).observe(written, F.count(F.lit(1)).alias("rows"))
+            try:
+                out.write.mode("append").parquet(self.path)
+            except BaseException:
+                self._log_rows = None  # a failed job may leave files
+                raise
+            if self._log_rows is not None:
+                self._log_rows += written.get["rows"]
         finally:
-            if held is None:
-                lease.release()
+            lease.release()
         self._ivf = None  # any mutation invalidates the ANN index
 
     def _next_seq(self) -> int:
         """Monotone writer sequence, persistent across process restarts
-        AND across concurrent sessions: every call re-reads max(seq)
-        from the log (one column-pruned agg — the log is compaction-
-        bounded) and floors it with the local counter, so a reopened
-        or concurrent collection always orders its writes ABOVE the
-        existing log — or deletes/upserts would silently lose to
-        history. Callers must hold the writer lease (see _append).
+        AND across concurrent sessions: the next seq is one above the
+        log's max(seq), so a reopened or concurrent collection always
+        orders its writes ABOVE the existing log — or deletes/upserts
+        would silently lose to history. Callers must hold the writer
+        lease (see _append).
 
-        The re-read runs ONCE per lease acquisition: max(seq) cannot
-        change while the lease is held, so later calls in the same
-        leased section (an ingest batch's upsert + tombstones) reuse
-        the cached floor instead of re-running the log aggregation."""
+        The max is re-read from the log (one column-pruned agg — the
+        log is compaction-bounded) only when the cached floor is
+        unknown: on this object's first write, and whenever
+        ``_writer_lease`` finds the lease chain broken. While the chain
+        holds, no other writer has touched the log since our last
+        write, so the cached floor is exact."""
         from pyspark.errors import AnalysisException
 
-        if self._seq_synced:
-            self._seq += 1
-            return self._seq
-        try:
-            row = self._log().agg(F.max("seq").alias("m")).collect()[0]
-            log_max = int(row.m or 0)
-        except AnalysisException as e:
-            # ONLY the not-yet-existing-path case may fall back to 0
-            # (the append itself creates the log — the old
-            # contract). Any other failure must propagate: silently
-            # restarting at seq=0 on a transient read error would
-            # order new writes BELOW history and no-op deletes.
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            log_max = 0
-        self._seq = max(self._seq, log_max) + 1
-        self._seq_synced = True
+        if self._seq is None:
+            try:
+                row = self._log().agg(F.max("seq").alias("m")).collect()[0]
+                self._seq = int(row.m or 0)
+            except AnalysisException as e:
+                # ONLY the not-yet-existing-path case may fall back to 0
+                # (the append itself creates the log — the old
+                # contract). Any other failure must propagate: silently
+                # restarting at seq=0 on a transient read error would
+                # order new writes BELOW history and no-op deletes.
+                if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+                    raise
+                self._seq = 0
+        self._seq += 1
         return self._seq
 
-    def _validated(self, df: DataFrame) -> DataFrame:
+    def _checked_embedding(self, emb: Column) -> Column:
         """Dim check (the backend's dim-enforced index, B2), enforced
         INSIDE the written column: a wrong-width vector trips
         raise_error during the write job itself. One job per upsert —
         no separate validation count() doubling every write (and
         re-running upstream embedding UDFs)."""
-        bad = F.col("embedding").isNotNull() & (F.size("embedding") != self.dim)
-        checked = F.when(
+        bad = emb.isNotNull() & (F.size(emb) != self.dim)
+        return F.when(
             bad,
             F.raise_error(
                 F.concat(
                     F.lit(f"embedding dim != {self.dim} for key="), F.col("key")
                 )
             ).cast("array<float>"),
-        ).otherwise(F.col("embedding"))
-        return df.withColumn("embedding", checked)
+        ).otherwise(emb)
+
+    def _tombstones(self, key_rows: DataFrame) -> DataFrame:
+        """Delete markers for a DataFrame of keys — fully distributed;
+        the key set never visits the driver."""
+        return key_rows.select(
+            F.col("key").cast("string").alias("key"),
+            F.lit(None).cast("string").alias("url"),
+            F.lit(None).cast("array<float>").alias("embedding"),
+            F.lit(None).cast("map<string,string>").alias("tags"),
+            F.lit(None).cast("map<string,string>").alias("props"),
+            F.current_timestamp().alias("ingest_ts"),
+            F.lit("delete").alias("op"),
+        )
 
     # --- mutation verbs --------------------------------------------
-    def upsert(self, rows: DataFrame) -> None:
+    def upsert(self, rows: DataFrame, delete_keys: DataFrame | None = None) -> None:
         """Replace-by-key semantics via append + last-writer-wins read.
-        Idempotent under at-least-once redelivery (same key+seq)."""
-        prepared = (
-            rows.withColumn("op", F.lit("upsert"))
-            .withColumn("ingest_ts", F.coalesce(F.col("ingest_ts"), F.current_timestamp()))
-            if "ingest_ts" in rows.columns
-            else rows.withColumn("op", F.lit("upsert")).withColumn(
-                "ingest_ts", F.current_timestamp()
-            )
+        Idempotent under at-least-once redelivery (same key+seq).
+
+        ``delete_keys`` (a DataFrame with a ``key`` column) tombstones
+        those keys in the SAME write: upserts and tombstones share one
+        lease, one seq and one append job — the streaming ingest
+        micro-batch shape. Its keys must be disjoint from the keys of
+        ``rows``: with one seq for both, a key on both sides resolves
+        by ingest_ts, not by call order. An empty input writes one
+        schema-only part file; unlike the delete verbs, this verb does
+        not probe for emptiness."""
+        cols = rows.columns
+
+        def opt(c: str) -> Column:
+            return F.col(c) if c in cols else F.lit(None)
+
+        ts = (
+            F.coalesce(F.col("ingest_ts"), F.current_timestamp())
+            if "ingest_ts" in cols else F.current_timestamp()
         )
-        for c in ("url", "tags", "props"):
-            if c not in prepared.columns:
-                prepared = prepared.withColumn(c, F.lit(None))
-        out = prepared.select(
-            F.col("key").cast("string"),
-            F.col("url").cast("string"),
-            F.col("embedding").cast("array<float>"),
-            F.col("tags").cast("map<string,string>"),
-            F.col("props").cast("map<string,string>"),
-            F.col("ingest_ts").cast("timestamp"),
-            F.col("op"),
+        out = rows.select(
+            F.col("key").cast("string").alias("key"),
+            opt("url").cast("string").alias("url"),
+            self._checked_embedding(
+                F.col("embedding").cast("array<float>")
+            ).alias("embedding"),
+            opt("tags").cast("map<string,string>").alias("tags"),
+            opt("props").cast("map<string,string>").alias("props"),
+            ts.cast("timestamp").alias("ingest_ts"),
+            F.lit("upsert").alias("op"),
         )
-        self._append(self._validated(out), stamp_seq=True)
+        if delete_keys is not None:
+            out = out.unionByName(self._tombstones(delete_keys))
+        self._append(out)
 
     def _append_tombstones(self, key_rows: DataFrame) -> None:
-        """Append delete markers for a DataFrame of keys — fully
-        distributed; the matching key set never visits the driver."""
+        """Tombstone every key in ``key_rows``; a 0-match delete writes
+        nothing and spends no seq."""
         if key_rows.isEmpty():
-            return  # no empty files / wasted seq for 0-match deletes
-        tomb = (
-            key_rows.select(F.col("key").cast("string"))
-            .withColumn("url", F.lit(None).cast("string"))
-            .withColumn("embedding", F.lit(None).cast("array<float>"))
-            .withColumn("tags", F.lit(None).cast("map<string,string>"))
-            .withColumn("props", F.lit(None).cast("map<string,string>"))
-            .withColumn("ingest_ts", F.current_timestamp())
-            .withColumn("op", F.lit("delete"))
-        )
-        self._append(tomb, stamp_seq=True)
+            return
+        self._append(self._tombstones(key_rows))
 
     def delete_keys(self, keys: list[str]) -> None:
         """delete_vectors(keys=[...]) analog (pythonvectordbceph.py:143-147)."""
@@ -476,13 +484,17 @@ class VectorCollection:
         history degrades every query). Returns True if compacted —
         the maintenance-cadence hook a scheduler calls after ingest.
 
-        Cost-gated: the log count is parquet-footer metadata (cheap),
-        the live count is a full last-writer-wins resolve (expensive).
-        The expensive count only runs once the cheap one crosses the
+        Cost-gated: the log size is tracked from the observed row
+        counts of this object's own writes (``_append``, ``compact``)
+        and counted from parquet footers only while unknown; the live
+        count is a full last-writer-wins resolve (expensive). The
+        expensive count only runs once the log size crosses the
         threshold against the last-known live count — so a per-batch
-        call from ingest_stream costs one metadata job until the log
-        actually approaches the ratio."""
-        log_rows = self._log().count()
+        call from ingest_stream runs no job until the log actually
+        approaches the ratio."""
+        if self._log_rows is None:
+            self._log_rows = self._log().count()
+        log_rows = self._log_rows
         last_log, last_live = self._compact_stats
         if log_rows == last_log:
             return False  # nothing appended since the last check
@@ -525,19 +537,23 @@ class VectorCollection:
         letting a concurrent session legitimately break it mid-swap and
         delete the racing append with ``._old`` — the same reason
         rebuild_ivf heartbeats across its refit."""
-        held = self._held_lease
-        lease = held if held is not None else self._writer_lease()
+        lease = self._writer_lease()
         try:
             lease.start_auto_heartbeat()
             self._compact_locked()
         finally:
-            if held is None:
-                lease.release()
+            lease.release()
 
     def _compact_locked(self) -> None:
-        snap = self.snapshot().withColumn("op", F.lit("upsert")).withColumn(
-            "seq", F.lit(0).cast("long")
-        ).select(*[f.name for f in collection_schema(self.dim).fields])
+        from pyspark.sql import Observation
+
+        written = Observation()
+        snap = self.snapshot().select(*[
+            F.lit(0).cast("long").alias("seq") if f.name == "seq"
+            else F.lit("upsert").alias("op") if f.name == "op"
+            else F.col(f.name)
+            for f in collection_schema(self.dim).fields
+        ]).observe(written, F.count(F.lit(1)).alias("rows"))
         tmp = self.path + "._compact"
         # ONE write (to a sibling temp dir), then a two-rename swap —
         # not temp-write + re-read + second full write, which doubles
@@ -545,8 +561,9 @@ class VectorCollection:
         # atomic on HDFS/POSIX; a crash between them leaves the old log
         # intact at path+'._old' (recoverable), never a missing path.
         snap.write.mode("overwrite").parquet(tmp)
-        self._seq = 0  # re-derive from the rewritten log on next write
-        self._seq_synced = False  # the cached floor references old seqs
+        # until the swap lands, the log is either the old one or the
+        # rewritten one: unknown
+        self._seq, self._log_rows = None, None
         self._ivf = None  # index plans reference the replaced files
         hpath = self.spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
         # path-resolved FS, not the cluster default (they can differ)
@@ -567,6 +584,8 @@ class VectorCollection:
                 "old log restored, compacted snapshot at the temp path"
             )
         fs.delete(hpath(old), True)
+        # the log is now exactly the rewritten snapshot, all at seq 0
+        self._seq, self._log_rows = 0, written.get["rows"]
         self._compact_stats = (None, None)  # counts changed wholesale
         self.spark.catalog.refreshByPath(self.path)
 

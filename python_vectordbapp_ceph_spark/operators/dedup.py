@@ -26,12 +26,16 @@ dedup, Jaccard verify) carry full SQL oracles.
 
 from __future__ import annotations
 
-import pandas as pd  # module-scope: pandas_udf type hints resolve here
+import logging
 
+import pandas as pd  # module-scope: pandas_udf type hints resolve here
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_for_fingerprint, fingerprint
+
+_log = logging.getLogger(__name__)
 
 # Persisted intermediates (LSH banded tables, shingle sets) — kept so
 # self-joins don't recompute their pipeline per side; tracked in the
@@ -363,9 +367,16 @@ def jaccard_pairs(
     one tokenize pass between this verify side and the MinHash side.
     The internal persist is skipped then (the caller's persist already
     backs both self-join sides); ``text_col``/``shingle_n`` are
-    ignored.
+    ignored. An input that is not persisted logs a warning: each
+    self-join side would recompute its upstream.
     """
     if shingle_col is not None:
+        if df.storageLevel == StorageLevel.NONE:
+            _log.warning(
+                "jaccard_pairs(shingle_col=%r) got an input that is not "
+                "persisted: both self-join sides recompute its upstream; "
+                "persist it first", shingle_col,
+            )
         base = df.select(
             F.col(id_col), F.col(block_col).alias("_blk"),
             F.col(shingle_col).alias("sh"),

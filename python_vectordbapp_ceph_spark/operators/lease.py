@@ -153,6 +153,10 @@ class EpochWriterLease:
         self.acquired_ms: int | None = None
         self.lost = False
         self.epoch = 0
+        # owner of the record this handle's acquire moved past (None:
+        # no record, or a steal) — a caller whose previous handle had
+        # this owner knows no other writer held the lease in between
+        self.predecessor_owner: str | None = None
         self._hb_lock = threading.Lock()
         self._stop = threading.Event()
         self._auto_hb = False
@@ -267,9 +271,7 @@ class EpochWriterLease:
         maintenance, then fail its next real batch. Transient FS errors
         are retried next tick; a genuine loss (LedgerLockedError) stops
         the thread and the holder's next explicit heartbeat raises.
-        Idempotent: a second call on the same lease is a no-op, so a
-        leased section whose body also heartbeats (compact inside
-        leased()) can't stack threads."""
+        Idempotent: a second call on the same lease is a no-op."""
         if self._auto_hb:
             return
         self._auto_hb = True
@@ -360,6 +362,12 @@ def acquire_writer_lease(
     injects the filesystem (contract tests drive fake stores through
     it); the publish backend is the one the per-store probe selects.
 
+    The returned lease's ``predecessor_owner`` is the owner of the
+    record it moved past (None for an empty record directory or a
+    steal). It equals the owner of the caller's previous handle only
+    if no other writer held the lease in between: owners are per-handle
+    uuid4 values, and heartbeat and release publish under the same one.
+
     Free slots (no record / released / expired / steal / our own
     lost-ack record) are taken by publishing the next epoch; a live
     holder makes the loop poll then raise. EVERY path falls through to
@@ -406,6 +414,9 @@ def acquire_writer_lease(
                 won = False  # transient store error — retry within budget
             if won:
                 lease.epoch = nxt
+                lease.predecessor_owner = (
+                    rec.get("owner") if rec is not None and not steal else None
+                )
                 lease._gc(nxt)
                 return lease
             # lost the epoch race — fall through to deadline + poll

@@ -266,10 +266,17 @@ class HadoopFsOps(FsOps):
             raise
 
     def rename(self, src: str, dst: str) -> bool:
+        """False only when the destination is taken: Hadoop's
+        ``rename`` answered false, or raised its already-exists error.
+        Anything else (a transient I/O error) propagates — read as a
+        lost race, it would make a lease heartbeat mark a healthy
+        holder lost."""
         try:
             return bool(self._fs.rename(self._hpath(src), self._hpath(dst)))
-        except Exception:
-            return False
+        except Exception as e:
+            if self._is_already_exists(e):
+                return False
+            raise
 
     def delete(self, path: str) -> None:
         self._fs.delete(self._hpath(path), False)
@@ -341,7 +348,15 @@ class RenamePublish:
         self._ops.create_bytes(
             tmp, json.dumps(payload).encode("utf-8"), overwrite=True
         )
-        if self._ops.rename(tmp, target):
+        try:
+            renamed = self._ops.rename(tmp, target)
+        except Exception:
+            try:
+                self._ops.delete(tmp)
+            except Exception:
+                pass
+            raise
+        if renamed:
             return True
         self._ops.delete(tmp)
         return False

@@ -10,8 +10,15 @@ same pipeline is Structured Streaming:
       → parse key/event/tags (from_json)
       → branch upsert/delete on eventName        # :138-152
       → embed via iterator pandas_udf            # A5/A6, model once/executor
-      → foreachBatch: append to the collection   # idempotent — snapshot
-        change log                               # resolves last-writer-wins
+      → foreachBatch: ONE append to the          # upserts + tombstones,
+        collection change log                    # one lease, one seq;
+                                                 # snapshot resolves
+                                                 # last-writer-wins
+
+Each micro-batch is one leased, observed write job: the missing-object
+count and the rows written are observations on that job, so a steady-
+state batch runs no other Spark action (no emptiness probe, no count,
+no max(seq) re-read while the collection's lease chain is unbroken).
 
 Exactly-once: checkpointed source offsets + idempotent upsert sink
 (at-least-once delivery × last-writer-wins read = effectively-once),
@@ -93,6 +100,22 @@ def parse_s3_events(raw_json: DataFrame, json_col: str = "value") -> DataFrame:
     )
 
 
+def _drop_missing(joined: DataFrame, col: str):
+    """``joined`` without the rows whose ``col`` is NULL (the left join
+    found no object), plus an Observation of how many were dropped. The
+    count is taken by the write job that consumes the frame, so it
+    costs no job of its own, and it counts exactly the rows that job
+    dropped even when the upstream is non-deterministic. Read it with
+    ``obs.get["missing"]`` after that job."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    kept = joined.observe(
+        obs, F.count_if(F.col(col).isNull()).alias("missing")
+    ).filter(F.col(col).isNotNull())
+    return kept, obs
+
+
 def ingest_stream(
     events: DataFrame,
     collection,
@@ -122,7 +145,7 @@ def ingest_stream(
     change log outgrows that multiple of the live rows, the batch hook
     rewrites it (maintenance amortized into ingest, so read latency
     doesn't degrade with stream lifetime). Compaction runs BEST-EFFORT
-    after the batch's appends commit — a maintenance failure is logged
+    after the batch's append commits — a maintenance failure is logged
     and retried on a later batch, never replayed as the batch's own.
 
     ``available_now=False`` keeps the query running continuously (the
@@ -142,21 +165,21 @@ def ingest_stream(
     def do_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        # LAST EVENT PER KEY first, then the upsert/delete split: the
-        # split alone appends all tombstones above all upserts (one
-        # leased section, deletes get the higher seq), so a PUT that
-        # follows a DELETE of the same key WITHIN one micro-batch —
-        # near-certain under availableNow, which drains the backlog
-        # into few batches — would resolve as deleted. Reducing to the
-        # latest event by eventTime preserves the reference webhook's
-        # sequential per-key outcome; a key then appears in EITHER the
-        # upsert or the delete branch, never both, and superseded PUTs
-        # skip the embedding UDF entirely. Tiebreak on equal
-        # timestamps is DELETE-over-upsert — deterministic (with equal
-        # stamps arrival order is unknowable either way) and the
-        # conservative choice the pre-reduction pipeline pinned: a
-        # tombstone only suppresses a row until its next genuine PUT,
-        # while a resurrected deleted row leaks data.
+        # LAST EVENT PER KEY first, then the upsert/delete split: with
+        # one seq stamped on the whole batch, a key on both sides (a
+        # PUT that follows a DELETE of the same key WITHIN one
+        # micro-batch — near-certain under availableNow, which drains
+        # the backlog into few batches) would resolve by its ingest
+        # timestamps alone. Reducing to the latest event by eventTime
+        # preserves the reference webhook's sequential per-key outcome;
+        # a key then appears in EITHER the upsert or the delete branch,
+        # never both (the disjointness upsert(delete_keys=) requires),
+        # and superseded PUTs skip the embedding UDF entirely. Tiebreak
+        # on equal timestamps is DELETE-over-upsert — deterministic
+        # (with equal stamps arrival order is unknowable either way)
+        # and the conservative choice: a tombstone only suppresses a
+        # row until its next genuine PUT, while a resurrected deleted
+        # row leaks data.
         w = Window.partitionBy("key").orderBy(
             F.col("ingest_ts").desc_nulls_last(), F.col("op").asc()
         )
@@ -165,88 +188,72 @@ def ingest_stream(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # persist the reduced micro-batch: the upsert/delete split reads
-        # it twice, and the emptiness probes must not re-run the source
+        # persist the reduced micro-batch: both branches of the one
+        # write read it, and must not each re-run the source and window
         batch_df = batch_df.persist()
-        extra_cached = []
         try:
             ups = batch_df.filter(F.col("op") == "upsert")
             dels = batch_df.filter(F.col("op") == "delete")
+            missing = None
             if object_type == "IMAGE":
                 if object_bytes is not None:
                     # left join ⇒ a key missing from the object store
                     # yields NULL content; embedding it would crash the
                     # micro-batch (Image.open on None), which then
-                    # retries forever. Drop those rows with a logged
-                    # count — the reference 404s the single request,
-                    # the stream must not wedge on it. The join is
-                    # PERSISTED before the null count so the guard
-                    # costs one join evaluation per batch (not two),
-                    # and the counted rows are exactly the rows the
-                    # downstream write drops even when the upstream is
-                    # non-deterministic.
-                    ups = ups.join(object_bytes, "key", "left").persist()
-                    extra_cached.append(ups)
-                    n_missing = ups.filter(F.col("content").isNull()).count()
-                    if n_missing:
-                        _log.warning(
-                            "ingest_stream batch %s: dropping %d upsert(s) "
-                            "whose object bytes are missing",
-                            batch_id, n_missing,
-                        )
-                        ups = ups.filter(F.col("content").isNotNull())
+                    # retries forever. Such rows are dropped with a
+                    # logged count — the reference 404s the single
+                    # request, the stream must not wedge on it.
+                    ups, missing = _drop_missing(
+                        ups.join(object_bytes, "key", "left"), "content"
+                    )
                 else:
                     ups = ups.withColumn(
                         "content", F.encode(F.col("key"), "utf-8")
                     )
                 embed_col = image_embed_udf(F.col("content"))
             elif object_text is not None:
-                # same null guard (and same single-evaluation persist)
-                # as the IMAGE branch: a key missing from the object
-                # store must be DROPPED with a logged count, not
-                # silently upserted as embed("") — every missing key
-                # would otherwise share one identical vector that
+                # same guard as the IMAGE branch: a key missing from
+                # the object store must be DROPPED with a logged count,
+                # not silently upserted as embed("") — every missing
+                # key would otherwise share one identical vector that
                 # clusters together in search results
-                ups = ups.join(object_text, "key", "left").persist()
-                extra_cached.append(ups)
-                n_missing = ups.filter(F.col("text").isNull()).count()
-                if n_missing:
-                    _log.warning(
-                        "ingest_stream batch %s: dropping %d upsert(s) "
-                        "whose object text is missing",
-                        batch_id, n_missing,
-                    )
-                    ups = ups.filter(F.col("text").isNotNull())
+                ups, missing = _drop_missing(
+                    ups.join(object_text, "key", "left"), "text"
+                )
                 embed_col = text_embed_udf(F.col("text"))
             else:
                 ups = ups.withColumn("text", F.col("key"))
                 embed_col = text_embed_udf(F.col("text"))
-            # emptiness is probed BEFORE the embedding UDF enters the
-            # plan, so the model runs exactly once per row — in the
-            # write job itself (the reference re-ran it per request,
-            # pythonvectordbceph.py:162; round-2 code ran it 3×/batch)
-            # ONE leased section for the whole micro-batch: upsert and
-            # tombstones share a single lease acquire/release and a
-            # single max(seq) re-read (seq can't advance while held)
-            with collection.leased():
-                if not ups.isEmpty():
-                    rows = ups.select(
-                        F.col("key"),
-                        object_url_col(
-                            endpoint, F.col("bucket"), F.col("key")
-                        ).alias("url"),
-                        embed_col.alias("embedding"),
-                        F.col("tags"),
-                        F.lit(None).cast("map<string,string>").alias("props"),
-                        F.col("ingest_ts"),
+            rows = ups.select(
+                F.col("key"),
+                object_url_col(
+                    endpoint, F.col("bucket"), F.col("key")
+                ).alias("url"),
+                embed_col.alias("embedding"),
+                F.col("tags"),
+                F.lit(None).cast("map<string,string>").alias("props"),
+                F.col("ingest_ts"),
+            )
+            # ONE leased write for the whole micro-batch: upserts and
+            # tombstones under one lease and one seq, in one append
+            # job. The embedding UDF runs exactly once per row, inside
+            # that job (the reference re-ran it per request,
+            # pythonvectordbceph.py:162); the tombstones go straight
+            # from the DataFrame, so the delete key set never visits
+            # the driver. No emptiness probe: a batch that reduces to
+            # zero rows writes one schema-only part file.
+            collection.upsert(rows, delete_keys=dels.select("key"))
+            if missing is not None:
+                n_missing = missing.get["missing"]
+                if n_missing:
+                    _log.warning(
+                        "ingest_stream batch %s: dropped %d upsert(s) "
+                        "whose object %s is missing",
+                        batch_id, n_missing,
+                        "bytes" if object_type == "IMAGE" else "text",
                     )
-                    collection.upsert(rows)
-                if not dels.isEmpty():
-                    # tombstones appended straight from the DataFrame —
-                    # the delete key set never visits the driver
-                    collection.delete_keys_df(dels.select("key").distinct())
             if compact_log_ratio is not None:
-                # best-effort AFTER the data commit: the appends are
+                # best-effort AFTER the data commit: the append is
                 # already durable, so a maintenance failure (another
                 # session holds the lease, transient FS error mid-swap)
                 # must not fail the micro-batch — that would replay and
@@ -261,8 +268,6 @@ def ingest_stream(
                         batch_id, exc_info=True,
                     )
         finally:
-            for cached in extra_cached:
-                cached.unpersist()
             batch_df.unpersist()
 
     writer = events.writeStream.foreachBatch(do_batch)

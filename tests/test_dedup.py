@@ -378,3 +378,31 @@ def test_dedup_components_two_hop_identical_labels(spark):
         assert two[12] == 1 and two[105] == 100 and two[501] == 500
     finally:
         release_caches()
+
+
+def test_jaccard_pairs_warns_on_unpersisted_shingle_input(spark, caplog):
+    """shingle_col= skips the internal persist; an input that is not
+    persisted would be recomputed once per self-join side, so it warns
+    (and a persisted one does not)."""
+    import logging
+
+    from python_vectordbapp_ceph_spark.operators.dedup import shingles
+
+    d = spark.createDataFrame(
+        [(1, "s", "a b c d"), (2, "s", "a b c e")],
+        "doc_id int, source string, text string",
+    )
+    sh = d.select("doc_id", "source", shingles("text", 1).alias("_sh"))
+    with caplog.at_level(logging.WARNING, logger="python_vectordbapp_ceph_spark"):
+        jaccard_pairs(sh, block_col="source", threshold=0.5, shingle_col="_sh")
+    assert any("not persisted" in r.getMessage() for r in caplog.records)
+    caplog.clear()
+    sh = sh.persist()
+    try:
+        with caplog.at_level(logging.WARNING,
+                             logger="python_vectordbapp_ceph_spark"):
+            jaccard_pairs(sh, block_col="source", threshold=0.5,
+                          shingle_col="_sh")
+    finally:
+        sh.unpersist()
+    assert not any("not persisted" in r.getMessage() for r in caplog.records)

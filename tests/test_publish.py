@@ -342,3 +342,50 @@ def test_merge_crash_and_retry_under_conditional_put(
         assert os.path.exists(os.path.join(path, "_commits", "_latest"))
     finally:
         P.force_publish_backend(None)
+
+
+def test_hadoop_rename_transient_error_does_not_fence_heartbeat(spark, tmp_path):
+    """HadoopFsOps.rename answers False only for a taken destination; a
+    transient rename error propagates, so a lease heartbeat hit by one
+    stays held (the next heartbeat lands) instead of reading the error
+    as a lost race and marking the healthy holder lost."""
+    from python_vectordbapp_ceph_spark.operators.lease import acquire_writer_lease
+
+    prev = P._FORCED_BACKEND
+    P.force_publish_backend("rename")
+    try:
+        lease_path = str(tmp_path / "t") + "._lease"
+        ops = P.HadoopFsOps(spark, lease_path)
+        lease = acquire_writer_lease(
+            spark, str(tmp_path / "t"), lease_path=lease_path, ops=ops
+        )
+        real = ops._fs
+
+        class FlakyRename:
+            failures = 1
+
+            def __getattr__(self, name):
+                return getattr(real, name)
+
+            def rename(self, src, dst):
+                if self.failures:
+                    self.failures -= 1
+                    raise OSError("connection reset during rename")
+                return real.rename(src, dst)
+
+        ops._fs = FlakyRename()
+        with pytest.raises(OSError, match="connection reset"):
+            lease.heartbeat()
+        assert not lease.lost
+        lease.heartbeat()
+        epochs = lease._list_epochs()
+        assert max(epochs) == lease.epoch
+        assert lease._read_epoch(lease.epoch)["owner"] == lease.owner
+        # the failed attempt's staged tmp was removed
+        assert [n for n in ops.list_names(lease._dir) if ".tmp-" in n] == []
+        # a taken destination still answers False, not an error
+        ops.create_bytes(f"{lease._dir}/x", b"x", overwrite=True)
+        assert ops.rename(f"{lease._dir}/x", lease._epoch_file(lease.epoch)) is False
+        lease.release()
+    finally:
+        P.force_publish_backend(prev)

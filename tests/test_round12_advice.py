@@ -10,7 +10,7 @@ tests/test_lease.py):
      object stores, staging-start on HDFS. Now an explicit _staged_at
      marker stamped before the data files.
   5. _next_seq re-ran the max(seq) aggregation per mutation inside the
-     lease; a leased() section now re-reads once per acquisition.
+     lease; it now re-reads only when the lease chain is broken.
 """
 
 import json
@@ -137,53 +137,54 @@ def test_markerless_stage_falls_back_to_mtime(spark, tmp_path):
     assert not os.path.exists(gen_dir)  # old mtime → reclaimed
 
 
-# --- 5: one max(seq) re-read per leased section ----------------------------------
+# --- 5: max(seq) re-read only when the lease chain breaks -----------------------
 
 
-def test_leased_section_reads_seq_floor_once(spark, tmp_path):
-    """Inside leased(), the first mutation re-reads max(seq); later
-    mutations in the same section must reuse the cached floor (seq
-    cannot advance while the lease is held)."""
+def _kv(spark, *rows):
+    return spark.createDataFrame(list(rows), "key string, embedding array<float>")
+
+
+def test_seq_floor_reused_while_lease_chain_unbroken(spark, tmp_path):
+    """A collection's consecutive writes reuse the cached max(seq) floor
+    while each new lease moved past its own previous handle's record —
+    no other writer can have touched the log. A foreign writer in
+    between breaks the chain, and the next write re-reads the floor."""
     path = str(tmp_path / "col")
     col = VectorCollection(spark, path, dim=2, lease_timeout_ms=0)
-    col.upsert(
-        spark.createDataFrame(
-            [("k1", [1.0, 2.0])], "key string, embedding array<float>"
-        )
-    )
-    with col.leased():
-        first = col._next_seq()
-        # poison the log read: a second re-read would raise
-        orig_log = col._log
-        col._log = lambda: (_ for _ in ()).throw(AssertionError("re-read"))
-        try:
-            assert col._next_seq() == first + 1
-        finally:
-            col._log = orig_log
-    # outside the section the floor must be re-read again
-    col._log = orig_log
-    assert col._seq_synced is False
+    col.upsert(_kv(spark, ("k1", [1.0, 2.0])))  # first write reads the floor
+    orig_log = col._log
+    # poison the log read: a re-read would raise
+    col._log = lambda: (_ for _ in ()).throw(AssertionError("re-read"))
+    try:
+        col.upsert(_kv(spark, ("k2", [2.0, 2.0])))
+    finally:
+        col._log = orig_log
+    other = VectorCollection(spark, path, dim=2, lease_timeout_ms=0)
+    other.upsert(_kv(spark, ("k3", [3.0, 3.0])))
+    reads = []
+
+    def counting_log():
+        reads.append(1)
+        return orig_log()
+
+    col._log = counting_log
+    col.upsert(_kv(spark, ("k4", [4.0, 4.0])))
+    del col._log
+    assert reads == [1]  # the foreign write forced exactly one re-read
+    seqs = {r.key: r.seq for r in spark.read.parquet(path).collect()}
+    assert seqs == {"k1": 1, "k2": 2, "k3": 3, "k4": 4}
 
 
-def test_leased_section_orders_across_sessions(spark, tmp_path):
-    """The cached floor must still order a leased section's writes
-    ABOVE everything a previous session committed — and the section's
-    own upsert+delete must resolve in section order."""
+def test_fresh_handle_orders_above_other_sessions(spark, tmp_path):
+    """A fresh collection object reads the floor on its first write, so
+    its writes order ABOVE everything a previous session committed —
+    and its own upsert then delete resolve in call order."""
     path = str(tmp_path / "col2")
     a = VectorCollection(spark, path, dim=2)
-    a.upsert(
-        spark.createDataFrame(
-            [("k", [1.0, 1.0])], "key string, embedding array<float>"
-        )
-    )
+    a.upsert(_kv(spark, ("k", [1.0, 1.0])))
     b = VectorCollection(spark, path, dim=2)
-    with b.leased():
-        b.upsert(
-            spark.createDataFrame(
-                [("k", [2.0, 2.0])], "key string, embedding array<float>"
-            )
-        )
-        b.delete_keys(["k"])
+    b.upsert(_kv(spark, ("k", [2.0, 2.0])))
+    b.delete_keys(["k"])
     assert b.snapshot().count() == 0  # the delete won (ordered last)
     seqs = sorted(
         r.seq for r in spark.read.parquet(path).select("seq").collect()
@@ -192,21 +193,32 @@ def test_leased_section_orders_across_sessions(spark, tmp_path):
 
 
 def test_ingest_batch_shape_upsert_then_delete_one_lease(spark, tmp_path):
-    """The streaming ingest micro-batch shape: one leased section,
-    upsert + tombstones, exactly-once resolution intact."""
+    """The streaming ingest micro-batch shape: upserts and tombstones in
+    ONE upsert(rows, delete_keys=...) call — one lease acquisition, one
+    seq on every row it writes, the lease released afterwards."""
     path = str(tmp_path / "col3")
     col = VectorCollection(spark, path, dim=2, lease_timeout_ms=0)
-    with col.leased():
-        col.upsert(
-            spark.createDataFrame(
-                [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
-                "key string, embedding array<float>",
-            )
-        )
-        col.delete_keys_df(
-            spark.createDataFrame([("a",)], "key string")
-        )
+    col.upsert(_kv(spark, ("c", [1.0, 1.0])))
+    acquired = []
+    orig = col._writer_lease
+
+    def spy():
+        lease = orig()
+        acquired.append(lease)
+        return lease
+
+    col._writer_lease = spy
+    col.upsert(
+        _kv(spark, ("a", [1.0, 0.0]), ("b", [0.0, 1.0])),
+        delete_keys=spark.createDataFrame([("c",)], "key string"),
+    )
+    assert len(acquired) == 1
+    written = spark.read.parquet(path).filter(F.col("seq") > 1).collect()
+    assert sorted((r.key, r.op) for r in written) == [
+        ("a", "upsert"), ("b", "upsert"), ("c", "delete"),
+    ]
+    assert {r.seq for r in written} == {2}
     keys = sorted(r.key for r in col.snapshot().select("key").collect())
-    assert keys == ["b"]
-    # the lease was released with the section
-    wait_released(path.rstrip("/") + "._lease", timeout=0)
+    assert keys == ["a", "b"]
+    rec = wait_released(path.rstrip("/") + "._lease", timeout=0)
+    assert rec["owner"] == acquired[0].owner

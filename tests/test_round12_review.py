@@ -8,7 +8,7 @@ their pins in tests/test_epoch_lease.py):
   - within one ingest micro-batch, the LAST event per key wins —
     DELETE-then-PUT keeps the key, PUT-then-DELETE removes it (the old
     upserts-then-tombstones split gave every delete the higher seq);
-  - leased() sections auto-heartbeat (a micro-batch outliving the TTL
+  - the leased append auto-heartbeats (a micro-batch outliving the TTL
     must not present an expired lease to a concurrent compact);
   - the TEXT ingest path drops keys missing from the object store with
     a logged count instead of upserting embed("") for all of them;
@@ -115,13 +115,30 @@ def test_put_then_delete_same_key_one_batch_removes_key(spark, tmp_path):
     assert coll.snapshot().count() == 0
 
 
-def test_leased_section_auto_heartbeats(spark, tmp_path):
+def test_append_auto_heartbeats(spark, tmp_path, monkeypatch):
+    """The write job runs the upstream plan (an ingest batch's
+    embedding UDF included): the lease must be auto-heartbeated while
+    it runs, and the heartbeat stopped by the release."""
     coll = VectorCollection(
         spark=spark, path=str(tmp_path / "c"), dim=DIM, name="t"
     ).ensure_exists()
-    with coll.leased() as lease:
-        assert lease._auto_hb, "leased() must arm the auto-heartbeat"
-    assert lease._stop.is_set(), "release must stop the heartbeat thread"
+    leases, armed = [], []
+    writer_cls = type(spark.range(1).write)
+    orig_lease, orig_parquet = coll._writer_lease, writer_cls.parquet
+
+    def spy_lease():
+        leases.append(orig_lease())
+        return leases[-1]
+
+    def spy_parquet(self, *a, **k):
+        armed.append(leases[-1]._auto_hb and not leases[-1]._stop.is_set())
+        return orig_parquet(self, *a, **k)
+
+    coll._writer_lease = spy_lease
+    monkeypatch.setattr(writer_cls, "parquet", spy_parquet)
+    coll.upsert(_rows(spark, [("k", [1.0, 0.0, 0.0, 0.0], None)]))
+    assert armed == [True], "_append must arm the auto-heartbeat"
+    assert leases[0]._stop.is_set(), "release must stop the heartbeat thread"
 
 
 def test_text_ingest_drops_missing_object_text(spark, tmp_path):
