@@ -5,11 +5,13 @@ Spark-native equivalent of the reference's delegated Milvus index
 (milvus-app/pythonvectordbceph_milvus.py:100-102).
 
 Design (scale-first):
-  build:  MLlib KMeans fits ``nlist`` centroids on a sample; every row
-          gets a ``cluster_id``; the table is WRITTEN partitioned by
-          ``cluster_id``. At 100 TB the write is a single shuffle and
-          thereafter every probe is partition-pruned at the parquet
-          scan — Spark reads only nprobe/nlist of the data.
+  build:  KMeans fits ``nlist`` centroids on a bounded sample; one
+          Arrow-batch kernel gives every row its ``cluster_id`` (the
+          same kernel assigns incremental adds); the table is WRITTEN
+          partitioned by ``cluster_id``. At 100 TB the write is a
+          single shuffle and thereafter every probe is partition-pruned
+          at the parquet scan — Spark reads only nprobe/nlist of the
+          data.
   probe:  rank centroids by distance to the query (driver-side — the
           centroid table is nlist×dim, tiny), take the ``nprobe``
           nearest cluster ids, ``filter(cluster_id IN probes)`` (static
@@ -23,7 +25,8 @@ from __future__ import annotations
 
 import logging
 import math
-from dataclasses import dataclass
+import time
+from dataclasses import dataclass, replace
 from typing import Iterator
 
 import pandas as pd
@@ -40,6 +43,14 @@ from pyspark.sql.types import (
 
 from ..functions import vector as V
 from .knn import topk_by_distance
+from .lease import (
+    LedgerLockedError,
+    acquire_writer_lease,
+    recover_swap,
+    sibling_lease_path,
+    swap_dirs,
+)
+from .merge import _fs
 
 _log = logging.getLogger(__name__)
 
@@ -138,7 +149,7 @@ def _argmin_chunked(X, C, chunk: int = 8192):
         d *= -2.0
         d += c2[None, :]
         # np.argmin takes the FIRST minimum — the lowest cluster_id,
-        # the same tiebreak probe_clusters and assign_new use
+        # the same tiebreak probe_clusters uses
         out[s:s + chunk] = np.argmin(d, axis=1)
     return out
 
@@ -186,17 +197,19 @@ def _kmeans_fit_driver(X, nlist: int, seed: int, max_iter: int,
 def _assign_udf(centroids):
     """Vectorized nearest-centroid assignment: one BLAS matmul per
     Arrow batch (the srp_signatures pattern) instead of a per-row
-    JVM/Python prediction. NULL or wrong-dimension vectors RAISE (the
-    r14 advice: the MLlib path this replaced failed loudly, and a
-    silently NULL-assigned row would vanish from every probe filter
-    and land in __HIVE_DEFAULT_PARTITION__ on write_partitioned —
-    assign_new is the path with the counted-drop contract for dirty
-    ingest batches; the BUILD contract requires clean input). The
-    check is in-batch — zero extra Spark jobs."""
+    JVM/Python prediction. The ONE assignment kernel: build_ivf
+    assigns every row with it and assign_new every added row, so an
+    added vector lands in exactly the list the build would give it.
+    NULL or wrong-dimension vectors RAISE (the r14 advice: the MLlib
+    path this replaced failed loudly, and a silently NULL-assigned row
+    would vanish from every probe filter and land in
+    __HIVE_DEFAULT_PARTITION__ on write_partitioned — assign_new drops
+    such rows with a logged count before calling the kernel; the BUILD
+    contract requires clean input). The check is in-batch — zero extra
+    Spark jobs."""
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
-    c2 = (C * C).sum(1)
     dim = C.shape[1]
 
     @F.pandas_udf("int")
@@ -216,10 +229,7 @@ def _assign_udf(centroids):
                     "through assign_new's counted-drop path"
                 )
             X = np.stack([np.asarray(v, dtype=np.float64) for v in vals])
-            d = X @ C.T
-            d *= -2.0
-            d += c2[None, :]
-            yield pd.Series(np.argmin(d, axis=1)).astype("Int32")
+            yield pd.Series(_argmin_chunked(X, C)).astype("Int32")
 
     # the probe filter (cluster_id IN (...)) references the UDF's
     # output column, and the optimizer's filter pushdown would
@@ -426,8 +436,6 @@ def record_recall_curve(
 
 
 def _read_curve(spark, assigned_path: str) -> list[tuple[int, float]] | None:
-    from .merge import _fs
-
     fs, hpath = _fs(spark, assigned_path)
     loc = f"{assigned_path}/{_CURVE_SIDECAR}"
     if not fs.exists(hpath(loc)):
@@ -436,6 +444,23 @@ def _read_curve(spark, assigned_path: str) -> list[tuple[int, float]] | None:
         (int(r.nprobe), float(r.recall))
         for r in spark.read.parquet(loc).collect()
     )
+
+
+def _write_layout(
+    index: IVFIndex, assigned_path: str, record_curve: bool,
+    curve_k: int, curve_queries: int,
+) -> None:
+    """Write one complete inverted-file layout at ``assigned_path``:
+    the partitioned data, then the ``_meta`` centroid sidecar inside
+    it, then (``record_curve``) the measured recall curve. save_ivf
+    writes it in place; rebuild_ivf stages it in a temp directory and
+    swaps it in."""
+    write_partitioned(index, assigned_path)
+    _write_meta(index.assigned.sparkSession, index, f"{assigned_path}/_meta")
+    if record_curve:
+        record_recall_curve(
+            index, assigned_path, k=curve_k, n_queries=curve_queries
+        )
 
 
 def save_ivf(
@@ -464,31 +489,31 @@ def save_ivf(
     recall-vs-nprobe curve (record_recall_curve) next to the _meta
     sidecar, enabling ``target_recall=`` searches on the loaded
     index."""
-    spark = index.assigned.sparkSession
-    write_partitioned(index, f"{path}/assigned")
-    _write_meta(spark, index, f"{path}/assigned/_meta")
-    if record_curve:
-        record_recall_curve(
-            index, f"{path}/assigned", k=curve_k, n_queries=curve_queries
-        )
+    _write_layout(
+        index, f"{path}/assigned", record_curve, curve_k, curve_queries
+    )
 
 
-def _read_meta(spark, root: str):
-    """Sorted sidecar rows, probing the canonical location (inside
-    ``assigned``) first, then the legacy sibling ``root/_meta``.
-    Existence goes through the Hadoop FS so a missing directory raises
-    the intended FileNotFoundError, not a raw AnalysisException."""
-    from .merge import _fs
-
-    fs, hpath = _fs(spark, root)
-    for loc in (f"{root}/assigned/_meta", f"{root}/_meta"):
+def _read_meta(spark, assigned_path: str):
+    """Sorted sidecar rows of the layout at ``assigned_path``, or None.
+    Probes the canonical location (inside the layout) first, then the
+    legacy sibling ``<root>/_meta`` of a ``<root>/assigned`` layout
+    saved before the sidecar moved inside. Existence goes through the
+    Hadoop FS, so a missing directory reads as None, not a raw
+    AnalysisException."""
+    fs, hpath = _fs(spark, assigned_path)
+    locs = [f"{assigned_path}/_meta"]
+    root, _, name = assigned_path.rstrip("/").rpartition("/")
+    if name == "assigned":
+        locs.append(f"{root}/_meta")
+    for loc in locs:
         if fs.exists(hpath(loc)):
             rows = sorted(
                 spark.read.parquet(loc).collect(), key=lambda r: r.cluster_id
             )
             if rows:
                 return rows
-    raise FileNotFoundError(f"no IVF metadata under {root}/assigned/_meta")
+    return None
 
 
 def load_ivf(spark, path: str) -> IVFIndex:
@@ -505,14 +530,17 @@ def load_ivf(spark, path: str) -> IVFIndex:
     valid by construction) is visible to the next load_ivf/search —
     the persisted index IS the live index, exactly the backend-index
     contract the reference delegates."""
-    _reader_precheck(spark, f"{path}/assigned")
-    meta = _read_meta(spark, path)
+    assigned = f"{path}/assigned"
+    _reader_precheck(spark, assigned)
+    meta = _read_meta(spark, assigned)
+    if meta is None:
+        raise FileNotFoundError(f"no IVF metadata under {assigned}/_meta")
     return IVFIndex(
-        assigned=spark.read.parquet(f"{path}/assigned"),
+        assigned=spark.read.parquet(assigned),
         centroids=[[float(x) for x in r.centroid] for r in meta],
         vec_col=meta[0].vec_col,
         id_col=meta[0].id_col,
-        curve=_read_curve(spark, f"{path}/assigned"),
+        curve=_read_curve(spark, assigned),
     )
 
 
@@ -523,27 +551,21 @@ def assign_new(index: IVFIndex, new_df: DataFrame) -> DataFrame:
     it does not refit nlist=16384 per PUT). No KMeans refit, no touch
     of already-assigned rows.
 
-    Plan: the centroid table (nlist×dim — tiny even at nlist=16384)
-    broadcasts; the batch crossJoins it (|batch|·nlist rows, bounded
-    by the BATCH size, not the table) and argmin-reduces per id with
-    a rank window — all JVM-side expression math. Assignment uses the
-    same exact L2 the fit used, so an added vector lands in the same
-    list a full rebuild would give it (drift from stale centroids is
-    the standard IVF trade-off; periodic rebuild_ivf handles it).
+    Plan: one counting job drops (with a logged count per kind) the
+    rows that have no nearest centroid — NULL or wrong-dimension
+    vectors — then the build's own Arrow-batch kernel (_assign_udf)
+    assigns the rest: map-side, O(|batch| × nlist × dim) flops, no
+    join and no shuffle. Because it is the kernel build_ivf uses, an
+    added vector lands in exactly the list a build with the same
+    centroids gives it, ties to the lowest cluster id (drift from
+    stale centroids is the standard IVF trade-off; periodic
+    rebuild_ivf handles it). Every input row is kept, so an id
+    delivered twice in one batch stays twice (the at-least-once
+    semantics of the maintenance stream).
 
     Returns the assigned batch (new_df columns + cluster_id), ready
     for ``append_partitioned`` and/or a new IVFIndex via unionByName.
     """
-    from pyspark.sql import Window
-
-    spark = new_df.sparkSession
-    # rows with a NULL or WRONG-DIMENSION embedding can't be assigned:
-    # both yield a NULL _d2 against every centroid, and with the
-    # nulls-last + cluster_id tiebreak ranking such a row would be
-    # silently assigned to cluster 0 — the inverted-list pollution
-    # this guard exists to eliminate. Drop both shapes with the same
-    # logged-count contract the ingest guards use (ONE counting job
-    # for both kinds, same job count as the old null-only guard).
     dim = len(index.centroids[0]) if index.centroids else 0
     vec = F.col(index.vec_col)
     counts = new_df.select(
@@ -567,120 +589,111 @@ def assign_new(index: IVFIndex, new_df: DataFrame) -> DataFrame:
         )
     if counts["n_null"] or counts["n_dim"]:
         new_df = new_df.filter(vec.isNotNull() & (F.size(vec) == dim))
-    cents = F.broadcast(
-        spark.createDataFrame(
-            [(cid, c) for cid, c in enumerate(index.centroids)],
-            "cluster_id int, _cent array<double>",
-        )
-    )
-    d2 = V.squared_l2(F.col(index.vec_col).cast("array<double>"), F.col("_cent"))
-    # rank per INPUT ROW, not per id: an at-least-once source can
-    # re-deliver the same id twice in one batch (possibly with
-    # different payloads), and a per-id window would silently collapse
-    # them to one arbitrary row — the append keeps every input row and
-    # leaves duplicate-id resolution to the documented at-least-once
-    # semantics of the maintenance stream
-    w = Window.partitionBy("_row").orderBy(
-        F.col("_d2").asc_nulls_last(), F.col("cluster_id").asc()
-    )
-    return (
-        new_df.withColumn("_row", F.monotonically_increasing_id())
-        .crossJoin(cents)
-        .withColumn("_d2", d2)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_d2", "_cent", "_row")
-    )
+    return new_df.withColumn("cluster_id", _assign_udf(index.centroids)(vec))
 
 
 def ivf_add(index: IVFIndex, new_df: DataFrame) -> IVFIndex:
-    """Incrementally extended index: same centroids, batch appended."""
-    assigned_new = assign_new(index, new_df)
-    return IVFIndex(
-        assigned=index.assigned.unionByName(assigned_new),
-        centroids=index.centroids,
-        vec_col=index.vec_col,
-        id_col=index.id_col,
+    """Incrementally extended index: same centroids, batch appended
+    (a recorded recall curve described the old lists and is dropped)."""
+    return replace(
+        index, assigned=index.assigned.unionByName(assign_new(index, new_df)),
+        curve=None,
     )
-
-
-def ivf_lease_path(path: str) -> str:
-    """The single-writer lease file guarding the inverted-file layout
-    at ``path`` — a SIBLING (``<path>._lease``), because the rebuild's
-    two-rename swap replaces the directory itself: a lease stored
-    inside would swap out with the data it guards. Shared by the
-    maintenance writers: ``stream_into_ivf`` holds it for the stream's
-    lifetime; ``rebuild_ivf``/``rebuild_saved_ivf`` hold it across the
-    refit+swap. Without it, an append racing the swap either vanishes
-    with the ``._old`` directory (silently lost rows) or recreates the
-    live path between the two renames and wedges the rollback."""
-    from .lease import sibling_lease_path
-
-    return sibling_lease_path(path)
 
 
 def rebuild_ivf(
     spark,
     path: str,
-    nlist: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    nlist: int | None = None,
+    vec_col: str | None = None,
+    id_col: str | None = None,
     seed: int = 42,
     max_iter: int = 20,
     lease_timeout_ms: int | None = None,
+    record_curve: bool = False,
+    curve_k: int = 5,
+    curve_queries: int = 32,
 ) -> IVFIndex:
-    """Periodic offline index rebuild: refit the coarse quantizer on
-    the CURRENT on-disk vectors (incremental adds drift away from the
-    centroids they were assigned to), reassign every row, and swap the
-    new layout in atomically. This is the maintenance job the IVF
-    docstrings defer drift handling to — the Spark analog of rotating
-    index segments in an ANN serving stack.
+    """Periodic offline index rebuild of the inverted-file layout at
+    ``path``: refit the coarse quantizer on the CURRENT on-disk
+    vectors (incremental adds drift away from the centroids they were
+    assigned to), reassign every row, and swap the new layout in
+    atomically — the Spark analog of rotating index segments in an ANN
+    serving stack. The one rebuild: rebuild_saved_ivf runs it on a
+    saved index's ``root/assigned``.
 
-    Crash-safe the same way collection.compact() is: ONE write to a
-    sibling temp dir, then a two-rename swap (each rename atomic on
-    HDFS/POSIX). A crash between renames leaves the old layout at
-    ``path + '._old'`` with the live path absent; the next
-    rebuild/load heals it (:func:`_recover_swap`). Readers opened
-    after the swap see only the new layout; the refreshByPath drops
-    any cached file listings.
+    Under the lease it reads the layout's ``_meta`` sidecar when one
+    exists: ``vec_col``, ``id_col`` and ``nlist`` default to the saved
+    index's columns and geometry (else "embedding", "vec_id", 16), so
+    a default-arg rebuild refreshes centroids without changing how many
+    inverted lists exist.
+
+    ONE staged write to ``path._rebuild`` — the data, a fresh
+    ``_meta`` sidecar and, with ``record_curve=True``, the recall curve
+    measured on the new index (record_recall_curve) — then the shared
+    two-rename swap (lease.swap_dirs). Data, centroids and curve
+    become visible together, so a reader (concurrent or post-crash)
+    sees old data + old centroids or new + new, never a mixed pair. A
+    rebuild without ``record_curve`` deliberately DROPS the previous
+    curve with the old directory: it described the old centroids. A
+    crash between the renames leaves the old layout at
+    ``path._old``; the next rebuild or load_ivf heals it
+    (lease.recover_swap).
+
+    SINGLE WRITER — ENFORCED: holds the layout's sibling writer lease
+    (``<path>._lease``, the one ``stream_into_ivf`` holds) from before
+    the source read to after the swap, auto-heartbeated because a
+    large refit can outlive the TTL; raises LedgerLockedError if a
+    maintenance stream or another rebuild holds it. An append racing
+    the swap would otherwise be deleted with the old directory.
 
     Returns the fresh IVFIndex whose ``assigned`` reads from ``path``.
-
-    SINGLE WRITER — ENFORCED: holds the layout's writer lease
-    (:func:`ivf_lease_path`) from before the source read to after the
-    swap; raises LedgerLockedError if a maintenance stream (or another
-    rebuild) holds it. An append racing the swap would otherwise be
-    silently deleted with the old directory.
     """
-    from .lease import acquire_writer_lease
-
     _kw = {} if lease_timeout_ms is None else {"timeout_ms": lease_timeout_ms}
     lease = acquire_writer_lease(
-        spark, path, lease_path=ivf_lease_path(path), **_kw
+        spark, path, lease_path=sibling_lease_path(path), **_kw
     )
-    # a 100 TB refit can outlive the TTL — keep the lease fresh so a
-    # maintenance stream can't legitimately break it mid-rebuild
     lease.start_auto_heartbeat()
     try:
-        _recover_swap(spark, path, op="rebuild_ivf")
-        current = spark.read.parquet(path).drop("cluster_id")
+        recover_swap(spark, path, op="rebuild_ivf")
+        meta = _read_meta(spark, path)
+        if meta is not None:
+            vec_col = vec_col or meta[0].vec_col
+            id_col = id_col or meta[0].id_col
+            nlist = nlist or len(meta)
         index = build_ivf(
-            current, nlist=nlist, vec_col=vec_col, id_col=id_col,
+            spark.read.parquet(path).drop("cluster_id"), nlist=nlist or 16,
+            vec_col=vec_col or "embedding", id_col=id_col or "vec_id",
             seed=seed, max_iter=max_iter,
         )
         tmp = path + "._rebuild"
-        _canonical_f32(index.assigned, vec_col).write.mode(
-            "overwrite"
-        ).partitionBy("cluster_id").parquet(tmp)
-        _swap_dirs(spark, tmp, path, op="rebuild_ivf")
+        _write_layout(index, tmp, record_curve, curve_k, curve_queries)
+        swap_dirs(spark, tmp, path, op="rebuild_ivf")
     finally:
         lease.release()
-    return IVFIndex(
-        assigned=spark.read.parquet(path),
-        centroids=index.centroids,
-        vec_col=vec_col,
-        id_col=id_col,
+    return replace(index, assigned=spark.read.parquet(path))
+
+
+def rebuild_saved_ivf(
+    spark, root: str, nlist: int | None = None, seed: int = 42,
+    max_iter: int = 20, lease_timeout_ms: int | None = None,
+    record_curve: bool = False, curve_k: int = 5, curve_queries: int = 32,
+) -> IVFIndex:
+    """Rebuild a SAVED index in place (the save_ivf layout): this is
+    :func:`rebuild_ivf` on ``root/assigned``, whose sidecar supplies
+    the columns and the default ``nlist``, followed by the delete of a
+    legacy sibling ``root/_meta`` (the layout before the sidecar moved
+    inside ``assigned``) — stale once the swap has published the new
+    sidecar, so nothing can read old centroids again."""
+    index = rebuild_ivf(
+        spark, f"{root}/assigned", nlist=nlist, seed=seed,
+        max_iter=max_iter, lease_timeout_ms=lease_timeout_ms,
+        record_curve=record_curve, curve_k=curve_k,
+        curve_queries=curve_queries,
     )
+    fs, hpath = _fs(spark, root)
+    fs.delete(hpath(f"{root}/_meta"), True)
+    return index
 
 
 def _reader_precheck(
@@ -698,12 +711,7 @@ def _reader_precheck(
     expired/released lease is claimable immediately; a live or
     TTL-fresh one is not), and raise with the recovery hint if a
     writer still holds it."""
-    import time
-
-    from .lease import LedgerLockedError, acquire_writer_lease
-
-    hpath = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, hpath = _fs(spark, path)
     old = path + "._old"
     for _ in range(max(1, polls)):
         if fs.exists(hpath(path)) or not fs.exists(hpath(old)):
@@ -711,7 +719,7 @@ def _reader_precheck(
         time.sleep(poll_s)
     try:
         lease = acquire_writer_lease(
-            spark, path, lease_path=ivf_lease_path(path), timeout_ms=0
+            spark, path, lease_path=sibling_lease_path(path), timeout_ms=0
         )
     except LedgerLockedError as e:
         raise IOError(
@@ -721,162 +729,9 @@ def _reader_precheck(
             "to recover if the writer is dead"
         ) from e
     try:
-        _recover_swap(spark, path, op="load_ivf")
+        recover_swap(spark, path, op="load_ivf")
     finally:
         lease.release()
-
-
-def _recover_swap(spark, path: str, op: str, _fs_pair=None) -> bool:
-    """Heal a crash that landed BETWEEN _swap_dirs' two renames: the
-    live path is absent but ``path._old`` (the renamed-aside previous
-    layout) exists — rename it back so readers and rebuilds see the
-    pre-swap index instead of a missing one. LEASE-HOLDING CALLERS
-    ONLY (rebuild_ivf, rebuild_saved_ivf, and load_ivf's
-    _reader_precheck after it takes the lease): renaming without the
-    lease races a live rebuild's own swap. A no-op (False) when the
-    layout is healthy. ``_fs_pair`` injects (fs, hpath) — tests only,
-    to pin the lost-rename-race branch below deterministically."""
-    if _fs_pair is not None:
-        fs, hpath = _fs_pair
-    else:
-        hpath = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    old = path + "._old"
-    if fs.exists(hpath(path)) or not fs.exists(hpath(old)):
-        return False
-    if not fs.rename(hpath(old), hpath(path)):
-        # a concurrent recoverer (or the writer itself) may have healed
-        # the layout between our existence check and the rename — a
-        # healthy index must not read as a hard failure
-        if fs.exists(hpath(path)):
-            spark.catalog.refreshByPath(path)
-            return True
-        raise IOError(
-            f"{op}: crash-recovery rename {old} -> {path} failed; "
-            "restore the layout manually before retrying"
-        )
-    _log.warning(
-        "%s: recovered index at %s from an interrupted swap "
-        "(previous layout restored from %s)", op, path, old,
-    )
-    spark.catalog.refreshByPath(path)
-    return True
-
-
-def _swap_dirs(spark, tmp: str, path: str, op: str) -> None:
-    """Two-rename directory swap (each rename atomic on HDFS/POSIX):
-    ``path`` → ``path._old`` → delete, ``tmp`` → ``path``. A crash
-    between the renames leaves the live path ABSENT with the old
-    layout intact at ``path._old``; recovery is NOT automatic at the
-    crash site — the next load_ivf/rebuild_saved_ivf heals it via
-    :func:`_recover_swap` (readers in the crash-to-recovery window see
-    path-not-found, never mixed or lost data). Drops cached file
-    listings afterwards so already-open sessions re-list."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = hpath(tmp).getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    old = path + "._old"
-    fs.delete(hpath(old), True)  # leftover from a prior crash
-    if not fs.rename(hpath(path), hpath(old)):
-        raise IOError(
-            f"{op}: rename {path} -> {old} failed; "
-            "live index untouched, rebuilt layout at the temp path"
-        )
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(old), hpath(path))  # roll back
-        raise IOError(
-            f"{op}: rename {tmp} -> {path} failed; "
-            "old index restored, rebuilt layout at the temp path"
-        )
-    fs.delete(hpath(old), True)
-    spark.catalog.refreshByPath(path)
-
-
-def rebuild_saved_ivf(
-    spark, root: str, nlist: int | None = None, seed: int = 42,
-    max_iter: int = 20, lease_timeout_ms: int | None = None,
-    record_curve: bool = False, curve_k: int = 5, curve_queries: int = 32,
-) -> IVFIndex:
-    """Rebuild a SAVED index in place (the save_ivf layout:
-    ``root/assigned`` with the ``_meta`` sidecar inside), refreshing
-    BOTH halves at ONE visibility point. Calling bare rebuild_ivf on
-    ``root/assigned`` would refit the centroids and swap the data
-    while leaving the sidecar stale — a later load_ivf would then rank
-    probes with the OLD centroids against the NEW cluster ids and
-    silently search the wrong inverted lists. This wrapper stages the
-    rebuilt layout AND the fresh sidecar in the temp directory, then
-    runs the same two-rename swap — a reader (concurrent or
-    post-crash) sees old data + old centroids or new data + new
-    centroids, never a mixed pair.
-
-    ``nlist`` defaults to the SAVED index's geometry (the sidecar row
-    count) — a default-arg rebuild refreshes centroids without
-    silently changing how many inverted lists exist.
-
-    SINGLE WRITER — ENFORCED: holds ``root/assigned``'s writer lease
-    (the SAME lease ``stream_into_ivf`` holds when pointed at the
-    saved layout) across the refit+swap — a racing maintenance stream
-    fails fast instead of having its appended batch deleted with the
-    old directory."""
-    from .lease import acquire_writer_lease
-
-    assigned_path = f"{root}/assigned"
-    _kw = {} if lease_timeout_ms is None else {"timeout_ms": lease_timeout_ms}
-    lease = acquire_writer_lease(
-        spark, assigned_path, lease_path=ivf_lease_path(assigned_path), **_kw
-    )
-    lease.start_auto_heartbeat()  # refit can outlive the TTL
-    # meta is read AFTER the lease: reading it before could observe
-    # another rebuild's in-flight swap (path momentarily absent → a
-    # spurious FileNotFoundError on a healthy index, or a pre-swap
-    # sidecar whose geometry is superseded the instant that writer
-    # releases)
-    try:
-        _recover_swap(spark, assigned_path, op="rebuild_saved_ivf")
-        meta = _read_meta(spark, root)
-    except Exception:
-        lease.release()
-        raise
-    vec_col, id_col = meta[0].vec_col, meta[0].id_col
-    if nlist is None:
-        nlist = len(meta)
-    try:
-        current = spark.read.parquet(assigned_path).drop("cluster_id")
-        index = build_ivf(
-            current, nlist=nlist, vec_col=vec_col, id_col=id_col,
-            seed=seed, max_iter=max_iter,
-        )
-        tmp = assigned_path + "._rebuild"
-        _canonical_f32(index.assigned, vec_col).write.mode(
-            "overwrite"
-        ).partitionBy("cluster_id").parquet(tmp)
-        _write_meta(spark, index, f"{tmp}/_meta")  # staged WITH the data
-        if record_curve:
-            # measured on the fresh index, STAGED with its data — the
-            # swap publishes data + centroids + curve at one visibility
-            # point. A plain rebuild (record_curve=False) deliberately
-            # DROPS any previous curve with the old directory: the old
-            # measurements described the old centroids, and a stale
-            # curve silently surviving a rebuild is exactly the
-            # mixed-metadata hazard the swap discipline exists to stop.
-            record_recall_curve(
-                index, tmp, k=curve_k, n_queries=curve_queries
-            )
-        _swap_dirs(spark, tmp, assigned_path, op="rebuild_saved_ivf")
-        # a legacy sibling sidecar (pre-r10 layout) is now stale —
-        # remove it so nothing can ever read old centroids again; safe
-        # after the swap because the canonical sidecar is already live
-        from .merge import _fs
-
-        fs, hpath = _fs(spark, root)
-        fs.delete(hpath(f"{root}/_meta"), True)
-    finally:
-        lease.release()
-    return IVFIndex(
-        assigned=spark.read.parquet(assigned_path),
-        centroids=index.centroids,
-        vec_col=vec_col,
-        id_col=id_col,
-    )
 
 
 def append_partitioned(
@@ -915,9 +770,9 @@ def search_batch(
     ``max_driver_batch`` queries it resolves DRIVER-side (|Q| × nlist
     × dim flops on tiny tables, broadcast back). Above the cap — the
     API accepts any DataFrame, and a million-row "query batch" must
-    not materialize on the driver — it switches to the same
-    broadcast-centroid crossJoin + per-query rank the incremental-add
-    path (assign_new) uses: fully distributed, no collect anywhere,
+    not materialize on the driver — it switches to a broadcast-
+    centroid crossJoin + per-query rank of the top ``nprobe`` lists
+    (probe_clusters' order): fully distributed, no collect anywhere,
     and the probe join loses its broadcast hint (a corpus-sized probe
     side shouldn't broadcast; AQE picks the join strategy).
 

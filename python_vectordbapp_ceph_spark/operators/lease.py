@@ -78,14 +78,17 @@ puts) — the Spark rebuild owns its layouts, so it owns the lock.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 import uuid
 
 from pyspark.sql import SparkSession
 
-from .merge import _COMMITS
+from .merge import _COMMITS, _fs
 from .publish import HadoopFsOps, backend_for
+
+_log = logging.getLogger(__name__)
 
 LEASE_FILE = "_writer.lease"
 # Generous enough that no single micro-batch outlives it (and the
@@ -114,6 +117,71 @@ def sibling_lease_path(path: str) -> str:
     guards, so it lives as a sibling ``<path>._lease`` (its records
     under ``<path>._lease.epochs/``)."""
     return path.rstrip("/") + "._lease"
+
+
+def swap_dirs(spark: SparkSession, tmp: str, path: str, op: str) -> None:
+    """Replace the directory ``path`` with the staged ``tmp`` by two
+    renames, each atomic on HDFS/POSIX: ``path`` → ``path._old``, then
+    ``tmp`` → ``path``, then delete ``path._old``. The IVF rebuild and
+    the collection compaction both publish through it, holding the
+    layout's sibling writer lease (:func:`sibling_lease_path`).
+
+    A crash between the renames leaves the live path ABSENT with the
+    old layout intact at ``path._old``; the next lease holder heals it
+    with :func:`recover_swap`, so a reader in the crash-to-recovery
+    window sees path-not-found, never mixed or lost data. A
+    ``path._old`` found next to a live path is a finished swap's
+    leftover and is deleted first. Drops cached file listings
+    afterwards so already-open sessions re-list."""
+    fs, hpath = _fs(spark, tmp)
+    old = path + "._old"
+    fs.delete(hpath(old), True)
+    if not fs.rename(hpath(path), hpath(old)):
+        raise IOError(
+            f"{op}: rename {path} -> {old} failed; "
+            "live layout untouched, new layout at the temp path"
+        )
+    if not fs.rename(hpath(tmp), hpath(path)):
+        fs.rename(hpath(old), hpath(path))  # roll back
+        raise IOError(
+            f"{op}: rename {tmp} -> {path} failed; "
+            "old layout restored, new layout at the temp path"
+        )
+    fs.delete(hpath(old), True)
+    spark.catalog.refreshByPath(path)
+
+
+def recover_swap(spark: SparkSession, path: str, op: str, _fs_pair=None) -> bool:
+    """Heal a crash that landed BETWEEN :func:`swap_dirs`' two renames:
+    the live path is absent but ``path._old`` exists — rename it back
+    so readers and writers see the pre-swap layout instead of a
+    missing one. Returns True if it restored the layout; a healthy
+    layout costs one ``exists()`` call and returns False.
+
+    LEASE-HOLDING CALLERS ONLY: renaming without the lease races a
+    live writer's own swap. ``_fs_pair`` injects (fs, hpath) — tests
+    only, to pin the lost-rename-race branch deterministically."""
+    fs, hpath = _fs_pair or _fs(spark, path)
+    old = path + "._old"
+    if fs.exists(hpath(path)) or not fs.exists(hpath(old)):
+        return False
+    if not fs.rename(hpath(old), hpath(path)):
+        # a concurrent recoverer (or the writer itself) may have healed
+        # the layout between our existence check and the rename — a
+        # healthy layout must not read as a hard failure
+        if fs.exists(hpath(path)):
+            spark.catalog.refreshByPath(path)
+            return True
+        raise IOError(
+            f"{op}: crash-recovery rename {old} -> {path} failed; "
+            "restore the layout manually before retrying"
+        )
+    _log.warning(
+        "%s: recovered %s from an interrupted swap "
+        "(previous layout restored from %s)", op, path, old,
+    )
+    spark.catalog.refreshByPath(path)
+    return True
 
 
 class EpochWriterLease:

@@ -9,7 +9,8 @@ Here the same contract runs as Structured Streaming:
 
     readStream(vector batches)
       → foreachBatch:
-          assign_new(index, batch)      # broadcast-centroid argmin,
+          assign_new(index, batch)      # build_ivf's Arrow-batch
+                                        # argmin kernel, map-side,
                                         # O(batch × nlist), no refit
           append_partitioned(...)       # writes ONLY the cluster dirs
                                         # the batch lands in
@@ -28,12 +29,12 @@ are acceptable (e.g. recall evaluation); route through the collection
 otherwise.
 
 At 100 TB: the streaming batch is the only thing in flight —
-assignment is a map-side argmin against broadcast centroids, the
-shuffle for the partitionBy append carries batch-sized data, and the
-index at rest is never rewritten. Centroid drift under distribution
-shift is handled by periodic offline ``rebuild_ivf`` runs (refit +
-reassign + atomic two-rename swap), exactly as IVF deployments rotate
-segments.
+assignment is the build's map-side argmin kernel with the centroids
+shipped in the closure, the shuffle for the partitionBy append
+carries batch-sized data, and the index at rest is never rewritten.
+Centroid drift under distribution shift is handled by periodic
+offline ``rebuild_ivf`` runs (refit + reassign + the shared
+two-rename swap), exactly as IVF deployments rotate segments.
 """
 
 from __future__ import annotations
@@ -41,11 +42,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.ivf import IVFIndex, assign_new, append_partitioned, ivf_lease_path
+from ..operators.ivf import IVFIndex, assign_new, append_partitioned
 from ..operators.lease import (
     LEASE_TTL_MS,
     acquire_writer_lease,
     release_on_termination,
+    sibling_lease_path,
 )
 
 
@@ -81,7 +83,7 @@ def stream_into_ivf(
     }
     lease = acquire_writer_lease(
         spark, path, ttl_ms=lease_ttl_ms, steal=steal_lease,
-        lease_path=ivf_lease_path(path), **lease_kwargs,
+        lease_path=sibling_lease_path(path), **lease_kwargs,
     )
     # survive idle source gaps longer than the TTL (see shard_ingest)
     lease.start_auto_heartbeat()

@@ -371,3 +371,55 @@ def test_bad_query_vector_raises(spark, coll, method, qvec):
     coll.upsert(make_rows(spark, [("k1", [1.0, 0.0, 0.0, 0.0], None)]))
     with pytest.raises(ValueError, match="query vector"):
         getattr(coll, method)(qvec, k=1)
+
+
+def _crash_mid_compact(path):
+    """The state a crash between compact's two renames leaves: the
+    live log renamed aside to ``._old``, the new one never arrived."""
+    import os
+
+    os.rename(path, path + "._old")
+
+
+def test_interrupted_compact_swap_is_healed_by_next_writer(
+    spark, coll, caplog
+):
+    """A compaction that crashed mid-swap loses nothing: the next
+    writer-lease holder renames the old log back before it writes.
+    (a) ensure_exists restores every row (logging the recovery)
+    instead of creating an empty log; (b) an upsert through a fresh
+    handle, without ensure_exists, orders above the restored seqs and
+    a later compact keeps every old row; (c) ``._old`` disappears only
+    by being renamed back."""
+    import logging
+    import os
+
+    path = coll.path
+    keys = [f"k{i}" for i in range(5)]
+    coll.upsert(make_rows(spark, [(k, [1.0, 0.0, 0.0, 0.0], None) for k in keys]))
+    coll.upsert(make_rows(spark, [("k0", [2.0, 0.0, 0.0, 0.0], None)]))
+    old_seq = coll.current_seq
+
+    # (a) ensure_exists on a fresh handle restores the old log
+    _crash_mid_compact(path)
+    with caplog.at_level(logging.WARNING, logger="python_vectordbapp_ceph_spark"):
+        c2 = VectorCollection(spark=spark, path=path, dim=DIM, name="t")
+        c2.ensure_exists()
+    assert any("interrupted swap" in r.getMessage() for r in caplog.records)
+    assert not os.path.exists(path + "._old")  # (c) renamed back, not deleted
+    snap = {r.key: r.embedding for r in c2.snapshot().collect()}
+    assert set(snap) == set(keys) and snap["k0"] == [2.0, 0.0, 0.0, 0.0]
+    assert c2.current_seq == old_seq
+
+    # (b) a plain upsert heals too, and its write orders above history
+    _crash_mid_compact(path)
+    c3 = VectorCollection(spark=spark, path=path, dim=DIM, name="t")
+    c3.upsert(make_rows(spark, [("k0", [3.0, 0.0, 0.0, 0.0], None),
+                                ("new", [0.0, 1.0, 0.0, 0.0], None)]))
+    assert not os.path.exists(path + "._old")  # (c)
+    assert c3.current_seq == old_seq + 1
+    c3.compact()
+    snap = {r.key: r.embedding for r in c3.snapshot().collect()}
+    assert set(snap) == set(keys) | {"new"}
+    assert snap["k0"] == [3.0, 0.0, 0.0, 0.0]
+    assert snap["k1"] == [1.0, 0.0, 0.0, 0.0]

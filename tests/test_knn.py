@@ -407,8 +407,9 @@ def test_bq_hamming_scan_is_jvm_only(vec_df):
 
 def test_ivf_incremental_add_matches_rebuild_assignment(vec_df, spark):
     """assign_new must put each added vector in the cluster whose
-    centroid is truly nearest (numpy argmin oracle), without touching
-    centroids or existing assignments."""
+    centroid is truly nearest (numpy argmin oracle) — the list the
+    build's own kernel gives it — without touching centroids or
+    existing assignments."""
     import numpy as np
 
     from python_vectordbapp_ceph_spark.operators.ivf import assign_new, ivf_add
@@ -427,6 +428,10 @@ def test_ivf_incremental_add_matches_rebuild_assignment(vec_df, spark):
         d2 = ((cents - np.array(r.embedding, dtype=np.float64)) ** 2).sum(axis=1)
         want = int(np.lexsort((np.arange(len(cents)), d2))[0])
         assert got[r.vec_id] == want, (r.vec_id, got[r.vec_id], want)
+    # re-adding the build's own rows reproduces every build assignment
+    built = {r.vec_id: r.cluster_id for r in index.assigned.collect()}
+    readded = assign_new(index, vec_df).collect()
+    assert {r.vec_id: r.cluster_id for r in readded} == built
 
     bigger = ivf_add(index, new)
     assert bigger.centroids == before_centroids
@@ -435,6 +440,45 @@ def test_ivf_incremental_add_matches_rebuild_assignment(vec_df, spark):
     probe_vec = [float(x) for x in new.collect()[0].embedding]
     top = bigger.search(probe_vec, k=1, nprobe=4).collect()[0]
     assert top.vec_id == 1000
+
+
+def test_assign_new_drops_unassignable_rows_keeps_duplicate_ids(
+    vec_df, spark, caplog
+):
+    """NULL and wrong-dimension vectors have no nearest centroid: they
+    are dropped with one logged count per kind, never dumped into
+    cluster 0. Every other input row survives — a duplicate id
+    delivered twice in one batch stays twice (at-least-once append) —
+    and lands in its true nearest list."""
+    import logging
+    import math
+
+    from python_vectordbapp_ceph_spark.operators.ivf import assign_new
+
+    index = build_ivf(vec_df, nlist=4)
+    good = [0.5] * DIM
+    batch = spark.createDataFrame(
+        [
+            (100, good),
+            (100, [-0.5] * DIM),       # duplicate id, different payload
+            (101, None),               # null -> dropped
+            (102, [1.0] * (DIM - 1)),  # dim DIM-1 -> dropped
+            (103, [1.0] * (DIM + 1)),  # dim DIM+1 -> dropped
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    with caplog.at_level(logging.WARNING, logger="python_vectordbapp_ceph_spark"):
+        rows = assign_new(index, batch).collect()
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any("dropping 1 row(s) with NULL" in m for m in msgs)
+    assert any("dropping 2 row(s) whose embedding dimension" in m for m in msgs)
+    assert sorted(r.vec_id for r in rows) == [100, 100]
+    for r in rows:
+        want = min(
+            range(len(index.centroids)),
+            key=lambda c: (math.dist(r.embedding, index.centroids[c]), c),
+        )
+        assert r.cluster_id == want
 
 
 def test_ivf_append_partitioned_only_touches_batch_clusters(vec_df, spark, tmp_path):
@@ -888,6 +932,150 @@ def test_load_ivf_reads_legacy_sibling_sidecar(vec_df, tmp_path, spark):
     want = [r.vec_id for r in index.search(QUERY, k=K, nprobe=2).collect()]
     got = [r.vec_id for r in loaded.search(QUERY, k=K, nprobe=2).collect()]
     assert got == want
+
+
+def test_rebuild_ivf_reads_columns_and_geometry_from_sidecar(spark, tmp_path):
+    """A default-arg rebuild_ivf on a saved layout takes vec_col,
+    id_col and nlist from the layout's _meta sidecar (read under the
+    lease) and stages a fresh sidecar with the data."""
+    from python_vectordbapp_ceph_spark.operators.ivf import (
+        load_ivf,
+        rebuild_ivf,
+        save_ivf,
+    )
+
+    df = spark.createDataFrame(
+        [(f"k{i}", VECS[i].tolist()) for i in range(N)],
+        "key string, vec array<float>",
+    )
+    root = str(tmp_path / "ivf")
+    save_ivf(build_ivf(df, nlist=5, vec_col="vec", id_col="key"), root)
+    rebuilt = rebuild_ivf(spark, f"{root}/assigned")
+    assert (rebuilt.vec_col, rebuilt.id_col) == ("vec", "key")
+    assert len(rebuilt.centroids) == 5
+    loaded = load_ivf(spark, root)
+    assert loaded.centroids == rebuilt.centroids
+    assert loaded.assigned.count() == N
+
+
+def test_rebuild_saved_ivf_moves_legacy_sidecar_inside(vec_df, tmp_path, spark):
+    """A pre-r10 layout (sidecar beside ``assigned``) rebuilds with its
+    saved geometry; afterwards the sidecar lives inside ``assigned``
+    and the stale sibling is gone."""
+    from python_vectordbapp_ceph_spark.operators.ivf import (
+        _write_meta,
+        load_ivf,
+        rebuild_saved_ivf,
+        write_partitioned,
+    )
+
+    index = build_ivf(vec_df, nlist=3)
+    root = str(tmp_path / "legacy")
+    write_partitioned(index, f"{root}/assigned")
+    _write_meta(spark, index, f"{root}/_meta")
+    rebuilt = rebuild_saved_ivf(spark, root)
+    assert len(rebuilt.centroids) == 3
+    assert (tmp_path / "legacy" / "assigned" / "_meta").exists()
+    assert not (tmp_path / "legacy" / "_meta").exists()
+    assert load_ivf(spark, root).centroids == rebuilt.centroids
+
+
+def _interrupt_swap(root):
+    """The crash window of a rebuild: live layout renamed aside, new
+    layout never arrived."""
+    import os
+
+    os.rename(f"{root}/assigned", f"{root}/assigned._old")
+
+
+def test_load_ivf_heals_interrupted_swap_when_no_writer(vec_df, spark, tmp_path):
+    """Crashed writer, lease free: load_ivf recovers under the lease,
+    returns a working index, and leaves no ``._old`` behind; the lease
+    is released again afterwards."""
+    from python_vectordbapp_ceph_spark.operators.ivf import load_ivf, save_ivf
+    from python_vectordbapp_ceph_spark.operators.lease import (
+        acquire_writer_lease,
+        sibling_lease_path,
+    )
+
+    root = str(tmp_path / "idx")
+    save_ivf(build_ivf(vec_df, nlist=4), root)
+    _interrupt_swap(root)
+    idx = load_ivf(spark, root)
+    assert idx.assigned.count() == N
+    assert len(idx.search(QUERY, k=3, nprobe=4).collect()) == 3
+    assert (tmp_path / "idx" / "assigned").is_dir()
+    assert not (tmp_path / "idx" / "assigned._old").exists()
+    assigned = f"{root}/assigned"
+    acquire_writer_lease(
+        spark, assigned, lease_path=sibling_lease_path(assigned), timeout_ms=0,
+    ).release()
+
+
+def test_load_ivf_does_not_heal_under_live_writer(vec_df, spark, tmp_path):
+    """Live writer mid-swap (lease held): the reader must NOT rename
+    the old layout back — it raises with the recovery hint and leaves
+    the layout exactly as found, so the writer's tmp->path rename
+    cannot nest into a reader-restored directory."""
+    import os
+
+    from python_vectordbapp_ceph_spark.operators.ivf import load_ivf, save_ivf
+    from python_vectordbapp_ceph_spark.operators.lease import (
+        acquire_writer_lease,
+        sibling_lease_path,
+    )
+
+    root = str(tmp_path / "idx")
+    save_ivf(build_ivf(vec_df, nlist=4), root)
+    assigned = f"{root}/assigned"
+    writer = acquire_writer_lease(
+        spark, assigned, lease_path=sibling_lease_path(assigned), timeout_ms=0,
+    )
+    try:
+        _interrupt_swap(root)
+        with pytest.raises(IOError, match="mid-swap"):
+            load_ivf(spark, root)
+        assert not os.path.exists(assigned)          # untouched
+        assert os.path.exists(assigned + "._old")    # untouched
+        # the writer completes its swap unimpeded; the next load works
+        os.rename(assigned + "._old", assigned)
+    finally:
+        writer.release()
+    assert load_ivf(spark, root).assigned.count() == N
+
+
+def test_load_ivf_waits_out_a_completing_swap(vec_df, spark, tmp_path):
+    """A reader that lands in the (milliseconds-wide) swap window of a
+    writer that then FINISHES must succeed via the poll, not raise."""
+    import os
+    import threading
+    import time
+
+    from python_vectordbapp_ceph_spark.operators.ivf import load_ivf, save_ivf
+    from python_vectordbapp_ceph_spark.operators.lease import (
+        acquire_writer_lease,
+        sibling_lease_path,
+    )
+
+    root = str(tmp_path / "idx")
+    save_ivf(build_ivf(vec_df, nlist=4), root)
+    assigned = f"{root}/assigned"
+    writer = acquire_writer_lease(
+        spark, assigned, lease_path=sibling_lease_path(assigned), timeout_ms=0,
+    )
+    _interrupt_swap(root)
+
+    def _finish_swap():
+        time.sleep(0.5)
+        os.rename(assigned + "._old", assigned)
+        writer.release()
+
+    t = threading.Thread(target=_finish_swap)
+    t.start()
+    try:
+        assert load_ivf(spark, root).assigned.count() == N
+    finally:
+        t.join()
 
 
 def test_persisted_ivf_batch_probe_prunes_partitions(vec_df, tmp_path, spark):

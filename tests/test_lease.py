@@ -23,6 +23,9 @@ from python_vectordbapp_ceph_spark.operators.lease import (
     LEASE_FILE,
     LedgerLockedError,
     acquire_writer_lease,
+    recover_swap,
+    sibling_lease_path,
+    swap_dirs,
 )
 from python_vectordbapp_ceph_spark.operators.merge import vacuum
 from python_vectordbapp_ceph_spark.operators.shards import (
@@ -262,7 +265,6 @@ def test_ivf_rebuild_and_stream_share_one_lease(spark, tmp_path):
     SAME sibling lease, so the race fails fast on either side."""
     from python_vectordbapp_ceph_spark.operators.ivf import (
         build_ivf,
-        ivf_lease_path,
         load_ivf,
         rebuild_saved_ivf,
         save_ivf,
@@ -278,7 +280,7 @@ def test_ivf_rebuild_and_stream_share_one_lease(spark, tmp_path):
     # a held lease (stand-in for a live maintenance stream) blocks the
     # rebuild fail-fast, layout untouched
     holder = acquire_writer_lease(
-        spark, assigned, lease_path=ivf_lease_path(assigned)
+        spark, assigned, lease_path=sibling_lease_path(assigned)
     )
     with pytest.raises(LedgerLockedError):
         rebuild_saved_ivf(spark, root, lease_timeout_ms=0)
@@ -299,13 +301,13 @@ def test_ivf_rebuild_and_stream_share_one_lease(spark, tmp_path):
     with pytest.raises(LedgerLockedError):
         rebuild_saved_ivf(spark, root, lease_timeout_ms=0)
     assert q.awaitTermination(120)
-    wait_released(ivf_lease_path(assigned))
+    wait_released(sibling_lease_path(assigned))
     spark.catalog.refreshByPath(assigned)
     rebuilt = rebuild_saved_ivf(spark, root)
     assert rebuilt.assigned.count() == 180
     # and the lease is free again after the rebuild's finally-release
     acquire_writer_lease(
-        spark, assigned, lease_path=ivf_lease_path(assigned), timeout_ms=0
+        spark, assigned, lease_path=sibling_lease_path(assigned), timeout_ms=0
     ).release()
 
 
@@ -512,3 +514,74 @@ def test_collection_compact_starts_auto_heartbeat(spark, tmp_path, monkeypatch):
     col.compact()
     assert path in started
     assert col.snapshot().count() == 1
+
+
+# --- the shared two-rename directory swap (IVF rebuild, collection compact) ---
+
+
+def _layout(path, name):
+    os.makedirs(path)
+    open(os.path.join(path, name), "w").close()
+
+
+def test_swap_dirs_replaces_layout_and_clears_finished_leftover(spark, tmp_path):
+    """The swap publishes the staged directory at the live path and
+    deletes the old one; a ``._old`` beside a LIVE path is a finished
+    swap's leftover, cleared first instead of failing the rename."""
+    path, tmp = str(tmp_path / "layout"), str(tmp_path / "layout._tmp")
+    _layout(path, "old_part")
+    _layout(tmp, "new_part")
+    _layout(path + "._old", "stale")
+    swap_dirs(spark, tmp, path, op="test")
+    assert os.listdir(path) == ["new_part"]
+    assert not os.path.exists(tmp) and not os.path.exists(path + "._old")
+    # healthy layout: recovery is a no-op
+    assert recover_swap(spark, path, op="test") is False
+    assert os.listdir(path) == ["new_part"]
+
+
+class _HealedUnderUsFs:
+    """Fake (fs, hpath) pair: the layout looks interrupted at check
+    time, but the rename fails because another recoverer healed it in
+    between — afterwards the live path exists."""
+
+    def __init__(self, path):
+        self.path = path
+        self.renamed = False
+
+    # hpath stand-in: identity
+    def hpath(self, p):
+        return p
+
+    def exists(self, p):
+        if p == self.path:
+            return self.renamed  # absent at check, present after race
+        return not self.renamed  # ._old: present at check, then gone
+
+    def rename(self, src, dst):
+        self.renamed = True  # "the other recoverer won"
+        return False
+
+
+def test_recover_swap_tolerates_concurrent_healer(spark, tmp_path):
+    """A recovery rename that loses to a concurrent recoverer which
+    already healed the layout reports success, not an IOError."""
+    path = str(tmp_path / "idx_assigned")
+    fake = _HealedUnderUsFs(path)
+    assert recover_swap(
+        spark, path, op="test", _fs_pair=(fake, fake.hpath)
+    ) is True
+
+
+def test_recover_swap_still_raises_on_genuine_failure(spark, tmp_path):
+    class _BrokenFs(_HealedUnderUsFs):
+        def rename(self, src, dst):
+            return False  # fails, and nothing healed the layout
+
+        def exists(self, p):
+            return p.endswith("._old")  # old present, live absent
+
+    path = str(tmp_path / "idx_assigned2")
+    fake = _BrokenFs(path)
+    with pytest.raises(IOError, match="crash-recovery"):
+        recover_swap(spark, path, op="test", _fs_pair=(fake, fake.hpath))

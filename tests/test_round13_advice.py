@@ -1,16 +1,10 @@
 """Regression tests for the round-12 ADVICE findings + the verdict's
-typed-412 ask, fixed in round 13:
+typed-412 ask, fixed in round 13. Findings 1 (lease-gated reader
+recovery in load_ivf) and 2 (assign_new drops wrong-dimension vectors)
+are pinned in tests/test_knn.py; finding 5 (a recovery rename losing
+to a concurrent healer) in tests/test_lease.py, next to the shared
+swap. The rest stay here:
 
-  1. (medium) load_ivf called _recover_swap WITHOUT the writer lease:
-     a reader landing between a LIVE rebuild's two renames renamed the
-     old layout back, and the rebuild's tmp->path rename then nested
-     the new layout inside the restored one — a silently mixed index.
-     Now: readers poll briefly, then recover only UNDER the lease, and
-     raise with a hint when a writer holds it.
-  2. (low) assign_new dropped only NULL embeddings; a wrong-dimension
-     vector still produced NULL _d2 everywhere and was silently
-     assigned to cluster 0. Now size(vec) != index-dim rows are
-     dropped with the same logged-count contract.
   3. (low) _acquire_epoch: a conditional create that landed server-
      side but lost its acknowledgment made the NEXT scan read our own
      record as a live foreign holder — acquisition self-blocked until
@@ -19,9 +13,6 @@ typed-412 ask, fixed in round 13:
      the xxhash64 salt; a nested map (array<map>, struct-with-map)
      still reached the hash → DATATYPE_MISMATCH.HASH_MAP_TYPE. Now
      any dtype containing a map is excluded.
-  5. (low) _recover_swap raised IOError when its rename lost to a
-     concurrent recoverer that had already healed the layout. Now a
-     failed rename re-checks existence and reports success.
   6. (verdict #5) HadoopFsOps._is_already_exists trusted ' 412'
      substrings; a transient 503 whose MESSAGE carries ' 412' was
      misread as lost-the-race. Now a typed status code anywhere in
@@ -30,143 +21,15 @@ typed-412 ask, fixed in round 13:
 
 from __future__ import annotations
 
-import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from python_vectordbapp_ceph_spark.operators import ivf as IVF
 from python_vectordbapp_ceph_spark.operators import lease as L
 from python_vectordbapp_ceph_spark.operators import merge as M
 from python_vectordbapp_ceph_spark.operators import publish as P
 from tests.test_epoch_lease import ListingFakeS3Fs
-
-
-def _vec_df(spark, n=40, dim=4):
-    rows = [
-        (i, [float((i * 7 + j * 3) % 11) for j in range(dim)])
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def _interrupt_swap(spark, assigned: str) -> None:
-    """Recreate the crash window: live path renamed aside, new layout
-    never arrived."""
-    fs, hpath = M._fs(spark, assigned)
-    assert fs.rename(hpath(assigned), hpath(assigned + "._old"))
-
-
-# --- 1: reader-side recovery is lease-gated --------------------------------------
-
-
-def test_load_ivf_heals_interrupted_swap_when_no_writer(spark, tmp_path):
-    """Crashed writer, lease free: load_ivf recovers under the lease
-    and returns a working index."""
-    root = str(tmp_path / "idx")
-    IVF.save_ivf(IVF.build_ivf(_vec_df(spark), nlist=4), root)
-    _interrupt_swap(spark, f"{root}/assigned")
-    idx = IVF.load_ivf(spark, root)
-    assert idx.assigned.count() == 40
-    hits = idx.search([0.0, 3.0, 6.0, 9.0], k=3, nprobe=4).collect()
-    assert len(hits) == 3
-    # the lease was released by the recovery — a writer can acquire
-    lease = L.acquire_writer_lease(
-        spark, f"{root}/assigned",
-        lease_path=IVF.ivf_lease_path(f"{root}/assigned"), timeout_ms=0,
-    )
-    lease.release()
-
-
-def test_load_ivf_does_not_heal_under_live_writer(spark, tmp_path):
-    """Live writer mid-swap (lease held): the reader must NOT rename
-    the old layout back — it raises with the recovery hint and leaves
-    the layout exactly as found, so the writer's tmp->path rename
-    cannot nest into a reader-restored directory."""
-    root = str(tmp_path / "idx")
-    IVF.save_ivf(IVF.build_ivf(_vec_df(spark), nlist=4), root)
-    assigned = f"{root}/assigned"
-    writer = L.acquire_writer_lease(
-        spark, assigned, lease_path=IVF.ivf_lease_path(assigned),
-        timeout_ms=0,
-    )
-    try:
-        _interrupt_swap(spark, assigned)
-        with pytest.raises(IOError, match="mid-swap"):
-            IVF.load_ivf(spark, root)
-        fs, hpath = M._fs(spark, assigned)
-        assert not fs.exists(hpath(assigned))          # untouched
-        assert fs.exists(hpath(assigned + "._old"))    # untouched
-        # the writer completes its swap unimpeded; the next load works
-        assert fs.rename(hpath(assigned + "._old"), hpath(assigned))
-    finally:
-        writer.release()
-    assert IVF.load_ivf(spark, root).assigned.count() == 40
-
-
-def test_load_ivf_waits_out_a_completing_swap(spark, tmp_path):
-    """A reader that lands in the (milliseconds-wide) swap window of a
-    writer that then FINISHES must succeed via the poll, not raise."""
-    root = str(tmp_path / "idx")
-    IVF.save_ivf(IVF.build_ivf(_vec_df(spark), nlist=4), root)
-    assigned = f"{root}/assigned"
-    writer = L.acquire_writer_lease(
-        spark, assigned, lease_path=IVF.ivf_lease_path(assigned),
-        timeout_ms=0,
-    )
-    _interrupt_swap(spark, assigned)
-
-    def _finish_swap():
-        time.sleep(0.5)
-        fs, hpath = M._fs(spark, assigned)
-        fs.rename(hpath(assigned + "._old"), hpath(assigned))
-        writer.release()
-
-    t = threading.Thread(target=_finish_swap)
-    t.start()
-    try:
-        idx = IVF.load_ivf(spark, root)
-        assert idx.assigned.count() == 40
-    finally:
-        t.join()
-
-
-# --- 2: assign_new drops wrong-dimension vectors ----------------------------------
-
-
-def test_assign_new_drops_wrong_dim_and_null(spark):
-    index = IVF.build_ivf(_vec_df(spark, dim=4), nlist=4)
-    batch = spark.createDataFrame(
-        [
-            (100, [1.0, 2.0, 3.0, 4.0]),   # good
-            (101, None),                   # null -> dropped
-            (102, [1.0, 2.0, 3.0]),        # dim 3 != 4 -> dropped
-            (103, [1.0, 2.0, 3.0, 4.0, 5.0]),  # dim 5 != 4 -> dropped
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    out = IVF.assign_new(index, batch).collect()
-    assert [r.vec_id for r in out] == [100]
-    # and the survivor landed in its true nearest list, not cluster 0
-    # by tiebreak: recompute the argmin directly
-    import math
-
-    v = [1.0, 2.0, 3.0, 4.0]
-    best = min(
-        range(len(index.centroids)),
-        key=lambda c: (math.dist(v, index.centroids[c]), c),
-    )
-    assert out[0].cluster_id == best
-
-
-def test_assign_new_all_good_batch_unchanged(spark):
-    index = IVF.build_ivf(_vec_df(spark, dim=4), nlist=4)
-    batch = spark.createDataFrame(
-        [(200, [0.0, 1.0, 2.0, 3.0]), (201, [5.0, 5.0, 5.0, 5.0])],
-        "vec_id long, embedding array<float>",
-    )
-    assert IVF.assign_new(index, batch).count() == 2
 
 
 # --- 3: lost-acknowledgment create does not self-block ----------------------------
@@ -244,54 +107,6 @@ def test_bucket_aligned_all_map_frame_random_salt(spark):
         "tags array<map<string,string>>",
     ).withColumn("_kb", F.lit(0))
     assert M._bucket_aligned(df, 1, 2).count() == 10
-
-
-# --- 5: recovery rename losing to a concurrent healer is not an error -------------
-
-
-class _HealedUnderUsFs:
-    """Fake (fs, hpath) pair: the layout looks interrupted at check
-    time, but the rename fails because another recoverer healed it in
-    between — afterwards the live path exists."""
-
-    def __init__(self, path):
-        self.path = path
-        self.renamed = False
-
-    # hpath stand-in: identity
-    def hpath(self, p):
-        return p
-
-    def exists(self, p):
-        if p == self.path:
-            return self.renamed  # absent at check, present after race
-        return not self.renamed  # ._old: present at check, then gone
-
-    def rename(self, src, dst):
-        self.renamed = True  # "the other recoverer won"
-        return False
-
-
-def test_recover_swap_tolerates_concurrent_healer(spark, tmp_path):
-    path = str(tmp_path / "idx_assigned")
-    fake = _HealedUnderUsFs(path)
-    assert IVF._recover_swap(
-        spark, path, op="test", _fs_pair=(fake, fake.hpath)
-    ) is True
-
-
-def test_recover_swap_still_raises_on_genuine_failure(spark, tmp_path):
-    class _BrokenFs(_HealedUnderUsFs):
-        def rename(self, src, dst):
-            return False  # fails, and nothing healed the layout
-
-        def exists(self, p):
-            return p.endswith("._old")  # old present, live absent
-
-    path = str(tmp_path / "idx_assigned2")
-    fake = _BrokenFs(path)
-    with pytest.raises(IOError, match="crash-recovery"):
-        IVF._recover_swap(spark, path, op="test", _fs_pair=(fake, fake.hpath))
 
 
 # --- 6: typed status code beats message substrings --------------------------------
