@@ -988,30 +988,6 @@ def _interrupt_swap(root):
     os.rename(f"{root}/assigned", f"{root}/assigned._old")
 
 
-def test_load_ivf_heals_interrupted_swap_when_no_writer(vec_df, spark, tmp_path):
-    """Crashed writer, lease free: load_ivf recovers under the lease,
-    returns a working index, and leaves no ``._old`` behind; the lease
-    is released again afterwards."""
-    from python_vectordbapp_ceph_spark.operators.ivf import load_ivf, save_ivf
-    from python_vectordbapp_ceph_spark.operators.lease import (
-        acquire_writer_lease,
-        sibling_lease_path,
-    )
-
-    root = str(tmp_path / "idx")
-    save_ivf(build_ivf(vec_df, nlist=4), root)
-    _interrupt_swap(root)
-    idx = load_ivf(spark, root)
-    assert idx.assigned.count() == N
-    assert len(idx.search(QUERY, k=3, nprobe=4).collect()) == 3
-    assert (tmp_path / "idx" / "assigned").is_dir()
-    assert not (tmp_path / "idx" / "assigned._old").exists()
-    assigned = f"{root}/assigned"
-    acquire_writer_lease(
-        spark, assigned, lease_path=sibling_lease_path(assigned), timeout_ms=0,
-    ).release()
-
-
 def test_load_ivf_does_not_heal_under_live_writer(vec_df, spark, tmp_path):
     """Live writer mid-swap (lease held): the reader must NOT rename
     the old layout back — it raises with the recovery hint and leaves

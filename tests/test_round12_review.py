@@ -272,6 +272,34 @@ def test_stream_append_replay_does_not_double_pack(spark, tmp_path):
     assert read_ledger(spark, led).count() == n, "replayed batch re-packed"
 
 
+def test_assign_new_keeps_duplicate_ids_and_drops_null_vectors(spark):
+    from python_vectordbapp_ceph_spark.operators.ivf import (
+        assign_new,
+        build_ivf,
+    )
+
+    base = spark.createDataFrame(
+        [(i, [float(i % 4), float(i % 3)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    index = build_ivf(base, nlist=4)
+    batch = spark.createDataFrame(
+        [
+            (100, [1.0, 1.0]),
+            (100, [2.0, 2.0]),   # duplicate id, different payload
+            (101, None),          # null embedding: no nearest centroid
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    got = assign_new(index, batch)
+    rows = got.collect()
+    # both duplicate-id rows survive (at-least-once append semantics);
+    # the null row is dropped, never silently dumped into cluster 0
+    assert len(rows) == 2
+    assert sorted(r.vec_id for r in rows) == [100, 100]
+    assert all(r.cluster_id is not None for r in rows)
+
+
 def test_ivf_search_ranks_null_distances_last(spark):
     from python_vectordbapp_ceph_spark.operators.ivf import (
         IVFIndex,
@@ -316,6 +344,30 @@ def test_search_batch_tolerates_null_query_vector(spark):
     )
     got = search_batch(index, queries, k=2, nprobe=2).collect()
     assert {r.q_id for r in got} == {1}  # null-vec query yields no rows
+
+
+def test_load_ivf_recovers_interrupted_swap(spark, tmp_path):
+    import os
+
+    from python_vectordbapp_ceph_spark.operators.ivf import (
+        build_ivf,
+        load_ivf,
+        save_ivf,
+    )
+
+    base = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    root = str(tmp_path / "ivf")
+    save_ivf(build_ivf(base, nlist=2), root)
+    # crash shape: rebuild renamed the live dir aside and died before
+    # renaming the new layout in
+    os.rename(f"{root}/assigned", f"{root}/assigned._old")
+    idx = load_ivf(spark, root)   # heals via lease.recover_swap
+    assert idx.assigned.count() == 20
+    assert os.path.isdir(f"{root}/assigned")
+    assert not os.path.exists(f"{root}/assigned._old")
 
 
 def test_release_caches_scopes_are_isolated(spark):

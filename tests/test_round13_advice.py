@@ -1,10 +1,17 @@
 """Regression tests for the round-12 ADVICE findings + the verdict's
-typed-412 ask, fixed in round 13. Findings 1 (lease-gated reader
-recovery in load_ivf) and 2 (assign_new drops wrong-dimension vectors)
-are pinned in tests/test_knn.py; finding 5 (a recovery rename losing
-to a concurrent healer) in tests/test_lease.py, next to the shared
-swap. The rest stay here:
+typed-412 ask, fixed in round 13. The live-writer and completing-swap
+cases of finding 1 are pinned in tests/test_knn.py and finding 5 (a
+recovery rename losing to a concurrent healer) in tests/test_lease.py,
+next to the shared swap. The rest stay here:
 
+  1. (medium) load_ivf called the swap recovery WITHOUT the writer
+     lease: a reader landing between a LIVE rebuild's two renames
+     renamed the old layout back, and the rebuild's tmp->path rename
+     then nested the new layout inside the restored one. Now readers
+     poll briefly, then recover only UNDER the lease.
+  2. (low) assign_new dropped only NULL embeddings; a wrong-dimension
+     vector was silently assigned to cluster 0. Now size(vec) !=
+     index-dim rows are dropped with the same logged-count contract.
   3. (low) _acquire_epoch: a conditional create that landed server-
      side but lost its acknowledgment made the NEXT scan read our own
      record as a live foreign holder — acquisition self-blocked until
@@ -26,10 +33,84 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from python_vectordbapp_ceph_spark.operators import ivf as IVF
 from python_vectordbapp_ceph_spark.operators import lease as L
 from python_vectordbapp_ceph_spark.operators import merge as M
 from python_vectordbapp_ceph_spark.operators import publish as P
 from tests.test_epoch_lease import ListingFakeS3Fs
+
+
+def _vec_df(spark, n=40, dim=4):
+    rows = [
+        (i, [float((i * 7 + j * 3) % 11) for j in range(dim)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _interrupt_swap(spark, assigned: str) -> None:
+    """Recreate the crash window: live path renamed aside, new layout
+    never arrived."""
+    fs, hpath = M._fs(spark, assigned)
+    assert fs.rename(hpath(assigned), hpath(assigned + "._old"))
+
+
+# --- 1: reader-side recovery is lease-gated --------------------------------------
+
+
+def test_load_ivf_heals_interrupted_swap_when_no_writer(spark, tmp_path):
+    """Crashed writer, lease free: load_ivf recovers under the lease
+    and returns a working index."""
+    root = str(tmp_path / "idx")
+    IVF.save_ivf(IVF.build_ivf(_vec_df(spark), nlist=4), root)
+    _interrupt_swap(spark, f"{root}/assigned")
+    idx = IVF.load_ivf(spark, root)
+    assert idx.assigned.count() == 40
+    hits = idx.search([0.0, 3.0, 6.0, 9.0], k=3, nprobe=4).collect()
+    assert len(hits) == 3
+    # the lease was released by the recovery — a writer can acquire
+    lease = L.acquire_writer_lease(
+        spark, f"{root}/assigned",
+        lease_path=L.sibling_lease_path(f"{root}/assigned"), timeout_ms=0,
+    )
+    lease.release()
+
+
+# --- 2: assign_new drops wrong-dimension vectors ----------------------------------
+
+
+def test_assign_new_drops_wrong_dim_and_null(spark):
+    index = IVF.build_ivf(_vec_df(spark, dim=4), nlist=4)
+    batch = spark.createDataFrame(
+        [
+            (100, [1.0, 2.0, 3.0, 4.0]),   # good
+            (101, None),                   # null -> dropped
+            (102, [1.0, 2.0, 3.0]),        # dim 3 != 4 -> dropped
+            (103, [1.0, 2.0, 3.0, 4.0, 5.0]),  # dim 5 != 4 -> dropped
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    out = IVF.assign_new(index, batch).collect()
+    assert [r.vec_id for r in out] == [100]
+    # and the survivor landed in its true nearest list, not cluster 0
+    # by tiebreak: recompute the argmin directly
+    import math
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    best = min(
+        range(len(index.centroids)),
+        key=lambda c: (math.dist(v, index.centroids[c]), c),
+    )
+    assert out[0].cluster_id == best
+
+
+def test_assign_new_all_good_batch_unchanged(spark):
+    index = IVF.build_ivf(_vec_df(spark, dim=4), nlist=4)
+    batch = spark.createDataFrame(
+        [(200, [0.0, 1.0, 2.0, 3.0]), (201, [5.0, 5.0, 5.0, 5.0])],
+        "vec_id long, embedding array<float>",
+    )
+    assert IVF.assign_new(index, batch).count() == 2
 
 
 # --- 3: lost-acknowledgment create does not self-block ----------------------------
