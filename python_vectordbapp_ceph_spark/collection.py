@@ -110,8 +110,11 @@ class VectorCollection:
             lease = self._writer_lease()
             try:
                 if not fs.exists(hpath(self.path)):
+                    # from an RDD with no partitions: an empty list
+                    # would start Python workers for a schema-only file
                     empty = self.spark.createDataFrame(
-                        [], collection_schema(self.dim)
+                        self.spark.sparkContext.emptyRDD(),
+                        collection_schema(self.dim),
                     )
                     empty.write.mode("ignore").parquet(self.path)
                     self._seq, self._log_rows = 0, 0

@@ -347,12 +347,16 @@ def _write_meta(spark, index: IVFIndex, meta_path: str) -> None:
     # centroids persist as float64: they are index METADATA (probe
     # ranking inputs), not at-rest vector data — the canonical-f32
     # rule applies to the assigned table's vectors; doubles make the
-    # save/load roundtrip bit-exact so probe order never drifts
+    # save/load roundtrip bit-exact so probe order never drifts. Built
+    # from pandas so the rows cross as one Arrow batch: a list of
+    # tuples is parallelized and mapped by a Python task per partition
     meta = spark.createDataFrame(
-        [
-            (cid, [float(x) for x in c], index.vec_col, index.id_col)
-            for cid, c in enumerate(index.centroids)
-        ],
+        pd.DataFrame({
+            "cluster_id": range(len(index.centroids)),
+            "centroid": [[float(x) for x in c] for c in index.centroids],
+            "vec_col": index.vec_col,
+            "id_col": index.id_col,
+        }),
         "cluster_id int, centroid array<double>, vec_col string, id_col string",
     )
     meta.coalesce(1).write.mode("overwrite").parquet(meta_path)
@@ -427,7 +431,10 @@ def record_recall_curve(
     index.curve = curve
     if layout_path is not None:
         spark.createDataFrame(
-            [(n, r, int(k), int(n_queries)) for n, r in curve],
+            pd.DataFrame(
+                [(n, r, int(k), int(n_queries)) for n, r in curve],
+                columns=["nprobe", "recall", "k", "n_queries"],
+            ),
             "nprobe int, recall double, k int, n_queries int",
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{layout_path}/{_CURVE_SIDECAR}"

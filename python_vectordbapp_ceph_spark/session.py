@@ -3,6 +3,8 @@
 Defaults chosen for correctness + 100 TB design intent:
   - AQE on (runtime partition coalescing, skew-join splitting);
   - Arrow on (every pandas_udf / applyInPandas crosses via Arrow batches);
+  - Python workers forked from this package's daemon (``_pydaemon``),
+    which skips PySpark's per-task zip-archive re-read;
   - session timezone UTC so parquet timestamps hash identically to the
     DuckDB oracle (naive timestamps);
   - shuffle partitions sized for the local harness but overridable —
@@ -73,6 +75,9 @@ def get_spark(
         # probe-side scan before the shuffle (big win on 100 TB facts)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark's daemon without the per-task zip-archive re-read
+        # (_pydaemon.py): a Python task then costs what a JVM task does
+        .config("spark.python.daemon.module", f"{__package__}._pydaemon")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # 128 MiB input splits: at 100 TB this yields ~800k tasks, the
         # right granularity for a 1000-executor cluster.

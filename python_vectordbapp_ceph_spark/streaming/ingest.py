@@ -19,6 +19,8 @@ Each micro-batch is one leased, observed write job: the missing-object
 count and the rows written are observations on that job, so a steady-
 state batch runs no other Spark action (no emptiness probe, no count,
 no max(seq) re-read while the collection's lease chain is unbroken).
+The batch is not cached, so AQE coalesces that write to two tasks,
+one per branch, whatever spark.sql.shuffle.partitions is.
 
 Exactly-once: checkpointed source offsets + idempotent upsert sink
 (at-least-once delivery × last-writer-wins read = effectively-once),
@@ -188,87 +190,90 @@ def ingest_stream(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # persist the reduced micro-batch: both branches of the one
-        # write read it, and must not each re-run the source and window
-        batch_df = batch_df.persist()
-        try:
-            ups = batch_df.filter(F.col("op") == "upsert")
-            dels = batch_df.filter(F.col("op") == "delete")
-            missing = None
-            if object_type == "IMAGE":
-                if object_bytes is not None:
-                    # left join ⇒ a key missing from the object store
-                    # yields NULL content; embedding it would crash the
-                    # micro-batch (Image.open on None), which then
-                    # retries forever. Such rows are dropped with a
-                    # logged count — the reference 404s the single
-                    # request, the stream must not wedge on it.
-                    ups, missing = _drop_missing(
-                        ups.join(object_bytes, "key", "left"), "content"
-                    )
-                else:
-                    ups = ups.withColumn(
-                        "content", F.encode(F.col("key"), "utf-8")
-                    )
-                embed_col = image_embed_udf(F.col("content"))
-            elif object_text is not None:
-                # same guard as the IMAGE branch: a key missing from
-                # the object store must be DROPPED with a logged count,
-                # not silently upserted as embed("") — every missing
-                # key would otherwise share one identical vector that
-                # clusters together in search results
+        # NOT cached: each branch plans over the window's shuffle, so
+        # AQE coalesces a kilobyte batch to one task per branch and the
+        # write runs 2 tasks (a cached batch keeps all its
+        # shuffle.partitions partitions, which AQE may not coalesce).
+        # The price is one rescan of the micro-batch's source file per
+        # branch. Both branches see the same last event per key: the
+        # ordering leaves ties only between rows of one op, which fall
+        # in one branch, so the embedding UDF still runs once per
+        # surviving PUT, in the upsert branch only.
+        ups = batch_df.filter(F.col("op") == "upsert")
+        dels = batch_df.filter(F.col("op") == "delete")
+        missing = None
+        if object_type == "IMAGE":
+            if object_bytes is not None:
+                # left join ⇒ a key missing from the object store
+                # yields NULL content; embedding it would crash the
+                # micro-batch (Image.open on None), which then
+                # retries forever. Such rows are dropped with a
+                # logged count — the reference 404s the single
+                # request, the stream must not wedge on it.
                 ups, missing = _drop_missing(
-                    ups.join(object_text, "key", "left"), "text"
+                    ups.join(object_bytes, "key", "left"), "content"
                 )
-                embed_col = text_embed_udf(F.col("text"))
             else:
-                ups = ups.withColumn("text", F.col("key"))
-                embed_col = text_embed_udf(F.col("text"))
-            rows = ups.select(
-                F.col("key"),
-                object_url_col(
-                    endpoint, F.col("bucket"), F.col("key")
-                ).alias("url"),
-                embed_col.alias("embedding"),
-                F.col("tags"),
-                F.lit(None).cast("map<string,string>").alias("props"),
-                F.col("ingest_ts"),
+                ups = ups.withColumn(
+                    "content", F.encode(F.col("key"), "utf-8")
+                )
+            embed_col = image_embed_udf(F.col("content"))
+        elif object_text is not None:
+            # same guard as the IMAGE branch: a key missing from
+            # the object store must be DROPPED with a logged count,
+            # not silently upserted as embed("") — every missing
+            # key would otherwise share one identical vector that
+            # clusters together in search results
+            ups, missing = _drop_missing(
+                ups.join(object_text, "key", "left"), "text"
             )
-            # ONE leased write for the whole micro-batch: upserts and
-            # tombstones under one lease and one seq, in one append
-            # job. The embedding UDF runs exactly once per row, inside
-            # that job (the reference re-ran it per request,
-            # pythonvectordbceph.py:162); the tombstones go straight
-            # from the DataFrame, so the delete key set never visits
-            # the driver. No emptiness probe: a batch that reduces to
-            # zero rows writes one schema-only part file.
-            collection.upsert(rows, delete_keys=dels.select("key"))
-            if missing is not None:
-                n_missing = missing.get["missing"]
-                if n_missing:
-                    _log.warning(
-                        "ingest_stream batch %s: dropped %d upsert(s) "
-                        "whose object %s is missing",
-                        batch_id, n_missing,
-                        "bytes" if object_type == "IMAGE" else "text",
-                    )
-            if compact_log_ratio is not None:
-                # best-effort AFTER the data commit: the append is
-                # already durable, so a maintenance failure (another
-                # session holds the lease, transient FS error mid-swap)
-                # must not fail the micro-batch — that would replay and
-                # RE-APPEND the whole batch with fresh seqs on every
-                # restart while the stream never advances
-                try:
-                    collection.maybe_compact(max_log_ratio=compact_log_ratio)
-                except Exception:
-                    _log.warning(
-                        "ingest_stream batch %s: post-commit compaction "
-                        "failed (will retry on a later batch)",
-                        batch_id, exc_info=True,
-                    )
-        finally:
-            batch_df.unpersist()
+            embed_col = text_embed_udf(F.col("text"))
+        else:
+            ups = ups.withColumn("text", F.col("key"))
+            embed_col = text_embed_udf(F.col("text"))
+        rows = ups.select(
+            F.col("key"),
+            object_url_col(
+                endpoint, F.col("bucket"), F.col("key")
+            ).alias("url"),
+            embed_col.alias("embedding"),
+            F.col("tags"),
+            F.lit(None).cast("map<string,string>").alias("props"),
+            F.col("ingest_ts"),
+        )
+        # ONE leased write for the whole micro-batch: upserts and
+        # tombstones under one lease and one seq, in one append
+        # job. The embedding UDF runs exactly once per row, inside
+        # that job (the reference re-ran it per request,
+        # pythonvectordbceph.py:162); the tombstones go straight
+        # from the DataFrame, so the delete key set never visits
+        # the driver. No emptiness probe: a batch that reduces to
+        # zero rows writes one schema-only part file.
+        collection.upsert(rows, delete_keys=dels.select("key"))
+        if missing is not None:
+            n_missing = missing.get["missing"]
+            if n_missing:
+                _log.warning(
+                    "ingest_stream batch %s: dropped %d upsert(s) "
+                    "whose object %s is missing",
+                    batch_id, n_missing,
+                    "bytes" if object_type == "IMAGE" else "text",
+                )
+        if compact_log_ratio is not None:
+            # best-effort AFTER the data commit: the append is
+            # already durable, so a maintenance failure (another
+            # session holds the lease, transient FS error mid-swap)
+            # must not fail the micro-batch — that would replay and
+            # RE-APPEND the whole batch with fresh seqs on every
+            # restart while the stream never advances
+            try:
+                collection.maybe_compact(max_log_ratio=compact_log_ratio)
+            except Exception:
+                _log.warning(
+                    "ingest_stream batch %s: post-commit compaction "
+                    "failed (will retry on a later batch)",
+                    batch_id, exc_info=True,
+                )
 
     writer = events.writeStream.foreachBatch(do_batch)
     if available_now:

@@ -171,6 +171,64 @@ def test_maybe_compact_cheap_gate(spark, coll, monkeypatch):
     assert coll.maybe_compact(max_log_ratio=3.0) is False
 
 
+def test_compact_failure_is_best_effort_after_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Post-commit maintenance must never fail the micro-batch: the
+    appends stay committed and the stream drains even when compaction
+    raises on every attempt."""
+    import json
+
+    from python_vectordbapp_ceph_spark.streaming.ingest import (
+        ingest_stream,
+        parse_s3_events,
+    )
+
+    coll = VectorCollection(
+        spark=spark, path=str(tmp_path / "c"), dim=384, name="t"
+    ).ensure_exists()  # 384 = the stub text embedder's width
+    monkeypatch.setattr(
+        VectorCollection, "maybe_compact",
+        lambda self, **kw: (_ for _ in ()).throw(
+            RuntimeError("injected maintenance failure")
+        ),
+    )
+    events = tmp_path / "ev"
+    events.mkdir()
+    (events / "batch.json").write_text("".join(
+        json.dumps({"Records": [{
+            "eventName": "ObjectCreated:Put",
+            "eventTime": "2024-01-01T00:00:00Z",
+            "s3": {"bucket": {"name": "b1"}, "object": {"key": k, "tags": {}}},
+        }]}) + "\n"
+        for k in ("k1", "k2")
+    ))
+    q = ingest_stream(
+        parse_s3_events(spark.readStream.text(str(events))), coll,
+        checkpoint_dir=str(tmp_path / "ckpt"), compact_log_ratio=1.0,
+    )
+    assert q.awaitTermination(300), "stream did not finish in 300s"
+    assert {r.key for r in coll.snapshot().collect()} == {"k1", "k2"}
+
+
+def test_fully_deleted_collection_still_compacts(spark, coll):
+    """live=0 does not disable the policy: a collection whose rows are
+    all deleted compacts once its tombstone history outgrows the ratio."""
+    keys = [f"k{i}" for i in range(6)]
+    coll.upsert(make_rows(
+        spark, [(k, [1.0, 0.0, 0.0, 0.0], None) for k in keys]
+    ))
+    coll.delete_keys(keys)
+    assert coll.snapshot().count() == 0
+    assert coll._log().count() == 12  # 6 upserts + 6 tombstones
+    assert coll.maybe_compact(max_log_ratio=3.0) is True
+    assert coll._log().count() == 0   # collapsed to the empty snapshot
+    assert coll.snapshot().count() == 0
+    # and the collection stays usable afterwards
+    coll.upsert(make_rows(spark, [("new", [0.0, 1.0, 0.0, 0.0], None)]))
+    assert {r.key for r in coll.snapshot().collect()} == {"new"}
+
+
 def test_apply_change_log_cdc(spark):
     """Batch CDC resolve: base ∪ log, last-writer-wins, deletes drop —
     the webhook Put/Copy-vs-Delete branch as one set operation."""

@@ -194,3 +194,80 @@ def test_empty_records_batch_succeeds_and_stream_advances(spark, tmp_path):
     _write_files(tmp_path / "ev2", [[_note("k2")]])
     _drain(spark, tmp_path / "ev2", coll, tmp_path / "ckpt2")
     assert {r.key for r in coll.snapshot().collect()} == {"k1", "k2"}
+
+
+# --- (e) the batch write's shape -------------------------------------------------
+
+
+def _plan_nodes(node):
+    """Physical plan nodes under ``node``, through AQE wrappers."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return _plan_nodes(node.executedPlan())
+    if cls.endswith("QueryStageExec"):
+        return _plan_nodes(node.plan())
+    children = node.children()
+    return [node] + [
+        n for i in range(children.size()) for n in _plan_nodes(children.apply(i))
+    ]
+
+
+def test_batch_write_is_two_tasks_one_embedding_pass_no_cache(spark, tmp_path):
+    """A micro-batch of 200 events is not cached, so AQE coalesces its
+    one write to a task per branch: at most 2 part files, whatever
+    spark.sql.shuffle.partitions is (4 here; a cached batch wrote 8).
+    The embedding UDF stays one pass, in the upsert branch only."""
+    coll = VectorCollection(
+        spark=spark, path=str(tmp_path / "c"), dim=TEXT_DIM, name="t"
+    ).ensure_exists()
+    t = "2024-01-01T00:00:{:02d}Z"
+    _write_files(tmp_path / "ev", [
+        [_note(f"k{i}") for i in range(200)],
+        [_note(f"k{i}", t=t.format(1)) for i in range(200, 350)]
+        + [_note(f"k{i}", "ObjectRemoved:Delete", t.format(1))
+           for i in range(50)],
+        [_note(f"k{i}", t=t.format(2)) for i in range(350, 500)]
+        + [_note(f"k{i}", "ObjectRemoved:Delete", t.format(2))
+           for i in range(50, 100)],
+    ])
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+
+    def part_files():
+        return sum(1 for p in (tmp_path / "c").iterdir()
+                   if p.name.startswith("part-"))
+
+    persisted = jsc.getPersistentRDDs().size()
+    batches = []
+    orig_append = coll._append
+
+    def spy_append(df):
+        before = part_files()
+        orig_append(df)
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())  # noqa: SLF001
+        names = [n.getClass().getSimpleName() for n in nodes]
+        (union,) = [n for n in nodes if n.getClass().getSimpleName() == "UnionExec"]
+        upserts, tombstones = (
+            [m.getClass().getSimpleName()
+             for m in _plan_nodes(union.children().apply(i))]
+            for i in range(2)
+        )
+        batches.append({
+            "files": part_files() - before,
+            "persisted": jsc.getPersistentRDDs().size(),
+            "udf": (names.count("ArrowEvalPythonExec"),
+                    upserts.count("ArrowEvalPythonExec"),
+                    tombstones.count("ArrowEvalPythonExec")),
+            "cached": [n for n in names if n.startswith("InMemory")],
+        })
+
+    coll._append = spy_append
+    _drain(spark, tmp_path / "ev", coll, tmp_path / "ckpt")
+    assert len(batches) == 3
+    for b in batches:
+        assert b["files"] <= 2, batches
+        assert b["persisted"] == persisted, batches
+        assert b["udf"] == (1, 1, 0), batches
+        assert b["cached"] == [], batches
+    assert {r.key for r in coll.snapshot().collect()} == {
+        f"k{i}" for i in range(100, 500)
+    }

@@ -12,10 +12,6 @@ their pins in tests/test_epoch_lease.py):
     must not present an expired lease to a concurrent compact);
   - the TEXT ingest path drops keys missing from the object store with
     a logged count instead of upserting embed("") for all of them;
-  - a post-commit compaction failure is best-effort: the batch's
-    appends stay committed and the stream drains;
-  - a fully-deleted collection still compacts once its tombstone
-    history outgrows the ratio (live=0 no longer disables the policy);
   - files_per_bucket>1 works on map-bearing tables (the within-bucket
     salt no longer hashes MapType columns).
 """
@@ -155,45 +151,6 @@ def test_text_ingest_drops_missing_object_text(spark, tmp_path):
     )
     _drain(spark, events, coll, tmp_path / "ckpt", object_text=object_text)
     assert {r.key for r in coll.snapshot().collect()} == {"present"}
-
-
-def test_compact_failure_is_best_effort_after_commit(
-    spark, tmp_path, monkeypatch
-):
-    """Post-commit maintenance must never fail the micro-batch: the
-    appends stay committed and the stream drains even when compaction
-    raises on every attempt."""
-    coll = VectorCollection(
-        spark=spark, path=str(tmp_path / "c"), dim=TEXT_DIM, name="t"
-    ).ensure_exists()
-    monkeypatch.setattr(
-        VectorCollection, "maybe_compact",
-        lambda self, **kw: (_ for _ in ()).throw(
-            RuntimeError("injected maintenance failure")
-        ),
-    )
-    events = _write_events(tmp_path, "ev", [_event("k1"), _event("k2")])
-    _drain(spark, events, coll, tmp_path / "ckpt", compact_log_ratio=1.0)
-    assert {r.key for r in coll.snapshot().collect()} == {"k1", "k2"}
-
-
-def test_fully_deleted_collection_still_compacts(spark, tmp_path):
-    coll = VectorCollection(
-        spark=spark, path=str(tmp_path / "c"), dim=DIM, name="t"
-    ).ensure_exists()
-    keys = [f"k{i}" for i in range(6)]
-    coll.upsert(_rows(
-        spark, [(k, [1.0, 0.0, 0.0, 0.0], None) for k in keys]
-    ))
-    coll.delete_keys(keys)
-    assert coll.snapshot().count() == 0
-    assert coll._log().count() == 12  # 6 upserts + 6 tombstones
-    assert coll.maybe_compact(max_log_ratio=3.0) is True
-    assert coll._log().count() == 0   # collapsed to the empty snapshot
-    assert coll.snapshot().count() == 0
-    # and the collection stays usable afterwards
-    coll.upsert(_rows(spark, [("new", [0.0, 1.0, 0.0, 0.0], None)]))
-    assert {r.key for r in coll.snapshot().collect()} == {"new"}
 
 
 def test_files_per_bucket_multiplier_on_map_column(spark, tmp_path):

@@ -2,6 +2,7 @@
 (milvus-app/pythonvectordbceph_milvus.py:57-68) mapped to fs.s3a.*.
 No live RGW in this container — assert the key mapping, the env-var
 fallback, and that the keys land on a session's hadoopConfiguration.
+Also get_spark's Python worker daemon: set, and in effect in workers.
 """
 
 from python_vectordbapp_ceph_spark.session import ceph_s3a_conf
@@ -56,3 +57,36 @@ def test_keys_land_on_session_hadoop_conf(spark):
         hconf.set(k[len("spark.hadoop."):], v)
     assert hconf.get("fs.s3a.endpoint") == "http://rgw.test:7480"
     assert hconf.get("fs.s3a.path.style.access") == "true"
+
+
+# --- the Python worker daemon ----------------------------------------------------
+
+
+def test_get_spark_sets_the_package_daemon(spark):
+    from python_vectordbapp_ceph_spark import _pydaemon
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == _pydaemon.__name__
+
+
+def test_workers_skip_the_per_task_zip_reread(spark):
+    """Inside a UDF worker, zipimporter.invalidate_caches is the daemon's
+    no-op. The daemon runs as ``python -m``, so its functions live in
+    ``__main__``; stock PySpark leaves zipimport's own method there."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from python_vectordbapp_ceph_spark import _pydaemon
+
+    @F.pandas_udf("string")
+    def invalidate_caches_name(x: pd.Series) -> pd.Series:
+        import zipimport
+
+        f = zipimport.zipimporter.invalidate_caches
+        return pd.Series([f"{f.__module__}.{f.__qualname__}"] * len(x))
+
+    got = {r[0] for r in spark.range(0, 8, 1, 4).select(
+        invalidate_caches_name("id")).collect()}
+    assert got == {
+        f"__main__.{_pydaemon._keep_archive_directory.__qualname__}"
+    }
