@@ -66,6 +66,27 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
+def collect_bounded(df: DataFrame, cap: int, rows: int | None = None):
+    """The driver-finish gate: ``df`` as a pandas frame when it has at
+    most ``cap`` rows, else None. The driver never holds more than
+    ``cap`` rows.
+
+    One ``limit(cap).toPandas()`` job is both the decision and, when it
+    passes, the data: fewer than ``cap`` rows means the frame is whole.
+    Exactly ``cap`` rows is ambiguous, and only then one more job asks
+    whether a row lies past the cap (``offset(cap).isEmpty()``: one
+    job that ships no columns, where ``count()`` runs two under AQE).
+    A caller that already knows the row count passes it as ``rows``;
+    no job then decides, and a frame that fits is collected whole.
+    ``cap <= 0`` turns the gate off."""
+    if cap <= 0 or (rows is not None and rows > cap):
+        return None
+    if rows is not None:
+        return df.toPandas()
+    pdf = df.limit(cap).toPandas()
+    return pdf if len(pdf) < cap or df.offset(cap).isEmpty() else None
+
+
 def release_caches(scope: str | None = None) -> None:
     """Unpersist tracked intermediates. ``scope=None`` (the legacy
     session-wide cleanup: bench loops, the driver gate) drains EVERY

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ..cache import materialize
+from ..cache import collect_bounded, materialize
 
 
 def _merge_udf(a: str, b: str):
@@ -132,23 +132,24 @@ def bpe_train(
     (rank int, left string, right string) in learning order. Stops
     early when no pair reaches ``min_freq``.
 
-    Driver finish (same gate pattern as dedup_components'
-    ``driver_finish_edges``): the merge loop operates on the
+    Driver finish (the one gate, ``cache.collect_bounded``, that the
+    graph operators share): the merge loop operates on the
     WORD-FREQUENCY table — vocabulary-sized by construction — yet
     each distributed round pays two scheduled jobs (argmax collect +
     checkpointed rewrite) for work that is milliseconds once the
-    table fits on the driver. Below ``driver_finish_words`` rows the
-    table is collected ONCE (Arrow) and the loop runs in plain
-    Python with bit-identical semantics (pytest pins the paths
-    merge-for-merge equal); above it — web-scale vocabularies — the
-    distributed loop runs unchanged. At 1 Mi words the collect is
-    ~tens of MB, the same budget the CC finisher spends."""
+    table fits on the driver. At most ``driver_finish_words`` rows
+    are collected ONCE (Arrow, no separate count) and the loop runs
+    in plain Python with bit-identical semantics (pytest pins the
+    paths merge-for-merge equal); above it — web-scale vocabularies
+    — the distributed loop runs unchanged, after one wasted bounded
+    collect. At 1 Mi words the collect is ~tens of MB, the same
+    budget the CC finisher spends."""
     spark = docs.sparkSession
     wf = word_freq(docs, text_col)
     if driver_finish_words > 0:
         wf = materialize(wf, checkpoint_dir)
-        if wf.count() <= driver_finish_words:
-            pdf = wf.toPandas()
+        pdf = collect_bounded(wf, driver_finish_words)
+        if pdf is not None:
             words = [
                 (list(w), int(f)) for w, f in zip(pdf["word"], pdf["freq"])
             ]

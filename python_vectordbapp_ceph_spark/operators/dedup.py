@@ -56,8 +56,9 @@ def gate_broadcast(side: DataFrame, gate: int | None = None) -> DataFrame:
     ``F.broadcast(side)`` only when the count fits under ``gate``
     (default ``BROADCAST_ID_GATE``, resolved at call time).
 
-    Mirrors the relabel gate inside ``dedup_components`` — the drop /
-    delete / dirty-id lists one call downstream were the remaining
+    The same threshold gates the relabel-map broadcast in
+    ``dedup_components``' distributed rounds. The drop / delete /
+    dirty-id lists joined through this function were once
     unconditional broadcasts ("tiny relative to the corpus" is true
     proportionally, not absolutely). The persist means the count never
     recomputes the funnel that produced the list, and the join reuses
@@ -738,30 +739,23 @@ def srp_near_dups(
     )
 
 
-def _min_label_numpy(src, dst) -> tuple:
+def _min_label_numpy(edges) -> tuple:
     """Vectorized driver-side finisher: min-label propagation with
-    pointer jumping over dense-reindexed edge arrays. Same result as
-    a union-find (label → component-minimum label) but each round is
-    a handful of numpy kernels over all edges at once — ~10× faster
+    pointer jumping over the dense-index edge triple (ids, inv_src,
+    inv_dst) from graph._symmetrize_driver. Same result as a
+    union-find (label → component-minimum label) but each round is a
+    handful of numpy kernels over all edges at once — ~10× faster
     than the per-edge Python loop at 10⁶ edges. Converges in
     O(log diameter) rounds (pointer jumping halves chains).
 
-    TYPE-AGNOSTIC: ids are dense-reindexed through np.unique, and the
-    numpy kernels run on the integer INDICES — string/uuid doc ids
-    (jaccard_pairs and the LSH tiers produce them routinely) work
-    unchanged, with the same lexicographic min-survivor semantics the
-    distributed contraction's F.least/min gives string columns. (An
-    earlier int64 coercion here crashed on any non-numeric id the
-    moment the frontier dropped below driver_finish_edges.)"""
+    TYPE-AGNOSTIC: the kernels run on the integer INDICES into the
+    sorted id universe, so string/uuid doc ids (jaccard_pairs and the
+    LSH tiers produce them routinely) work unchanged, with the same
+    lexicographic min-survivor semantics the distributed
+    contraction's F.least/min gives string columns."""
     import numpy as np
 
-    src = np.asarray(src)
-    dst = np.asarray(dst)
-    # both call sites pass SYMMETRIZED edges, so src already contains
-    # every node: one unique + a binary search beats a second full
-    # unique over the doubled concat (~2× on the reindex)
-    ids, s = np.unique(src, return_inverse=True)
-    d = np.searchsorted(ids, dst)
+    ids, s, d = edges
     lab = np.arange(len(ids), dtype=np.int64)
     while True:
         prev = lab.copy()
@@ -785,15 +779,14 @@ def dedup_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     driver_finish_edges: int = 1 << 20,
-    broadcast_labels: int = 1 << 22,
     checkpoint_dir: str | None = None,
-    two_hop: bool = False,
 ) -> DataFrame:
     """Connected components over near-dup PAIRS → (id, component), with
     component = min id reachable. The transitive-closure finisher
     pair-wise drop rules miss: for a chain A~B~C, drop-larger-of-pair
     keeps A and C (never directly compared) — component grouping
-    collapses the whole chain to one survivor.
+    collapses the whole chain to one survivor. Pairs with a NULL id
+    are dropped.
 
     Min-label CONTRACTION (the MapReduce-CC family of Kiveris et al.,
     "Connected Components in MapReduce and Beyond"): each round every
@@ -815,84 +808,55 @@ def dedup_components(
     -loss caveat); pass a reliable ``checkpoint_dir`` for long
     cluster runs. Checkpoint blocks are dropped by the ContextCleaner
     when the loop releases its references.
-    Driver code only ORCHESTRATES rounds — all data movement is
-    distributed joins, until the contracted frontier fits comfortably
-    in driver memory (``driver_finish_edges``, default 1 Mi edges ≈
-    16 MB): the tail rounds of an iterative graph algorithm touch a few
-    hundred rows yet still pay full scheduling+shuffle latency each, so
-    the remnant is collected once and finished with union-find, and the
-    resulting label→min-label map (small by construction) is broadcast
-    back onto the id→label table. The surviving edge count is re-taken
-    with a real ``count()`` after every contraction round (cheap — the
-    edge set was just checkpointed), so the driver collect is gated by
-    the ACTUAL frontier size every round, never by a stale probe.
-    Contraction shrinks a dense dup graph by orders of magnitude per
-    round, so even at 100 TB the frontier typically crosses the
-    threshold after the first round or two."""
-    from ..cache import materialize, tracked_persist
+
+    Driver finish, through the one gate ``cache.collect_bounded``
+    shared with pagerank and kcore: the tail rounds of an iterative
+    graph algorithm touch a few hundred rows yet still pay full
+    scheduling+shuffle latency each, so a frontier that fits in
+    ``driver_finish_edges`` symmetrized edges (default 1 Mi ≈ 16 MB)
+    is collected once and finished in numpy. Before any distributed
+    round the gate is on the pairs (at most ``driver_finish_edges //
+    2`` of them) and the finisher's label map IS the result; after a
+    round it is on the real edge count the round just took, and the
+    label map is broadcast back onto the id→label table. Contraction
+    shrinks a dense dup graph by orders of magnitude per round, so
+    even at 100 TB the frontier typically crosses the threshold after
+    the first round or two."""
+    from ..cache import collect_bounded, materialize, tracked_persist
+    from .graph import _driver_graph, _graph_input, _symmetrize_driver, _symmetrized
 
     def _ckpt(df: DataFrame) -> DataFrame:
         return materialize(df, checkpoint_dir)
 
-    # Materialize the pair set ONCE before symmetrizing: the union
-    # references it twice, and an unpersisted upstream funnel (e.g. the
-    # full Jaccard verify) would run twice inside the first checkpoint
-    # (the self-join double-eval trap).
-    p0 = _ckpt(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-    # NO up-front distinct on the symmetrized edges — measured (sf1,
-    # 44.7M pairs) it was the single largest cost of the whole
-    # algorithm: a full hash-shuffle + dedup of 2|E| mostly-unique
-    # rows. It buys nothing: min-label contraction is DUPLICATE-
-    # INSENSITIVE (min over a multiset equals min over its set; the
-    # relabel groupBy partial-combines map-side either way), and the
-    # per-round post-relabel distinct runs AFTER contraction collapses
-    # the key space, where the combine makes it metadata-cheap. A
-    # caller feeding heavily duplicated pairs inflates round-1 join
-    # volume only; every caller previously paid the full dedup shuffle.
-    # (The r8→r9 ask was to cut ROUND COUNT — large-star or two-hop —
-    # but dense dup graphs already contract in 1-2 rounds + driver
-    # finish; the measured bottleneck was this per-round volume.)
-    edges = _ckpt(
-        p0.union(p0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    remaining = None
-    if driver_finish_edges > 0 and max_iter > 0:
-        # round-0 driver finish: the whole edge set is already under
-        # the collect gate, so the id→label identity table (a distinct
-        # shuffle) and the relabel join are pure overhead — the numpy
-        # finisher's label map IS the (id, comp) result, every edge
-        # node included. ONE gated collect (r15): LIMIT gate rows is
-        # both the gate decision and, when it passes, the data — the
-        # count()+toPandas() pair re-read the same checkpointed rows.
-        # Fewer than gate rows ⇒ we hold the whole edge set; exactly
-        # gate rows is ambiguous (maybe truncated), so only that
-        # boundary pays a count() to disambiguate. The driver never
-        # holds more than driver_finish_edges rows (the same bound the
-        # old count()-first gate enforced, pinned by
-        # test_dedup_components_guard_bounds_driver_collect); a failed
-        # gate wastes one bounded collect before the distributed rounds.
-        import pandas as _pd
+    p0 = _graph_input(pairs, id_a, id_b, checkpoint_dir)
+    id_t = p0.schema["src"].dataType.simpleString()
 
-        pdf = edges.limit(driver_finish_edges).toPandas()
-        complete = len(pdf) < driver_finish_edges
-        if not complete and len(pdf) == driver_finish_edges:
-            remaining = edges.count()
-            complete = remaining == driver_finish_edges
-        if complete and len(pdf) > 0:
-            node_ids, labels = _min_label_numpy(
-                pdf["src"].values, pdf["dst"].values
-            )
-            id_t = edges.schema["src"].dataType.simpleString()
-            return pairs.sparkSession.createDataFrame(
-                _pd.DataFrame({"id": node_ids, "comp": labels}),
-                f"id {id_t}, comp {id_t}",
-            )
-        if len(pdf) == 0:
-            remaining = 0
-        del pdf
-    if remaining is None:
-        remaining = edges.count()
+    def finish(tri, comp: DataFrame | None) -> DataFrame:
+        """The one driver finisher: min labels over the collected
+        edges are the result before any distributed round, and
+        compose onto the id→label table ``comp`` after one."""
+        ids, labels = _min_label_numpy(tri)
+        relmap = pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"_u": ids, "_new": labels}),
+            f"_u {id_t}, _new {id_t}",
+        )
+        if comp is None:
+            return relmap.toDF("id", "comp")
+        return comp.join(
+            F.broadcast(relmap), comp["comp"] == relmap["_u"], "left"
+        ).select("id", F.coalesce("_new", "comp").alias("comp"))
+
+    tri = _driver_graph(p0, driver_finish_edges if max_iter > 0 else 0)
+    if tri is not None:
+        return finish(tri, None)
+    # NO distinct on the symmetrized edges — measured (sf1, 44.7M
+    # pairs) it was the single largest cost of the whole algorithm: a
+    # full hash-shuffle + dedup of 2|E| mostly-unique rows. Min-label
+    # contraction is DUPLICATE-INSENSITIVE (min over a multiset equals
+    # min over its set), and the per-round post-relabel distinct runs
+    # AFTER contraction collapses the key space.
+    edges = _ckpt(_symmetrized(p0))
+    remaining = edges.count()
     # id → current label; composed with each round's relabel
     comp = _ckpt(
         edges.select(F.col("src").alias("id")).distinct().withColumn(
@@ -902,78 +866,27 @@ def dedup_components(
     for _ in range(max_iter):
         if remaining == 0:
             break
-        if remaining <= driver_finish_edges:
-            # finish the remnant driver-side: one Arrow collect, one
-            # broadcast-relabel join — replaces O(log d) tail rounds.
-            # toPandas (Arrow batches) here, NOT toLocalIterator: the
-            # per-row py4j path measured ~6 s for 880k edges vs ~0.3 s
-            # over Arrow — it's what made a larger finish threshold
-            # look like a pessimization.
-            import pandas as _pd
-
-            pdf = edges.toPandas()
-            node_ids, labels = _min_label_numpy(
-                pdf["src"].values, pdf["dst"].values
-            )
-            comp_t = comp.schema["comp"].dataType.simpleString()
-            relmap = comp.sparkSession.createDataFrame(
-                _pd.DataFrame({"_u": node_ids, "_new": labels}),
-                f"_u {comp_t}, _new {comp_t}",
-            )
-            comp = (
-                comp.join(F.broadcast(relmap), comp["comp"] == relmap["_u"], "left")
-                .select(
-                    F.col("id"),
-                    F.coalesce(F.col("_new"), F.col("comp")).alias("comp"),
-                )
-            )
-            remaining = 0
+        pdf = collect_bounded(edges, driver_finish_edges, rows=remaining)
+        if pdf is not None:
+            comp = finish(_symmetrize_driver(pdf), comp)
             break
-        # each live node adopts min(self, min neighbor); with
-        # ``two_hop`` it also sees its neighbors' neighbor-mins (one
-        # extra shuffle join per round) — the propagation radius
-        # squares, so long chains halve their round count, at the
-        # price of re-shuffling the edge set once more per round.
-        # Measured at sfx30 (r9 verdict ask #5, table in
-        # tools/plans_appendix.md): dense near-dup graphs contract in
-        # 1-2 rounds either way, so the extra per-round volume LOSES
-        # there — the flag stays off by default and is kept for
-        # long-diameter graphs (reference-chain corpora).
-        m1 = edges.groupBy("src").agg(F.min("dst").alias("_mn"))
-        if two_hop:
-            n1 = m1.select(F.col("src").alias("_v"), F.col("_mn").alias("_m1"))
-            m2 = (
-                edges.join(n1, edges["dst"] == n1["_v"])
-                .groupBy("src")
-                .agg(F.min("_m1").alias("_mn2"))
-            )
-            relab_src = (
-                m1.join(m2, "src", "left")
-                .select(
-                    F.col("src").alias("_u"),
-                    F.least(
-                        F.col("src"),
-                        F.col("_mn"),
-                        F.coalesce(F.col("_mn2"), F.col("_mn")),
-                    ).alias("_new"),
-                )
-            )
-        else:
-            relab_src = m1.select(
+        # each live node adopts min(self, min neighbor). The relabel
+        # map has ≤ one row per LIVE node and three joins consume it
+        # (comp composition + both edge-rewrite sides). Left to static
+        # planning its size is unknown (persisted but not yet
+        # materialized) → sort-merge, which shuffles the FULL edge set
+        # twice per round — at sfx30 that is 805M rows ×2. The count()
+        # both materializes the persist and gates an explicit
+        # broadcast (64 MB at the 4 Mi-label BROADCAST_ID_GATE; above
+        # that, billions of live nodes, shuffle is the right plan).
+        relab = tracked_persist(
+            edges.groupBy("src").agg(F.min("dst").alias("_mn")).select(
                 F.col("src").alias("_u"),
                 F.least(F.col("src"), F.col("_mn")).alias("_new"),
             )
-        relab = tracked_persist(relab_src)
-        # the relabel map has ≤ one row per LIVE node and three joins
-        # consume it (comp composition + both edge-rewrite sides).
-        # Left to static planning its size is unknown (persisted but
-        # not yet materialized) → sort-merge, which shuffles the FULL
-        # edge set twice per round — at sfx30 that is 805M rows ×2.
-        # The count() both materializes the persist and gates an
-        # explicit broadcast (64 MB at the 4 Mi-label default; above
-        # that, billions of live nodes, shuffle is the right plan).
+        )
         n_lab = relab.count()
-        rel_j = F.broadcast(relab) if n_lab <= broadcast_labels else relab
+        rel_j = F.broadcast(relab) if n_lab <= BROADCAST_ID_GATE else relab
         new_comp = _ckpt(
             comp.join(rel_j, comp["comp"] == relab["_u"], "left")
             .select(F.col("id"), F.coalesce(F.col("_new"), F.col("comp")).alias("comp"))

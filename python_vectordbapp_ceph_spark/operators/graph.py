@@ -6,6 +6,10 @@ high-rank nodes are the canonical/most-copied documents, the natural
 survivor choice when "keep the most central copy" beats "keep min id".
 
 Spark-first design, same loop discipline as dedup_components:
+  - one input step for all three operators (_graph_input: NULL ids
+    dropped, materialized once) and one driver-finish gate
+    (_driver_graph: pairs that fit under ``driver_finish_edges // 2``
+    are collected once and finished in numpy on the driver);
   - edges symmetrized once, degrees precomputed (one aggregation);
   - each iteration is one join (ranks onto edge sources) + one
     groupBy(dst) aggregation — both shuffle on node id, so successive
@@ -24,10 +28,12 @@ pytest on closed-form graphs (star, cycle) instead.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import materialize, tracked_persist
+from ..cache import collect_bounded, materialize, tracked_persist
 
 
 def _pagerank_driver(
@@ -42,10 +48,10 @@ def _pagerank_driver(
     dense-index triple from _symmetrize_driver — symmetrized,
     self-loop-free, deduplicated, already reindexed (re-deriving the
     index here cost a second full np.unique per call)."""
-    import numpy as np
-
     ids, inv_src, inv_dst = edges_pdf
     n = len(ids)
+    if n == 0:
+        return ids, np.zeros(0)
     deg = np.bincount(inv_src, minlength=n)
     w = 1.0 / deg[inv_src]
     base = (1.0 - damping) / n
@@ -58,17 +64,15 @@ def _pagerank_driver(
 
 
 def _symmetrize_driver(pdf):
-    """Driver-side twin of the union+filter+distinct edge build used
-    by the sub-gate graphs: symmetrize, drop self-loops, dedup via
+    """Driver-side twin of the union+filter+distinct edge build, used
+    by all three graph operators below the gate: symmetrize, drop self-loops, dedup via
     dense-reindexed integer codes (type-agnostic — string/uuid ids
     dedup through their np.unique index, same trick as
     dedup._min_label_numpy). Replaces a full distributed shuffle +
     distinct of the doubled pair set that the driver finisher was
     about to collect anyway. Returns (ids, inv_src, inv_dst): the
     sorted node-id universe plus dense edge indices into it — the
-    form both finishers consume directly."""
-    import numpy as np
-
+    form every driver finisher consumes directly."""
     a = pdf["src"].to_numpy()
     b = pdf["dst"].to_numpy()
     keep = a != b
@@ -85,6 +89,37 @@ def _symmetrize_driver(pdf):
     return ids, codes // len(ids), codes % len(ids)
 
 
+def _graph_input(
+    pairs: DataFrame, id_a: str, id_b: str, checkpoint_dir: str | None
+) -> DataFrame:
+    """The one input step of the graph operators: ``(src, dst)`` with
+    NULL endpoints dropped, materialized once — the distributed
+    symmetrize references it twice, and an unmaterialized upstream
+    funnel would run once per reference. A NULL id is no node on any
+    path (the distributed ``src != dst`` filter drops it as well)."""
+    return materialize(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).dropna(),
+        checkpoint_dir,
+    )
+
+
+def _driver_graph(p0: DataFrame, driver_finish_edges: int):
+    """The driver-finish gate on the pairs: 2·|pairs| symmetrized
+    edges fit under ``driver_finish_edges`` iff |pairs| ≤
+    ``driver_finish_edges // 2``. Returns the _symmetrize_driver
+    triple when they fit (one bounded collect), else None."""
+    pdf = collect_bounded(p0, driver_finish_edges // 2)
+    return None if pdf is None else _symmetrize_driver(pdf)
+
+
+def _symmetrized(p0: DataFrame) -> DataFrame:
+    """Both orientations of every pair, self-loops dropped: the
+    distributed twin of _symmetrize_driver, without its dedup."""
+    return p0.union(
+        p0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).filter(F.col("src") != F.col("dst"))
+
+
 def pagerank(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -95,62 +130,32 @@ def pagerank(
     driver_finish_edges: int = 1 << 20,
 ) -> DataFrame:
     """PageRank over an UNDIRECTED pair set (each pair becomes two
-    directed edges). Returns (id, rank); ranks over the edge-covered
-    nodes sum to ~1.
+    directed edges; pairs with a NULL id are dropped). Returns (id,
+    rank); ranks over the edge-covered nodes sum to ~1.
 
-    Driver finish (the dedup_components gate pattern): ``iterations``
-    distributed rounds each pay a join + aggregate + checkpoint of a
-    frontier that, on a near-dup graph, is a few hundred thousand
-    edges — scheduling-bound, not data-bound. At or below
-    ``driver_finish_edges`` symmetrized edges (default 1 Mi ≈ 16 MB)
-    the edge set is collected ONCE over Arrow and the loop runs as
-    numpy scatter-adds; beyond it the distributed loop runs
-    unchanged. Rank values differ from the distributed path only in
-    float summation order — the same ulp-level freedom that already
-    makes this operator rows-only."""
-    p0 = materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-        checkpoint_dir,
-    )
-    # ONE gated collect (r15): the old gate paid a count() job and then
-    # a toPandas() job for the same checkpointed rows — a LIMIT of cap
-    # rows IS the gate decision and, when it passes, already the data
-    # (fewer than cap rows ⇒ we hold them all; exactly cap is the only
-    # ambiguous case and alone pays a count() to disambiguate). The
-    # driver never holds more than cap rows — the same bound the old
-    # count()-first gate enforced. A failed gate wastes one bounded
-    # ≤cap-row collect (~16 MB) before the distributed path — a fixed
-    # driver-side cost at any scale.
-    if driver_finish_edges > 0:
-        cap = driver_finish_edges // 2  # 2·|pairs| ≤ gate ⇔ |pairs| ≤ cap
-        pdf = p0.limit(cap).toPandas()
-        complete = len(pdf) < cap or (
-            len(pdf) == cap and p0.count() == cap
+    Driver finish (the one gate shared with kcore and
+    dedup_components): ``iterations`` distributed rounds each pay a
+    join + aggregate + checkpoint of a frontier that, on a near-dup
+    graph, is a few hundred thousand edges — scheduling-bound, not
+    data-bound. When the pairs number at most ``driver_finish_edges
+    // 2`` (default 1 Mi symmetrized edges ≈ 16 MB) they are
+    collected ONCE over Arrow (``cache.collect_bounded``) and the loop
+    runs as numpy scatter-adds; beyond it the distributed loop runs
+    unchanged, after one wasted bounded collect. Rank values differ
+    from the distributed path only in float summation order — the
+    same ulp-level freedom that already makes this operator
+    rows-only."""
+    p0 = _graph_input(pairs, id_a, id_b, checkpoint_dir)
+    tri = _driver_graph(p0, driver_finish_edges)
+    if tri is not None:
+        ids, ranks = _pagerank_driver(tri, damping, iterations)
+        # pandas frame → Arrow path: a list-of-tuples createDataFrame
+        # measured ~1.7 s at 81k rows vs ~0.1 s over Arrow
+        id_t = p0.schema["src"].dataType.simpleString()
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "rank": ranks}), f"id {id_t}, rank double"
         )
-        if complete:
-            import pandas as _pd
-
-            spark = pairs.sparkSession
-            id_t = p0.schema["src"].dataType.simpleString()
-            ids, inv_s, inv_d = _symmetrize_driver(pdf)
-            if len(inv_s) == 0:
-                return spark.createDataFrame([], f"id {id_t}, rank double")
-            _, ranks = _pagerank_driver(
-                (ids, inv_s, inv_d), damping, iterations
-            )
-            # pandas frame → Arrow path: a list-of-tuples createDataFrame
-            # measured ~1.7 s at 81k rows vs ~0.1 s over Arrow
-            return spark.createDataFrame(
-                _pd.DataFrame({"id": ids, "rank": ranks}),
-                f"id {id_t}, rank double",
-            )
-        del pdf
-    edges = materialize(
-        p0.union(p0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct(),
-        checkpoint_dir,
-    )
+    edges = materialize(_symmetrized(p0).distinct(), checkpoint_dir)
     # deg feeds BOTH eager materializations below (nodes, the weighted
     # edge table) — persist it so the full-edge groupBy shuffle runs
     # once per call, not twice (same discipline kcore applies to its
@@ -221,58 +226,34 @@ def kcore(
     plans don't nest. Rounds needed = peel depth, typically O(10) on
     heavy-tailed graphs; every round strictly shrinks the edge set or
     terminates, and each round's cost is proportional to the CURRENT
-    (shrinking) edge set, not the input."""
-    p0 = materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-        checkpoint_dir,
-    )
-    if driver_finish_edges > 0:
-        # the k-core is UNIQUE (maximal subgraph with min-degree >= k,
-        # peel-order-independent), so the driver peel is exactly equal
-        # to the distributed result — same gate rationale as pagerank,
-        # including the skipped distributed symmetrize+distinct (the
-        # numpy dedup in _symmetrize_driver keeps degrees exact) and
-        # the r15 single gated collect (LIMIT cap rows is both the
-        # gate decision and, when it passes, the data; only the
-        # exactly-cap boundary pays a count() to disambiguate — the
-        # driver never holds more than cap rows, as before)
-        cap = driver_finish_edges // 2
-        pdf = p0.limit(cap).toPandas()
-        complete = len(pdf) < cap or (
-            len(pdf) == cap and p0.count() == cap
-        )
-        if complete:
-            import numpy as np
-            import pandas as _pd
+    (shrinking) edge set, not the input.
 
-            spark = pairs.sparkSession
-            id_t = p0.schema["src"].dataType.simpleString()
-            ids, si, di = _symmetrize_driver(pdf)
-            while True:
-                if len(si) == 0:
-                    return spark.createDataFrame([], f"id {id_t}")
-                # dense-index peel: degree by bincount, weakness by
-                # index lookup — the per-round np.isin over raw ids was
-                # an O(E·log V) search each round for the same info
-                deg = np.bincount(si, minlength=len(ids))
-                weak = (deg > 0) & (deg < k)
-                if not weak.any():
-                    break
-                bad = weak[si] | weak[di]
-                si, di = si[~bad], di[~bad]
-            survivors = ids[
-                np.flatnonzero(np.bincount(si, minlength=len(ids)))
-            ]
-            return spark.createDataFrame(
-                _pd.DataFrame({"id": survivors}), f"id {id_t}"
-            )
-        del pdf
-    edges = materialize(
-        p0.union(p0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct(),
-        checkpoint_dir,
-    )
+    Driver finish: the gate shared with pagerank and dedup_components.
+    Pairs numbering at most ``driver_finish_edges // 2`` are collected
+    once and peeled in numpy; pairs with a NULL id are dropped on
+    both paths."""
+    p0 = _graph_input(pairs, id_a, id_b, checkpoint_dir)
+    # the k-core is UNIQUE, so the driver peel (behind the same gate as
+    # pagerank) equals the distributed result exactly
+    tri = _driver_graph(p0, driver_finish_edges)
+    if tri is not None:
+        ids, si, di = tri
+        while len(si):
+            # dense-index peel: degree by bincount, weakness by index
+            # lookup — the per-round np.isin over raw ids was an
+            # O(E·log V) search each round for the same info
+            deg = np.bincount(si, minlength=len(ids))
+            weak = (deg > 0) & (deg < k)
+            if not weak.any():
+                break
+            bad = weak[si] | weak[di]
+            si, di = si[~bad], di[~bad]
+        survivors = ids[np.flatnonzero(np.bincount(si, minlength=len(ids)))]
+        id_t = p0.schema["src"].dataType.simpleString()
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"id": survivors}), f"id {id_t}"
+        )
+    edges = materialize(_symmetrized(p0).distinct(), checkpoint_dir)
     for _ in range(max_iter):
         # persisted: the degree table feeds BOTH the stop-check count
         # and the keep-filter semi-joins — unpersisted it would be

@@ -479,13 +479,16 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the EXACT-Jaccard similarity graph —
     the hash-verified twin of q_dedup_components (whose LSH edge set
     is approximate by design). Both engines walk the same edges:
-    Spark via iterative min-label propagation (one shuffle per round,
-    rounds = graph diameter), DuckDB via a recursive-CTE transitive
-    closure. Min-reachable-id labels are algorithm-independent, so
-    the results hash-match exactly. At 100 TB the closure form is
-    infeasible (quadratic frontier) while label propagation stays
-    one bounded shuffle per round — that asymmetry is the point of
-    implementing it as an operator rather than SQL."""
+    Spark via dedup_components, DuckDB via a recursive-CTE transitive
+    closure. A pair set that fits the driver gate (at most
+    ``driver_finish_edges // 2`` pairs, as here) is collected once and
+    labeled in numpy; a larger one runs min-label contraction rounds,
+    a few bounded shuffles per round, until the frontier fits.
+    Min-reachable-id labels are algorithm-independent, so the results
+    hash-match exactly. At 100 TB the closure form is infeasible
+    (quadratic frontier) while contraction stays bounded shuffles per
+    round — that asymmetry is the point of implementing it as an
+    operator rather than SQL."""
     from ..operators.dedup import dedup_components
 
     d = T(spark, sf_dir, "documents")

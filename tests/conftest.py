@@ -1,4 +1,5 @@
 import sys
+import uuid
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -46,3 +47,18 @@ def rows_set(df, ndigits: int | None = None):
             vals.append(tuple(v) if isinstance(v, list) else v)
         out.add(tuple(vals))
     return out
+
+
+def jobs_of(spark, fn):
+    """Run ``fn`` in a job group of its own: (its result, the number of
+    Spark jobs it ran). Waits for the listener bus, so every job the
+    call started is in the status store before it is counted."""
+    sc = spark.sparkContext
+    group = f"jobs_of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -120,3 +120,21 @@ def test_driver_finish_equals_distributed_path(spark):
         .orderBy("rank").collect()
     ]
     assert fast == dist and len(fast) > 0
+
+
+def test_driver_finish_runs_no_separate_count(spark, monkeypatch):
+    """The word table is gated by the bounded collect alone: bpe_train
+    never calls count() on the way to the driver loop."""
+    docs = spark.createDataFrame([("a b a ab ab",), ("ab b",)], "text string")
+    df_cls = type(docs)
+    counted = []
+    orig_count = df_cls.count
+
+    def spy(self):
+        counted.append(1)
+        return orig_count(self)
+
+    monkeypatch.setattr(df_cls, "count", spy)
+    merges = bpe_train(docs, n_merges=2, min_freq=2)
+    assert not counted
+    assert [(r.left, r.right) for r in merges.collect()] == [("a", "b")]

@@ -351,31 +351,64 @@ def test_pipeline_drop_lists_respect_gate(spark, monkeypatch):
 
 
 @pytest.mark.slow
-def test_dedup_components_two_hop_identical_labels(spark):
-    """two_hop=True must produce EXACTLY the same (id, comp) labeling
-    (component = min reachable id is algorithm-independent); the flag
-    only changes round count/volume. Long chain + dense block + an
-    isolated pair cover the propagation shapes."""
+def test_dedup_components_distributed_labels_equal_driver_finish(spark):
+    """The distributed contraction rounds (driver finish off) must give
+    EXACTLY the (id, comp) labeling of the default driver finish:
+    component = min reachable id is algorithm-independent. A long
+    chain, a dense block and an isolated pair cover the propagation
+    shapes."""
     from python_vectordbapp_ceph_spark.cache import release_caches
     from python_vectordbapp_ceph_spark.operators.dedup import dedup_components
 
-    # chain short enough for the ONE-hop path inside max_iter=20 with
-    # the driver finish disabled (min-label contraction shortens a
-    # path roughly one node per round — the very cost two_hop halves)
+    # chain short enough for the distributed path inside max_iter=20
+    # (min-label contraction shortens a path roughly one node per round)
     chain = [(i, i + 1) for i in range(1, 13)]          # diameter 12
     block = [(100 + a, 100 + b) for a in range(6) for b in range(a + 1, 6)]
     pairs = spark.createDataFrame(
         chain + block + [(500, 501)], "id_a long, id_b long"
     )
     try:
-        # driver_finish disabled so the distributed rounds (where the
-        # two paths differ) actually run
-        one = {r.id: r.comp for r in dedup_components(
+        dist = {r.id: r.comp for r in dedup_components(
             pairs, driver_finish_edges=0).collect()}
-        two = {r.id: r.comp for r in dedup_components(
-            pairs, driver_finish_edges=0, two_hop=True).collect()}
-        assert one == two
-        assert two[12] == 1 and two[105] == 100 and two[501] == 500
+        fast = {r.id: r.comp for r in dedup_components(pairs).collect()}
+        assert dist == fast
+        assert dist[12] == 1 and dist[105] == 100 and dist[501] == 500
+    finally:
+        release_caches()
+
+
+def test_dedup_components_supports_string_ids(spark):
+    """The driver finisher (frontier below driver_finish_edges — i.e.
+    nearly always) must handle string/uuid ids; the int64-coerced
+    numpy path crashed on them."""
+    from python_vectordbapp_ceph_spark.operators.dedup import (
+        dedup_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
+    )
+    got = {r.id: r.comp for r in dedup_components(pairs).collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_dedup_components_driver_finish_is_two_jobs(spark):
+    """A pair set under the gate costs one materialization of the pairs
+    and one bounded collect — no checkpoint of the symmetrized edges
+    before the gate."""
+    from conftest import jobs_of
+
+    from python_vectordbapp_ceph_spark.cache import release_caches
+    from python_vectordbapp_ceph_spark.operators.dedup import dedup_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    try:
+        comps, jobs = jobs_of(spark, lambda: dedup_components(pairs))
+        assert jobs == 2
+        got = {r.id: r.comp for r in comps.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     finally:
         release_caches()
 

@@ -1,5 +1,7 @@
 """PageRank (operators/graph.py): absolute values on closed-form
 graphs — the evidence backing the rows-only q_pagerank registration.
+Also the graph operators' shared input step (NULL ids) and their one
+driver-finish gate, cache.collect_bounded.
 """
 
 import pytest
@@ -117,3 +119,82 @@ def test_kcore_driver_finish_exactly_equals_distributed(spark):
         r.id for r in kcore(pairs, k=4, driver_finish_edges=0).collect()
     )
     assert fast == dist == [0, 1, 2, 3, 4]
+
+
+def _pr(pairs, **kw):
+    return {r.id: r.rank for r in pagerank(pairs, iterations=6, **kw).collect()}
+
+
+def _kc(pairs, **kw):
+    return {r.id: 1 for r in kcore(pairs, k=2, **kw).collect()}
+
+
+def _cc(pairs, **kw):
+    from python_vectordbapp_ceph_spark.operators.dedup import dedup_components
+
+    return {r.id: r.comp for r in dedup_components(pairs, **kw).collect()}
+
+
+@pytest.mark.parametrize(
+    "op, rows, nodes",
+    [
+        (_pr, [(1, 2), (2, 3), (3, None), (None, 4), (1, 3)], {1, 2, 3}),
+        (_kc, [(1, None), (2, None), (1, 2)], set()),
+        (_cc, [(1, 2), (2, 3), (3, None), (None, 4), (1, 3)], {1, 2, 3}),
+    ],
+    ids=["pagerank", "kcore", "dedup_components"],
+)
+def test_null_ids_are_no_nodes_on_either_path(spark, op, rows, nodes):
+    """A pair with a NULL id is dropped: the driver finish and the
+    distributed path (``driver_finish_edges=0``) give the same result,
+    and NULL is never a node."""
+    import math
+
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    try:
+        fast = op(pairs)
+        dist = op(pairs, driver_finish_edges=0)
+    finally:
+        release_caches()
+    assert set(fast) == set(dist) == nodes
+    for i in fast:
+        assert math.isclose(fast[i], dist[i], rel_tol=1e-9), (i, fast[i], dist[i])
+
+
+@pytest.mark.parametrize(
+    "n, cap, rows, whole, jobs",
+    [
+        (10, 20, None, True, 1),    # under cap: the collect decides
+        (10, 10, None, True, 2),    # exactly cap: one probe past the cap
+        (10, 9, None, False, 2),    # cap + 1: the same probe says no
+        (10, 0, None, False, 0),    # gate off
+        (10, 9, 10, False, 0),      # known rows over cap: no job
+        (10, 20, 10, True, 1),      # known rows under cap: the collect only
+    ],
+    ids=["under", "exact", "cap_plus_1", "cap_0", "rows_over", "rows_under"],
+)
+def test_collect_bounded(spark, monkeypatch, n, cap, rows, whole, jobs):
+    """The one driver-finish gate: the frame when it fits, else None;
+    no collect pulls more than ``cap`` rows; and the jobs it costs."""
+    from conftest import jobs_of
+
+    from python_vectordbapp_ceph_spark.cache import collect_bounded, materialize
+
+    df = materialize(spark.range(n))
+    df_cls = type(df)
+    sizes = []
+    orig_to_pandas = df_cls.toPandas
+
+    def spy(self):
+        pdf = orig_to_pandas(self)
+        sizes.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(df_cls, "toPandas", spy)
+    pdf, ran = jobs_of(spark, lambda: collect_bounded(df, cap, rows))
+    if whole:
+        assert sorted(pdf["id"]) == list(range(n))
+    else:
+        assert pdf is None
+    assert all(s <= cap for s in sizes), sizes
+    assert ran == jobs

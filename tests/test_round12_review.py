@@ -428,21 +428,6 @@ def test_lsh_bands_exceeding_signature_raises(spark):
         minhash_lsh_candidates(sigs, bands=4).collect()
 
 
-def test_dedup_components_supports_string_ids(spark):
-    """The driver finisher (frontier below driver_finish_edges — i.e.
-    nearly always) must handle string/uuid ids; the int64-coerced
-    numpy path crashed on them."""
-    from python_vectordbapp_ceph_spark.operators.dedup import (
-        dedup_components,
-    )
-
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
-    )
-    got = {r.id: r.comp for r in dedup_components(pairs).collect()}
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-
-
 def test_mllib_lsh_tolerates_empty_documents(spark):
     from python_vectordbapp_ceph_spark.operators.dedup import (
         minhash_lsh_mllib,
