@@ -117,12 +117,22 @@ def l2_norm(v: Column | str) -> Column:
 
 def l2_normalize(v: Column | str) -> Column:
     """Scale to unit L2 norm; zero vectors pass through unchanged
-    (sklearn's behavior, which the reference relies on)."""
+    (sklearn's behavior, which the reference relies on).
+
+    The norm is bound as a LAMBDA VARIABLE (single-element transform,
+    the idiom of ``operators.dedup.shingles``). Captured as a subtree
+    inside the per-element lambda it would be re-evaluated for every
+    element — O(d²) per row: 1.09 s against 0.07 s over 700 rows at
+    384 dims on local[4]. The values are unchanged: the same norm
+    divides each element."""
     v = F.col(v) if isinstance(v, str) else v
-    norm = l2_norm(v)
-    return F.when(norm == 0.0, v.cast("array<double>")).otherwise(
-        F.transform(v, lambda x: x.cast("double") / norm)
-    )
+
+    def scale(norm):
+        return F.when(norm == 0.0, v.cast("array<double>")).otherwise(
+            F.transform(v, lambda x: x.cast("double") / norm)
+        )
+
+    return F.element_at(F.transform(F.array(l2_norm(v)), scale), 1)
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:

@@ -69,15 +69,21 @@ def fit_bq(df: DataFrame, vec_col: str, dim: int) -> BQParams:
 
 def bq_encode(df: DataFrame, vec_col: str, params: BQParams, out_col: str = "bq_code") -> DataFrame:
     """Pack sign bits into ``array<bigint>`` (little-endian within and
-    across words): bit (w*64+b) set ⟺ v[w*64+b] > mean[w*64+b]."""
+    across words): bit (w*64+b) set ⟺ v[w*64+b] > mean[w*64+b].
+
+    The cast vector is bound as a lambda variable (single-element
+    transform): the optimizer inlines a once-referenced ``_v`` column
+    into the per-bit lambda, which then re-ran the whole-array cast for
+    every bit — O(d²) per row."""
     dim, n_words = params.dim, params.n_words
     means = V.vector_literal(params.means)
     words = F.expr(
-        f"transform(sequence(0, {n_words - 1}), w ->"
-        f" aggregate(sequence(0, 63), 0L, (acc, b) ->"
-        f"  if(w * 64 + b < {dim} and"
-        f"     element_at(_v, w * 64 + b + 1) > element_at(_mn, w * 64 + b + 1),"
-        f"     acc + shiftleft(1L, b), acc)))"
+        "element_at(transform(array(_v), vd ->"
+        f" transform(sequence(0, {n_words - 1}), w ->"
+        f"  aggregate(sequence(0, 63), 0L, (acc, b) ->"
+        f"   if(w * 64 + b < {dim} and"
+        f"      element_at(vd, w * 64 + b + 1) > element_at(_mn, w * 64 + b + 1),"
+        f"      acc + shiftleft(1L, b), acc)))), 1)"
     )
     return (
         df.withColumn("_v", F.col(vec_col).cast("array<double>"))

@@ -255,14 +255,15 @@ def kcore(
         )
     edges = materialize(_symmetrized(p0).distinct(), checkpoint_dir)
     for _ in range(max_iter):
-        # persisted: the degree table feeds BOTH the stop-check count
-        # and the keep-filter semi-joins — unpersisted it would be
-        # recomputed (one extra shuffle over the frontier) per round
+        # persisted: the degree table feeds BOTH the stop check and
+        # the keep-filter semi-joins — unpersisted it would be
+        # recomputed (one extra shuffle over the frontier) per round.
+        # The stop check only asks "any weak node?": isEmpty() is one
+        # job, where count() is two under AQE.
         deg = tracked_persist(
             edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         )
-        n_weak = deg.filter(F.col("deg") < k).count()
-        if n_weak == 0:
+        if deg.filter(F.col("deg") < k).isEmpty():
             deg.unpersist()
             break
         keep = deg.filter(F.col("deg") >= k).select("src")

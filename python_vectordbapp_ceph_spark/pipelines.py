@@ -8,10 +8,10 @@ operators composed the way a 100 TB corpus job composes them:
 Every stage is one of the registry's tested operators; this module
 only sequences them into a single lazy plan (the driver sees one
 DataFrame — Catalyst fuses the stages; nothing materializes until the
-sink). The LSH candidate set is the only stage that must resolve
-before the anti-join; the resulting drop-list is count-gated —
-broadcast while it fits (the common case), plain anti-join above the
-gate (at 100 TB web-crawl dup rates the list is corpus-scale).
+sink). The near-dup drop list is anti-joined with a plain join: AQE
+broadcasts it from its measured size while it fits (the common case)
+and shuffles it above the threshold (at 100 TB web-crawl dup rates the
+list is corpus-scale).
 """
 
 from __future__ import annotations
@@ -24,12 +24,26 @@ from .functions import text as X
 from .functions import vector as V
 from .io import load_table
 from .operators.dedup import (
+    _spread,
     exact_dedup,
     gate_broadcast,
-    jaccard_pairs,
     minhash_lsh_candidates,
     minhash_signatures,
+    shingles,
 )
+
+
+def _shingled(docs: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
+    """(id, sh, n_sh), shingled ONCE and persisted: the table feeds the
+    MinHash signatures AND both sides of the verify join. Without the
+    materialization barrier the normalize→split→shingle pipeline — the
+    dominant cost of the funnel — would run once per consumer."""
+    return tracked_persist(
+        _spread(docs, id_col).select(
+            F.col(id_col),
+            shingles(text_col, shingle_n).alias("sh"),
+        ).withColumn("n_sh", F.size("sh"))
+    )
 
 
 def near_dup_drop_list(
@@ -45,23 +59,16 @@ def near_dup_drop_list(
 
     Funnel: LSH candidates (bucket-join, no n²) → exact Jaccard verify
     restricted to the candidate pairs → keep-min/drop-max survivor
-    rule. The drop list is small PROPORTIONALLY but not absolutely —
-    the caller anti-joins it through ``gate_broadcast``."""
-    sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_n)
+    rule. Lazy: building the plan runs no Spark job. The drop list is
+    small PROPORTIONALLY but not absolutely; a caller anti-joins it
+    with a plain join and AQE picks broadcast or shuffle from its
+    measured size."""
+    sh = _shingled(docs, id_col, text_col, shingle_n)
+    sigs = minhash_signatures(sh, id_col=id_col, num_hashes=num_hashes,
+                              shingle_col="sh")
     cands = minhash_lsh_candidates(sigs, id_col, bands)
     # verify stage: exact Jaccard only on candidate pairs — join the
     # shingle sets back by id (blocking key = the candidate pair itself)
-    from .operators.dedup import shingles
-
-    # persisted: `sh` feeds BOTH sides of the verify join, and without a
-    # materialization barrier the normalize→split→shingle pipeline —
-    # the dominant cost of this stage — computes twice
-    sh = tracked_persist(
-        docs.select(
-            F.col(id_col),
-            shingles(text_col, shingle_n).alias("sh"),
-        ).withColumn("n_sh", F.size("sh"))
-    )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"),
                   F.col("n_sh").alias("n_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"),
@@ -106,10 +113,10 @@ def decontaminate(
     batch callers release with ``operators.dedup.release_caches()``
     after the returned plan materializes.
     """
-    sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_n)
+    sh = _shingled(docs, id_col, text_col, shingle_n)
+    sigs = minhash_signatures(sh, id_col=id_col, num_hashes=num_hashes,
+                              shingle_col="sh")
     cands = minhash_lsh_candidates(sigs, id_col, bands)
-
-    from .operators.dedup import shingles
 
     # Attach the CHEAP (id, split) columns first and reduce to
     # cross-split pairs, THEN join the heavy shingle arrays onto the
@@ -127,12 +134,6 @@ def decontaminate(
             ((F.col("split_a") == "train") & F.col("split_b").isin(*eval_splits))
             | ((F.col("split_b") == "train") & F.col("split_a").isin(*eval_splits))
         )
-    )
-    # persisted for the same two-sided-join reason as near_dup_drop_list
-    sh = tracked_persist(
-        docs.select(
-            F.col(id_col), shingles(text_col, shingle_n).alias("sh")
-        ).withColumn("n_sh", F.size("sh"))
     )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"),
                   F.col("n_sh").alias("n_a"))
@@ -178,18 +179,19 @@ def prepare_training_corpus(
     L2-normalized embedding (docs without an embedding survive with
     null — the multimodal left join).
 
-    Not fully lazy: the count-gated broadcast of the near-dup drop
-    list runs eager jobs at call time and pins tracked persists —
-    batch callers release with ``operators.dedup.release_caches()``
-    after the returned plan materializes."""
+    Lazy: the call runs no Spark job; the returned plan does all the
+    work when it is acted on. It pins a tracked persist (the shingle
+    table) — batch callers release with
+    ``operators.dedup.release_caches()`` after the plan materializes."""
     docs = load_table(spark, sf_dir, "documents")
     embs = load_table(spark, sf_dir, "embeddings")
 
     deduped = exact_dedup(docs)
     drops = near_dup_drop_list(deduped, jaccard_threshold=jaccard_threshold)
-    # count-gated: at web-crawl dup rates (30-60%) the near-dup drop
-    # list is corpus-scale — broadcast only while it provably fits
-    kept = deduped.join(gate_broadcast(drops), "doc_id", "left_anti")
+    # plain anti-join, no count gate: at web-crawl dup rates (30-60%)
+    # the drop list is corpus-scale, and AQE's runtime broadcast
+    # conversion decides from its measured size without an eager job
+    kept = deduped.join(drops, "doc_id", "left_anti")
 
     annotated = kept.select(
         "doc_id", "text", "source", "n_chars",

@@ -444,7 +444,11 @@ def q_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full curation funnel in one lazy plan: exact dedup → LSH
     near-dup removal (verified) → quality/language filter → token
-    annotation → normalized-embedding join. Rows-only (LSH stage)."""
+    annotation → normalized-embedding join. Building it runs no Spark
+    job beyond the parquet schema reads of its two tables: the drop
+    list is anti-joined plainly (AQE picks broadcast or shuffle from
+    its measured size), so all the work happens when the plan is acted
+    on. Rows-only (LSH stage)."""
     from ..pipelines import prepare_training_corpus
 
     out = prepare_training_corpus(spark, sf_dir)

@@ -323,9 +323,10 @@ def test_drop_list_broadcast_gated_both_sides(spark):
 
 
 def test_pipeline_drop_lists_respect_gate(spark, monkeypatch):
-    """decontaminate / prepare_training_corpus route their drop lists
-    through gate_broadcast — with the gate forced to 0 the plans carry
-    no broadcast hint yet results are unchanged."""
+    """decontaminate routes its drop list through gate_broadcast —
+    with the gate forced to 0 the plan carries no broadcast hint yet
+    results are unchanged. (prepare_training_corpus joins its drop
+    list plainly and leaves the broadcast choice to AQE.)"""
     import python_vectordbapp_ceph_spark.operators.dedup as dd
     from python_vectordbapp_ceph_spark.cache import release_caches
     from python_vectordbapp_ceph_spark.pipelines import decontaminate

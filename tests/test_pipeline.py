@@ -25,24 +25,59 @@ def test_near_dup_drop_list(spark):
     assert drops == {2}  # larger id of the verified pair drops
 
 
+def _spark_plan_nodes(node, into_caches):
+    """Physical plan nodes under ``node``, through AQE wrappers and
+    query stages; with ``into_caches`` also the plans cached behind
+    InMemoryTableScans."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return _spark_plan_nodes(node.executedPlan(), into_caches)
+    if cls.endswith("QueryStageExec"):
+        return _spark_plan_nodes(node.plan(), into_caches)
+    out = [node]
+    if cls == "InMemoryTableScanExec" and into_caches:
+        out += _spark_plan_nodes(node.relation().cachedPlan(), into_caches)
+    children = node.children()
+    for i in range(children.size()):
+        out += _spark_plan_nodes(children.apply(i), into_caches)
+    return out
+
+
 def test_verify_funnel_shingles_computed_once(spark):
-    """The shingle side feeds BOTH halves of the verify self-join; it
-    must come from the persisted intermediate (InMemoryTableScan per
-    side), not recompute the normalize→split→shingle pipeline twice."""
+    """The shingle table feeds BOTH halves of the verify self-join and
+    the MinHash signatures; every consumer must read the persisted
+    intermediate (InMemoryTableScan), not recompute the
+    normalize→split→shingle pipeline."""
     from python_vectordbapp_ceph_spark.cache import release_caches
     from python_vectordbapp_ceph_spark.pipelines import decontaminate
     from python_vectordbapp_ceph_spark.plans.inspect import explain_str
 
+    # doc 6 copies doc 0 into the test split: a non-empty dirty list, so
+    # AQE keeps decontaminate's funnel in the materialized plan
     docs = spark.createDataFrame(
         [(i, f"some text body number {i} with shared shingle words", "train")
-         for i in range(6)],
+         for i in range(6)]
+        + [(6, "some text body number 0 with shared shingle words", "test")],
         "doc_id long, text string, split string",
     )
     try:
-        plan = explain_str(near_dup_drop_list(docs), "simple")
-        assert plan.count("InMemoryTableScan") >= 2, plan
-        plan2 = explain_str(decontaminate(docs), "simple")
-        assert plan2.count("InMemoryTableScan") >= 2, plan2
+        for out in (near_dup_drop_list(docs), decontaminate(docs)):
+            plan = explain_str(out, "simple")
+            assert plan.count("InMemoryTableScan") >= 2, plan
+            # the signature side: every node hashing shingles (xxhash64)
+            # reads a cache below it and normalizes no text
+            # (regexp_replace) on the way down — the shingling ran
+            # once, inside the cache
+            root = out._jdf.queryExecution().sparkPlan()
+            sig_nodes = [n for n in _spark_plan_nodes(root, into_caches=True)
+                         if "xxhash64" in n.expressions().toString()]
+            assert sig_nodes, plan
+            for n in sig_nodes:
+                below = _spark_plan_nodes(n, into_caches=False)
+                names = [m.getClass().getSimpleName() for m in below]
+                assert "InMemoryTableScanExec" in names, names
+                assert not any("regexp_replace" in m.expressions().toString()
+                               for m in below), names
     finally:
         release_caches()
 
