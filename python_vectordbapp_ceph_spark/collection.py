@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions import vector as V
+from .io import read_parquet
 from .operators import filter_expr, knn, mutation
 
 # Core schema: fixed columns + dynamic-field overflow map (the Milvus
@@ -135,7 +136,7 @@ class VectorCollection:
 
     # --- internals -------------------------------------------------
     def _log(self) -> DataFrame:
-        return self.spark.read.schema(collection_schema(self.dim)).parquet(self.path)
+        return read_parquet(self.spark, self.path, schema=collection_schema(self.dim))
 
     def _writer_lease(self):
         """Acquire the collection's writer lease — a SIBLING file

@@ -151,13 +151,6 @@ def cosine_distance(a: Column | str, b: Column | str) -> Column:
     return F.lit(1.0) - cosine_similarity(a, b)
 
 
-def as_float32(v: Column | str) -> Column:
-    """array<float> cast — the storage dtype of the reference
-    (np.float32 cast before put_vectors, pythonvectordbceph.py:191)."""
-    v = F.col(v) if isinstance(v, str) else v
-    return v.cast("array<float>")
-
-
 def dim_ok(v: Column | str, dim: int) -> Column:
     """Boolean dimension check (what the backend index enforced)."""
     v = F.col(v) if isinstance(v, str) else v

@@ -1,8 +1,33 @@
-"""Loaders for the driver's synthetic parquet tables.
+"""Parquet reads: the package's one read primitive and the loaders for
+the driver's synthetic tables.
+
+``read_parquet`` is how every package read of parquet happens. A
+``spark.read.parquet`` without a schema runs one Spark job to read a
+footer; the primitive avoids it wherever the schema is already known,
+picking the schema in this order:
+
+1. the schema the table's writer recorded, passed as ``schema=`` (a
+   merge commit's ``schema`` field, the IVF ``_meta`` sidecar's
+   ``assigned_schema``, a typed sidecar such as the recall curve);
+2. the session memo: the schema inferred by an earlier read, keyed on
+   the applicationId, the paths, the reader options and the parquet
+   confs that change what inference returns (``_MEMO_CONFS``), and
+   valid only while the file listing (names, sizes, mtimes) is the one
+   it was inferred from;
+3. otherwise inference, as ``spark.read.parquet`` does it, whose result
+   is stored in the memo.
+
+The memo check reuses the listing Spark makes for the read itself (the
+analyzed plan's file index), so a hit costs no second listing — on
+S3A every listing is a paid request. A memo entry from another
+application, another conf value or a rewritten table is never reused:
+a rewrite changes the listing, and the next read infers again.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table under
-``/root/testdata/sf{0.001,0.01,0.1}``.
+``/root/testdata/sf{0.001,0.01,0.1}``. Schemas are never hard-coded:
+the testdata has shipped ``events.ts`` both as nanos-as-long and as
+``TIMESTAMP_NTZ``, and ``load_table`` handles both.
 
 Everything is a plain columnar parquet scan so Catalyst's predicate
 pushdown + column pruning apply for free; at 100 TB the same loader
@@ -12,9 +37,12 @@ points at a partitioned directory tree and nothing else changes.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -40,6 +68,123 @@ NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
 _PYFILES_SHIPPED: set[str] = set()
+
+# Session confs that change what parquet schema inference returns for
+# the same files; each is part of the memo key.
+_MEMO_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+_MEMO_MAX_ENTRIES = 512
+# Checking a listing costs a few driver round trips per file; above this
+# many files one inference job is the cheaper of the two, so the read
+# infers as it did before the memo.
+_MEMO_MAX_FILES = 256
+_SCHEMA_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+
+
+def _listing(df: DataFrame):
+    """Hash of the (path, size, mtime) triples the read's file index
+    listed: the listing Spark already made for ``df``, not a second
+    one. None when the plan is not a plain file scan or lists more than
+    ``_MEMO_MAX_FILES`` files."""
+    try:
+        files = df._jdf.queryExecution().analyzed().relation().location().allFiles()  # noqa: SLF001
+        if files.size() > _MEMO_MAX_FILES:
+            return None
+        it = files.iterator()
+    except Exception:
+        return None
+    out = []
+    while it.hasNext():
+        st = it.next()
+        out.append(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        )
+    return hash(tuple(sorted(out)))
+
+
+def _nullable(t: dict) -> dict:
+    if isinstance(t, dict):
+        t = dict(t)
+        if t.get("type") == "struct":
+            t["fields"] = [
+                dict(f, nullable=True, type=_nullable(f["type"]))
+                for f in t["fields"]
+            ]
+        elif t.get("type") == "array":
+            t["containsNull"] = True
+            t["elementType"] = _nullable(t["elementType"])
+        elif t.get("type") == "map":
+            t["valueContainsNull"] = True
+            t["keyType"] = _nullable(t["keyType"])
+            t["valueType"] = _nullable(t["valueType"])
+    return t
+
+
+def read_back_schema(schema: StructType, drop=()) -> StructType:
+    """The schema a parquet read infers for files written from a frame
+    of ``schema``: the partition columns ``drop`` left out, and every
+    field, array element and map value nullable (as the reader makes
+    them). What a writer records for its readers to pass back."""
+    kept = StructType([f for f in schema.fields if f.name not in drop])
+    return StructType.fromJson(_nullable(kept.jsonValue()))
+
+
+def _memo_key(spark: SparkSession, paths: tuple, options: dict) -> tuple:
+    return (
+        spark.sparkContext.applicationId,
+        paths,
+        tuple(sorted(options.items())),
+        tuple(spark.conf.get(c, None) for c in _MEMO_CONFS),
+    )
+
+
+def read_parquet(
+    spark: SparkSession,
+    paths,
+    schema: StructType | None = None,
+    **options: str,
+) -> DataFrame:
+    """``spark.read.options(**options).parquet(*paths)`` without the
+    schema-inference job where the schema is known (module docstring):
+    ``schema`` as recorded by the writer, else the session memo, else
+    inference. The result is the reader's DataFrame, unchanged."""
+    paths = (paths,) if isinstance(paths, str) else tuple(paths)
+
+    def read(schema=None):
+        # a fresh reader per read: DataFrameReader.schema() sets the
+        # schema on the reader itself
+        reader = spark.read.options(**options)
+        return (reader.schema(schema) if schema else reader).parquet(*paths)
+
+    if schema is not None:
+        return read(schema)
+    key = _memo_key(spark, paths, options)
+    with _MEMO_LOCK:
+        hit = _SCHEMA_MEMO.get(key)
+    if hit is not None:
+        df = read(hit[1])
+        if _listing(df) == hit[0]:
+            with _MEMO_LOCK:
+                _SCHEMA_MEMO.move_to_end(key)
+            return df
+    df = read()
+    listing = _listing(df)
+    with _MEMO_LOCK:
+        if listing is None:
+            _SCHEMA_MEMO.pop(key, None)
+        else:
+            _SCHEMA_MEMO[key] = (listing, df.schema)
+            _SCHEMA_MEMO.move_to_end(key)
+            while len(_SCHEMA_MEMO) > _MEMO_MAX_ENTRIES:
+                _SCHEMA_MEMO.popitem(last=False)
+    return df
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
@@ -93,7 +238,9 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one table. Filters/projections placed on the
-    result reach the parquet reader (PushedFilters / ReadSchema)."""
+    result reach the parquet reader (PushedFilters / ReadSchema). The
+    read goes through ``read_parquet``, so a repeated load of unchanged
+    files starts no Spark job."""
     # Runtime-settable SQL conf, so this works even under the driver's
     # own SparkSession (which we don't get to build). UTC session tz so
     # a TIMESTAMP_NTZ wall-clock reinterprets to the identical instant
@@ -101,7 +248,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _ensure_workers_can_import(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in NANOS_TS_COLS.get(name, ()):
         dt = dict(df.dtypes).get(c)
         if dt == "bigint":

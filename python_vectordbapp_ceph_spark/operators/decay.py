@@ -26,11 +26,6 @@ HL_US = 7 * 86400 * 1_000_000
 HL_CAP = 40
 
 
-def halflife_bucket(ts_col: str) -> F.Column:
-    """Absolute half-life period index of an instant timestamp."""
-    return F.expr(f"unix_micros({ts_col}) div {HL_US}L")
-
-
 def decayed_bucket_totals(
     df: DataFrame,
     series_col: str = "event_type",

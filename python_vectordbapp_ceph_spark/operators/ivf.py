@@ -23,6 +23,7 @@ Approximate by construction → registered rows-only with the driver
 
 from __future__ import annotations
 
+import json
 import logging
 import math
 import time
@@ -37,11 +38,13 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     IntegerType,
+    StringType,
     StructField,
     StructType,
 )
 
 from ..functions import vector as V
+from ..io import read_back_schema, read_parquet
 from .knn import topk_by_distance
 from .lease import (
     LedgerLockedError,
@@ -343,6 +346,36 @@ def write_partitioned(index: IVFIndex, path: str) -> None:
     ).parquet(path)
 
 
+# The sidecars are written by this module, so their readers pass these
+# schemas instead of inferring them. ``assigned_schema`` (the JSON
+# schema of the layout's files, plus the cluster_id partition column)
+# is NULL in a sidecar written before it was recorded; its layout is
+# then inferred.
+_META_SCHEMA = StructType([
+    StructField("cluster_id", IntegerType()),
+    StructField("centroid", ArrayType(DoubleType())),
+    StructField("vec_col", StringType()),
+    StructField("id_col", StringType()),
+    StructField("assigned_schema", StringType()),
+])
+_CURVE_SCHEMA = StructType([
+    StructField("nprobe", IntegerType()),
+    StructField("recall", DoubleType()),
+    StructField("k", IntegerType()),
+    StructField("n_queries", IntegerType()),
+])
+
+
+def _layout_schema(index: IVFIndex) -> StructType:
+    """The schema a read of the layout ``write_partitioned`` writes for
+    ``index`` infers: the files' columns, then ``cluster_id``."""
+    data = read_back_schema(
+        _canonical_f32(index.assigned, index.vec_col).schema,
+        drop=("cluster_id",),
+    )
+    return StructType(data.fields + [StructField("cluster_id", IntegerType())])
+
+
 def _write_meta(spark, index: IVFIndex, meta_path: str) -> None:
     # centroids persist as float64: they are index METADATA (probe
     # ranking inputs), not at-rest vector data — the canonical-f32
@@ -356,8 +389,9 @@ def _write_meta(spark, index: IVFIndex, meta_path: str) -> None:
             "centroid": [[float(x) for x in c] for c in index.centroids],
             "vec_col": index.vec_col,
             "id_col": index.id_col,
+            "assigned_schema": _layout_schema(index).json(),
         }),
-        "cluster_id int, centroid array<double>, vec_col string, id_col string",
+        _META_SCHEMA,
     )
     meta.coalesce(1).write.mode("overwrite").parquet(meta_path)
 
@@ -435,7 +469,7 @@ def record_recall_curve(
                 [(n, r, int(k), int(n_queries)) for n, r in curve],
                 columns=["nprobe", "recall", "k", "n_queries"],
             ),
-            "nprobe int, recall double, k int, n_queries int",
+            _CURVE_SCHEMA,
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{layout_path}/{_CURVE_SIDECAR}"
         )
@@ -449,7 +483,7 @@ def _read_curve(spark, assigned_path: str) -> list[tuple[int, float]] | None:
         return None
     return sorted(
         (int(r.nprobe), float(r.recall))
-        for r in spark.read.parquet(loc).collect()
+        for r in read_parquet(spark, loc, schema=_CURVE_SCHEMA).collect()
     )
 
 
@@ -516,11 +550,24 @@ def _read_meta(spark, assigned_path: str):
     for loc in locs:
         if fs.exists(hpath(loc)):
             rows = sorted(
-                spark.read.parquet(loc).collect(), key=lambda r: r.cluster_id
+                read_parquet(spark, loc, schema=_META_SCHEMA).collect(),
+                key=lambda r: r.cluster_id,
             )
             if rows:
                 return rows
     return None
+
+
+def _read_layout(spark, path: str, meta) -> DataFrame:
+    """The inverted-file layout at ``path``, read with the schema its
+    ``_meta`` sidecar rows record (session memo, else inference, for a
+    sidecar that records none)."""
+    recorded = meta[0].assigned_schema if meta else None
+    if recorded is None:
+        return read_parquet(spark, path)
+    return read_parquet(
+        spark, path, schema=StructType.fromJson(json.loads(recorded))
+    )
 
 
 def load_ivf(spark, path: str) -> IVFIndex:
@@ -543,7 +590,7 @@ def load_ivf(spark, path: str) -> IVFIndex:
     if meta is None:
         raise FileNotFoundError(f"no IVF metadata under {assigned}/_meta")
     return IVFIndex(
-        assigned=spark.read.parquet(assigned),
+        assigned=_read_layout(spark, assigned, meta),
         centroids=[[float(x) for x in r.centroid] for r in meta],
         vec_col=meta[0].vec_col,
         id_col=meta[0].id_col,
@@ -669,7 +716,8 @@ def rebuild_ivf(
             id_col = id_col or meta[0].id_col
             nlist = nlist or len(meta)
         index = build_ivf(
-            spark.read.parquet(path).drop("cluster_id"), nlist=nlist or 16,
+            _read_layout(spark, path, meta).drop("cluster_id"),
+            nlist=nlist or 16,
             vec_col=vec_col or "embedding", id_col=id_col or "vec_id",
             seed=seed, max_iter=max_iter,
         )
@@ -678,7 +726,9 @@ def rebuild_ivf(
         swap_dirs(spark, tmp, path, op="rebuild_ivf")
     finally:
         lease.release()
-    return replace(index, assigned=spark.read.parquet(path))
+    return replace(
+        index, assigned=read_parquet(spark, path, schema=_layout_schema(index))
+    )
 
 
 def rebuild_saved_ivf(

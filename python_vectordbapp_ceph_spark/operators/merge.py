@@ -88,8 +88,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..cache import materialize
+from ..io import read_back_schema, read_parquet
 from .mutation import upsert_last_writer
 
 _log = logging.getLogger(__name__)
@@ -449,23 +451,32 @@ def _current_version(spark: SparkSession, path: str) -> int | None:
     return listed[-1][0] if listed else None
 
 
+def _read_commit(spark: SparkSession, path: str, version: int) -> dict:
+    """The record of ONE commit file, no listing."""
+    return _read_json(spark, f"{path}/{_COMMITS}/{_commit_file(version)}")
+
+
+def _buckets_of(rec: dict) -> dict[int, str]:
+    """{bucket_id -> gen token} of a commit record. Generation ids are
+    opaque directory tokens (historically bare ints; now
+    "<version>-<uuid8>") — always strings in memory."""
+    return {int(k): str(g) for k, g in rec["buckets"].items()}
+
+
 def _read_manifest(spark: SparkSession, path: str, version: int) -> dict[int, str]:
     """{bucket_id -> gen token} of ONE commit file, no listing."""
-    m = _read_json(spark, f"{path}/{_COMMITS}/{_commit_file(version)}")
-    # generation ids are opaque directory tokens (historically bare
-    # ints; now "<version>-<uuid8>") — always strings in memory
-    return {int(k): str(g) for k, g in m["buckets"].items()}
+    return _buckets_of(_read_commit(spark, path, version))
 
 
-def current_manifest(spark: SparkSession, path: str, version: int | None = None):
-    """(version, {bucket_id(int) -> gen(int)}) of the highest commit —
-    or of the requested ``version`` (time travel; raises if that
-    commit doesn't exist). (None, {}) if the base has never been
-    committed. O(1) in commit-history size: the current version comes
-    from the `_latest` hint (+ forward probe), an explicit ``version``
-    from one existence check — the `_commits/` listing runs only as
-    the hint's fallback, so a defaults-only append stream no longer
-    pays an O(#commits-ever) listing per batch."""
+def _resolve_commit(spark: SparkSession, path: str, version: int | None = None):
+    """(version, record) of the highest commit — or of the requested
+    ``version`` (time travel; raises if that commit doesn't exist).
+    (None, {"buckets": {}}) if the base has never been committed. O(1)
+    in commit-history size: the current version comes from the
+    `_latest` hint (+ forward probe), an explicit ``version`` from one
+    existence check — the `_commits/` listing runs only as the hint's
+    fallback, so a defaults-only append stream no longer pays an
+    O(#commits-ever) listing per batch."""
     if version is not None:
         fs, hpath = _fs(spark, path)
         if not fs.exists(hpath(f"{path}/{_COMMITS}/{_commit_file(version)}")):
@@ -476,8 +487,28 @@ def current_manifest(spark: SparkSession, path: str, version: int | None = None)
     else:
         best = _current_version(spark, path)
         if best is None:
-            return None, {}
-    return best, _read_manifest(spark, path, best)
+            return None, {"buckets": {}}
+    return best, _read_commit(spark, path, best)
+
+
+def current_manifest(spark: SparkSession, path: str, version: int | None = None):
+    """(version, {bucket_id(int) -> gen token}) of the commit
+    :func:`_resolve_commit` resolves; (None, {}) if the base has never
+    been committed."""
+    best, rec = _resolve_commit(spark, path, version)
+    return best, _buckets_of(rec)
+
+
+def staged_schema(df: DataFrame) -> str:
+    """The data schema a staged write of ``df`` leaves in its files, as
+    the JSON a commit records under ``schema`` (``_kb`` is the partition
+    directory, not a file column)."""
+    return read_back_schema(df.schema, drop=("_kb",)).json()
+
+
+def _recorded_schema(rec: dict) -> StructType | None:
+    s = rec.get("schema")
+    return None if s is None else StructType.fromJson(json.loads(s))
 
 
 class ConcurrentWriteConflictError(RuntimeError):
@@ -640,7 +671,12 @@ def commit_optimistic(
     ``extra_fn`` (called per attempt) lets metadata that must reflect
     the REBASED-ONTO state — e.g. the streaming ``batch_tag`` carried
     forward by compaction — be recomputed after each race loss;
-    ``extra`` merges attempt-invariant metadata.
+    ``extra`` merges attempt-invariant metadata. An ``extra["schema"]``
+    (the staged data schema, :func:`staged_schema`) is recorded only
+    when the commit it lands on records the same schema (or there is
+    none): the new manifest keeps that commit's other generations, so
+    a schema field always describes every generation it maps, and
+    :func:`read_buckets` can pass it back instead of inferring.
 
     Concurrency contract at scale: commits are metadata-sized JSON
     reads/writes, so the conflict check costs one small read per
@@ -685,7 +721,8 @@ def commit_optimistic(
                 "fresh read"
             )
         checked = cur
-        live = _read_manifest(spark, path, cur) if cur >= 0 else {}
+        rec = _read_commit(spark, path, cur) if cur >= 0 else {"buckets": {}}
+        live = _buckets_of(rec)
         new_map = {b: g for b, g in live.items() if b not in touched}
         new_map.update({int(b): gen for b in survivors})
         x = dict(extra) if extra else {}
@@ -693,6 +730,8 @@ def commit_optimistic(
             more = extra_fn()
             if more:
                 x.update(more)
+        if cur >= 0 and x.get("schema") != rec.get("schema"):
+            x.pop("schema", None)
         if _try_publish(
             spark, path, cur + 1, new_map, extra=x or None, touched=touched
         ):
@@ -1077,8 +1116,17 @@ def read_buckets(
 
     Raises if the base has never been committed; returns an empty
     frame via the schema sidecar path in read_base for the all-deleted
-    case (manifest present, zero buckets)."""
-    version, live = current_manifest(spark, path, version)
+    case (manifest present, zero buckets).
+
+    A commit that records its data ``schema`` (every generation it maps
+    was staged with it, see :func:`commit_optimistic`) is read with that
+    schema plus the `gen`/`_kb` partition columns: no inference job and
+    no footer merge. A commit without one (legacy, or one whose
+    generations differ in schema) is inferred through the session memo,
+    with ``merge_schema`` footer-merging generations whose schemas
+    evolved."""
+    version, rec = _resolve_commit(spark, path, version)
+    live = _buckets_of(rec)
     if version is None:
         raise FileNotFoundError(
             f"no committed manifest under {path} — not a merge base "
@@ -1090,13 +1138,21 @@ def read_buckets(
     if not live:
         return None
     dirs = [f"{path}/gen={g}/_kb={b}" for b, g in sorted(live.items())]
-    reader = spark.read.option("basePath", path)
+    schema = _recorded_schema(rec)
+    if schema is not None:
+        schema = StructType(schema.fields + [
+            StructField("gen", StringType()), StructField("_kb", IntegerType()),
+        ])
+        return read_parquet(
+            spark, dirs, schema=schema, basePath=path
+        ).drop("gen")
+    opts = {"basePath": path}
     if merge_schema:
         # footer-merge across generations whose schemas evolved (e.g.
         # a shard ledger whose newer segments carry columns the older
         # ones predate) — metadata-sized cost, never reads row data
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*dirs).drop("gen")
+        opts["mergeSchema"] = "true"
+    return read_parquet(spark, dirs, **opts).drop("gen")
 
 
 def _staged_write(
@@ -1201,7 +1257,10 @@ def overwrite_touched_buckets(
     retries. ``read_version`` pins the version whose bucket contents
     ``result`` was derived from (the version the caller read); None
     resolves the current version here, correct only when nothing can
-    have committed between the caller's read and this call."""
+    have committed between the caller's read and this call.
+
+    The commit records the staged data schema when the commit it lands
+    on records the same one (:func:`commit_optimistic`)."""
     if read_version is not None:
         version = int(read_version)
         live = _read_manifest(spark, path, version)
@@ -1216,7 +1275,8 @@ def overwrite_touched_buckets(
     )
     touched = set(buckets) | set(survivors)
     commit_optimistic(
-        spark, path, version, touched, gen, survivors
+        spark, path, version, touched, gen, survivors,
+        extra={"schema": staged_schema(result)},
     )
     if not keep_history:
         # lazy cleanup of superseded directories — crash-safe: nothing
@@ -1261,7 +1321,9 @@ def replace_base(
     frame: stage at (current version + 1), publish a full map, lazily
     delete the superseded generations (orphans if interrupted;
     vacuum() reclaims). ``pre_aligned`` as in overwrite_touched_buckets
-    (the caller's plan already hash-partitions on `_kb`)."""
+    (the caller's plan already hash-partitions on `_kb`). The commit
+    records the staged data schema: every generation it maps is this
+    one, so read_buckets reads it without inference."""
     spark = bucketed.sparkSession
     version, live = current_manifest(spark, path)
     v = 0 if version is None else version + 1
@@ -1274,7 +1336,10 @@ def replace_base(
     # do not exist yet — so it cannot rebase over any concurrent
     # commit and it must conflict with every later optimistic one:
     # touched="*" (fixed-version publish; a lost race raises)
-    _publish(spark, path, v, {b: gen for b in survivors}, touched="*")
+    _publish(
+        spark, path, v, {b: gen for b in survivors},
+        extra={"schema": staged_schema(bucketed)}, touched="*",
+    )
     fs, hpath = _fs(spark, path)
     for b, g in live.items():
         if g != gen:

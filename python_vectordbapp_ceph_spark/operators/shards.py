@@ -36,11 +36,14 @@ shard artifact with exactly-once visibility.
 
 from __future__ import annotations
 
+import json
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
+from ..io import read_parquet
 from .bloom import bloom_build_packed, bloom_contains_many
 from .merge import (
     _COMMITS,
@@ -52,6 +55,7 @@ from .merge import (
     commit_optimistic,
     current_manifest,
     read_buckets,
+    staged_schema,
 )
 from .twophase import global_cumsum
 
@@ -162,14 +166,24 @@ def _pack(docs: DataFrame, budget: int, offset) -> DataFrame:
     ).withColumn("shard_id", F.expr(f"(cum - n_tokens) div {int(budget)}"))
 
 
-def _write_sidecar(spark: SparkSession, path: str, gen: str) -> None:
+def _write_sidecar(
+    spark: SparkSession, path: str, gen: str, schema: str
+) -> None:
     """Stage the generation's bloom sidecar into its (still-invisible)
     directory, built from the STAGED files (no pack recompute): m
     sized to the key count, plus the key-range zonemap (kmin, kmax) —
     count/min/max in ONE small agg over the staged key column. The
     sidecar publishes (and vacuums) atomically with its segment via
-    the manifest rename."""
-    staged = spark.read.parquet(f"{path}/gen={gen}")
+    the manifest rename. ``schema`` is the staged data schema
+    (merge.staged_schema), so the staged files are read without
+    inference."""
+    staged = read_parquet(
+        spark, f"{path}/gen={gen}",
+        schema=StructType(
+            StructType.fromJson(json.loads(schema)).fields
+            + [StructField("_kb", IntegerType())]
+        ),
+    )
     stats = staged.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("doc_id").alias("kmin"),
@@ -268,7 +282,10 @@ def dedup_against_ledger(
             if (path, g) not in _SIDECAR_M_CACHE
         ]
         if unknown:
-            u_sides = {b: spark.read.parquet(sidecars[b]) for b in unknown}
+            # sidecars of every format generation share these paths (the
+            # position-set form, m-less, zonemap-less), so their schema
+            # comes from the session memo, never a fixed one
+            u_sides = {b: read_parquet(spark, sidecars[b]) for b in unknown}
             m_parts = [
                 u_sides[b].select(
                     F.lit(b).alias("b"),
@@ -336,7 +353,7 @@ def dedup_against_ledger(
         if not probe_bs:
             return docs  # whole history is range-disjoint: no dups possible
         keys = docs.select("doc_id").distinct()
-        sides = {b: spark.read.parquet(sidecars[b]) for b in probe_bs}
+        sides = {b: read_parquet(spark, sidecars[b]) for b in probe_bs}
         m_by_b = {b: meta_by_b[b][0] for b in probe_bs}
         # the probe broadcasts the union of the SURVIVING sidecars'
         # bitsets (≤ m/8 bytes each) — bounded by max_segments when
@@ -504,6 +521,7 @@ def _append_segment_once(
         .withColumn("_kb", F.lit(seg))
     )
     gen = _gen_token(v)
+    schema = staged_schema(packed)
     survivors = _staged_write(spark, path, packed, gen, 1, files_per_segment)
     if not survivors:
         # the batch packed to zero rows (e.g. dedup dropped an already-
@@ -521,7 +539,7 @@ def _append_segment_once(
     # key bloom + zonemap into the SAME staged (still-invisible)
     # generation dir: published by the rename below or orphaned with
     # it on a crash
-    _write_sidecar(spark, path, gen)
+    _write_sidecar(spark, path, gen, schema)
     # OPTIMISTIC commit (merge.commit_optimistic): two concurrent
     # APPENDS both compute segment id max(live)+1, so they overlap on
     # `seg` and the loser raises ConcurrentWriteConflictError — appends
@@ -530,10 +548,13 @@ def _append_segment_once(
     # concurrent COMPACTION, though, touches only ALREADY-COMMITTED
     # container ids (disjoint from the fresh `seg`), so an append
     # rebases over it and both land without the writer lease.
+    extra = {"schema": schema}
+    if batch_tag is not None:
+        extra["batch_tag"] = batch_tag
     commit_optimistic(
         spark, path,
         read_version=version, touched={seg}, gen=gen, survivors=[seg],
-        extra={"batch_tag": batch_tag} if batch_tag is not None else None,
+        extra=extra,
     )
     spark.catalog.refreshByPath(path)
     return seg
@@ -652,12 +673,13 @@ def compact(
         old = old.withColumnRenamed("_kb", "segment")
     merged = old.withColumn("_kb", F.lit(target))
     gen = _gen_token(version + 1)
+    schema = staged_schema(merged)
     _staged_write(spark, path, merged, gen, 1, files_per_segment)
     # the merged bloom is REBUILT with m resized to the merged key
     # count — reusing the per-segment m here is exactly how a fixed-m
     # design saturates as containers grow — and the merged zonemap is
     # the merged keys' true range
-    _write_sidecar(spark, path, gen)
+    _write_sidecar(spark, path, gen, schema)
     # the atomic visibility point — OPTIMISTIC: a racing APPEND touches
     # only its fresh segment id (disjoint from the already-committed
     # ids this compaction merges), so the compaction rebases over it
@@ -676,7 +698,7 @@ def compact(
     commit_optimistic(
         spark, path,
         read_version=version, touched=set(merged_ids), gen=gen,
-        survivors=[target], extra_fn=_tag_extra,
+        survivors=[target], extra={"schema": schema}, extra_fn=_tag_extra,
     )
     # superseded generations retained for time travel; vacuum() reclaims
     spark.catalog.refreshByPath(path)

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import register
+from ..io import read_parquet
 from ._common import T, dec2, widen
 
 
@@ -159,7 +160,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out_dir)
     spark.catalog.refreshByPath(out_dir)
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     return back.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import register
+from ..io import read_parquet
 from ._common import T
 
 # floor(1e6 / log2(i+1)) for ranks 1..10 and its running sum —
@@ -697,8 +698,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars", "lang"
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "gen=2"))
     spark.catalog.refreshByPath(out_dir)
-    back = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(out_dir, "gen=1"), os.path.join(out_dir, "gen=2")
+    back = read_parquet(
+        spark,
+        [os.path.join(out_dir, "gen=1"), os.path.join(out_dir, "gen=2")],
+        mergeSchema="true",
     )
     return (
         back.groupBy("source")

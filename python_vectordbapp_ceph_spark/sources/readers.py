@@ -11,9 +11,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import read_parquet
+
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def read_json_events(spark: SparkSession, path: str, schema=None) -> DataFrame:

@@ -1206,3 +1206,68 @@ def test_ivf_dim_probe_null_safe_without_ansi(spark):
             build_ivf(all_null, nlist=2)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+# --- interrupted IVF swap: load_ivf heals it under the writer lease ---
+
+
+def _swap_vec_df(spark, n=40, dim=4):
+    rows = [
+        (i, [float((i * 7 + j * 3) % 11) for j in range(dim)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _interrupt_assigned_swap(spark, assigned: str) -> None:
+    """Recreate the crash window: live path renamed aside, new layout
+    never arrived."""
+    from python_vectordbapp_ceph_spark.operators.merge import _fs
+
+    fs, hpath = _fs(spark, assigned)
+    assert fs.rename(hpath(assigned), hpath(assigned + "._old"))
+
+
+def test_load_ivf_recovers_interrupted_swap(spark, tmp_path):
+    import os
+
+    from python_vectordbapp_ceph_spark.operators.ivf import (
+        build_ivf,
+        load_ivf,
+        save_ivf,
+    )
+
+    base = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    root = str(tmp_path / "ivf")
+    save_ivf(build_ivf(base, nlist=2), root)
+    # crash shape: rebuild renamed the live dir aside and died before
+    # renaming the new layout in
+    os.rename(f"{root}/assigned", f"{root}/assigned._old")
+    idx = load_ivf(spark, root)   # heals via lease.recover_swap
+    assert idx.assigned.count() == 20
+    assert os.path.isdir(f"{root}/assigned")
+    assert not os.path.exists(f"{root}/assigned._old")
+
+
+def test_load_ivf_heals_interrupted_swap_when_no_writer(spark, tmp_path):
+    """Crashed writer, lease free: load_ivf recovers under the lease
+    and returns a working index."""
+    from python_vectordbapp_ceph_spark.operators import ivf as IVF
+    from python_vectordbapp_ceph_spark.operators import lease as L
+
+    root = str(tmp_path / "idx")
+    IVF.save_ivf(IVF.build_ivf(_swap_vec_df(spark), nlist=4), root)
+    _interrupt_assigned_swap(spark, f"{root}/assigned")
+    idx = IVF.load_ivf(spark, root)
+    assert idx.assigned.count() == 40
+    hits = idx.search([0.0, 3.0, 6.0, 9.0], k=3, nprobe=4).collect()
+    assert len(hits) == 3
+    # the lease was released by the recovery — a writer can acquire
+    lease = L.acquire_writer_lease(
+        spark, f"{root}/assigned",
+        lease_path=L.sibling_lease_path(f"{root}/assigned"), timeout_ms=0,
+    )
+    lease.release()

@@ -568,3 +568,58 @@ def test_merge_write_plan_has_one_kb_exchange(spark, tmp_path, monkeypatch):
     assert re.fullmatch(r"hashpartitioning\(_kb#\d+L?, \d+\)", exchanges[0]), (
         exchanges[0]
     )
+
+
+# --- bucket-aligned staging: the within-bucket salt skips map columns ---
+
+
+def test_files_per_bucket_multiplier_on_map_column(spark, tmp_path):
+    """The within-bucket salt must not hash MapType columns (Spark
+    rejects hash over maps) — collection-shaped tables are exactly the
+    big tables the multiplier targets."""
+    from python_vectordbapp_ceph_spark.operators.merge import (
+        read_base,
+        write_bucketed_base,
+    )
+
+    df = spark.range(100).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        F.col("id").alias("val"),
+        F.create_map(F.lit("a"), F.col("id").cast("string")).alias("tags"),
+    )
+    base = str(tmp_path / "base")
+    write_bucketed_base(df, base, "key", n_buckets=4, files_per_bucket=2)
+    assert read_base(spark, base).count() == 100
+
+
+def test_bucket_aligned_handles_nested_map_columns(spark):
+    from python_vectordbapp_ceph_spark.operators import merge as M
+
+    df = spark.createDataFrame(
+        [(i, f"k{i}", [{"a": str(i)}]) for i in range(20)],
+        "id long, key string, tags array<map<string,string>>",
+    )
+    out = M._bucket_aligned(M._with_bucket(df, "key", 4), 4, 2)
+    assert out.count() == 20  # analysis used to fail: HASH_MAP_TYPE
+
+
+def test_bucket_aligned_handles_struct_nested_map(spark):
+    from python_vectordbapp_ceph_spark.operators import merge as M
+
+    df = spark.createDataFrame(
+        [(i, f"k{i}", (i, {"a": "b"})) for i in range(10)],
+        "id long, key string, meta struct<n:long,m:map<string,string>>",
+    )
+    out = M._bucket_aligned(M._with_bucket(df, "key", 4), 4, 2)
+    assert out.count() == 10
+
+
+def test_bucket_aligned_all_map_frame_random_salt(spark):
+    """Every column map-bearing -> random-salt fallback still works."""
+    from python_vectordbapp_ceph_spark.operators import merge as M
+
+    df = spark.createDataFrame(
+        [([{"a": str(i)}],) for i in range(10)],
+        "tags array<map<string,string>>",
+    ).withColumn("_kb", F.lit(0))
+    assert M._bucket_aligned(df, 1, 2).count() == 10

@@ -11,9 +11,10 @@ their pins in tests/test_epoch_lease.py):
   - the leased append auto-heartbeats (a micro-batch outliving the TTL
     must not present an expired lease to a concurrent compact);
   - the TEXT ingest path drops keys missing from the object store with
-    a logged count instead of upserting embed("") for all of them;
-  - files_per_bucket>1 works on map-bearing tables (the within-bucket
-    salt no longer hashes MapType columns).
+    a logged count instead of upserting embed("") for all of them.
+
+The files_per_bucket map-column pin lives in tests/test_merge.py and
+the interrupted-swap load_ivf pin in tests/test_knn.py.
 """
 
 import json
@@ -153,25 +154,6 @@ def test_text_ingest_drops_missing_object_text(spark, tmp_path):
     assert {r.key for r in coll.snapshot().collect()} == {"present"}
 
 
-def test_files_per_bucket_multiplier_on_map_column(spark, tmp_path):
-    """The within-bucket salt must not hash MapType columns (Spark
-    rejects hash over maps) — collection-shaped tables are exactly the
-    big tables the multiplier targets."""
-    from python_vectordbapp_ceph_spark.operators.merge import (
-        read_base,
-        write_bucketed_base,
-    )
-
-    df = spark.range(100).select(
-        F.concat(F.lit("k"), F.col("id")).alias("key"),
-        F.col("id").alias("val"),
-        F.create_map(F.lit("a"), F.col("id").cast("string")).alias("tags"),
-    )
-    base = str(tmp_path / "base")
-    write_bucketed_base(df, base, "key", n_buckets=4, files_per_bucket=2)
-    assert read_base(spark, base).count() == 100
-
-
 # --- second review pass: shard_ingest / ivf / cache --------------------------------
 
 
@@ -301,30 +283,6 @@ def test_search_batch_tolerates_null_query_vector(spark):
     )
     got = search_batch(index, queries, k=2, nprobe=2).collect()
     assert {r.q_id for r in got} == {1}  # null-vec query yields no rows
-
-
-def test_load_ivf_recovers_interrupted_swap(spark, tmp_path):
-    import os
-
-    from python_vectordbapp_ceph_spark.operators.ivf import (
-        build_ivf,
-        load_ivf,
-        save_ivf,
-    )
-
-    base = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    root = str(tmp_path / "ivf")
-    save_ivf(build_ivf(base, nlist=2), root)
-    # crash shape: rebuild renamed the live dir aside and died before
-    # renaming the new layout in
-    os.rename(f"{root}/assigned", f"{root}/assigned._old")
-    idx = load_ivf(spark, root)   # heals via lease.recover_swap
-    assert idx.assigned.count() == 20
-    assert os.path.isdir(f"{root}/assigned")
-    assert not os.path.exists(f"{root}/assigned._old")
 
 
 def test_release_caches_scopes_are_isolated(spark):

@@ -1,8 +1,8 @@
 """Regression tests for the round-12 ADVICE findings + the verdict's
-typed-412 ask, fixed in round 13. The live-writer and completing-swap
-cases of finding 1 are pinned in tests/test_knn.py and finding 5 (a
+typed-412 ask, fixed in round 13. Finding 1 is pinned in
+tests/test_knn.py, finding 4 in tests/test_merge.py and finding 5 (a
 recovery rename losing to a concurrent healer) in tests/test_lease.py,
-next to the shared swap. The rest stay here:
+next to the code each pins. The rest stay here:
 
   1. (medium) load_ivf called the swap recovery WITHOUT the writer
      lease: a reader landing between a LIVE rebuild's two renames
@@ -31,11 +31,9 @@ from __future__ import annotations
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
 from python_vectordbapp_ceph_spark.operators import ivf as IVF
 from python_vectordbapp_ceph_spark.operators import lease as L
-from python_vectordbapp_ceph_spark.operators import merge as M
 from python_vectordbapp_ceph_spark.operators import publish as P
 from tests.test_epoch_lease import ListingFakeS3Fs
 
@@ -46,34 +44,6 @@ def _vec_df(spark, n=40, dim=4):
         for i in range(n)
     ]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def _interrupt_swap(spark, assigned: str) -> None:
-    """Recreate the crash window: live path renamed aside, new layout
-    never arrived."""
-    fs, hpath = M._fs(spark, assigned)
-    assert fs.rename(hpath(assigned), hpath(assigned + "._old"))
-
-
-# --- 1: reader-side recovery is lease-gated --------------------------------------
-
-
-def test_load_ivf_heals_interrupted_swap_when_no_writer(spark, tmp_path):
-    """Crashed writer, lease free: load_ivf recovers under the lease
-    and returns a working index."""
-    root = str(tmp_path / "idx")
-    IVF.save_ivf(IVF.build_ivf(_vec_df(spark), nlist=4), root)
-    _interrupt_swap(spark, f"{root}/assigned")
-    idx = IVF.load_ivf(spark, root)
-    assert idx.assigned.count() == 40
-    hits = idx.search([0.0, 3.0, 6.0, 9.0], k=3, nprobe=4).collect()
-    assert len(hits) == 3
-    # the lease was released by the recovery — a writer can acquire
-    lease = L.acquire_writer_lease(
-        spark, f"{root}/assigned",
-        lease_path=L.sibling_lease_path(f"{root}/assigned"), timeout_ms=0,
-    )
-    lease.release()
 
 
 # --- 2: assign_new drops wrong-dimension vectors ----------------------------------
@@ -158,36 +128,6 @@ def test_epoch_acquire_does_not_adopt_foreign_record():
         L.acquire_writer_lease(None, "/led", ttl_ms=600_000,
                                timeout_ms=0, ops=fs)
     a.release()
-
-
-# --- 4: nested maps excluded from the bucket salt ---------------------------------
-
-
-def test_bucket_aligned_handles_nested_map_columns(spark):
-    df = spark.createDataFrame(
-        [(i, f"k{i}", [{"a": str(i)}]) for i in range(20)],
-        "id long, key string, tags array<map<string,string>>",
-    )
-    out = M._bucket_aligned(M._with_bucket(df, "key", 4), 4, 2)
-    assert out.count() == 20  # analysis used to fail: HASH_MAP_TYPE
-
-
-def test_bucket_aligned_handles_struct_nested_map(spark):
-    df = spark.createDataFrame(
-        [(i, f"k{i}", (i, {"a": "b"})) for i in range(10)],
-        "id long, key string, meta struct<n:long,m:map<string,string>>",
-    )
-    out = M._bucket_aligned(M._with_bucket(df, "key", 4), 4, 2)
-    assert out.count() == 10
-
-
-def test_bucket_aligned_all_map_frame_random_salt(spark):
-    """Every column map-bearing -> random-salt fallback still works."""
-    df = spark.createDataFrame(
-        [([{"a": str(i)}],) for i in range(10)],
-        "tags array<map<string,string>>",
-    ).withColumn("_kb", F.lit(0))
-    assert M._bucket_aligned(df, 1, 2).count() == 10
 
 
 # --- 6: typed status code beats message substrings --------------------------------
