@@ -19,9 +19,11 @@ picking the schema in this order:
 
 The memo check reuses the listing Spark makes for the read itself (the
 analyzed plan's file index), so a hit costs no second listing — on
-S3A every listing is a paid request. A memo entry from another
+S3A every listing is a paid request; only a stale entry costs two, the
+pinned read's and the inferring read's. A memo entry from another
 application, another conf value or a rewritten table is never reused:
-a rewrite changes the listing, and the next read infers again.
+a rewrite changes the listing, and the next read infers again. Reads
+of more than ``_MEMO_MAX_FILES`` files always infer.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table under
@@ -80,10 +82,10 @@ _MEMO_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 _MEMO_MAX_ENTRIES = 512
-# Checking a listing costs a few driver round trips per file; above this
-# many files one inference job is the cheaper of the two, so the read
-# infers as it did before the memo.
-_MEMO_MAX_FILES = 256
+# Checking a listing costs a few driver round trips per file (local[2]:
+# 0.5 ms for 1 file, 41 ms for 256, where one inference job took 37-41
+# ms); above this many files the read infers as it did before the memo.
+_MEMO_MAX_FILES = 64
 _SCHEMA_MEMO: OrderedDict = OrderedDict()
 _MEMO_LOCK = threading.Lock()
 
