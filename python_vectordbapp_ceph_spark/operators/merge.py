@@ -506,11 +506,6 @@ def staged_schema(df: DataFrame) -> str:
     return read_back_schema(df.schema, drop=("_kb",)).json()
 
 
-def _recorded_schema(rec: dict) -> StructType | None:
-    s = rec.get("schema")
-    return None if s is None else StructType.fromJson(json.loads(s))
-
-
 class ConcurrentWriteConflictError(RuntimeError):
     """A concurrent commit touched buckets this writer also touched (or
     carried no touched-set information, which is treated as touching
@@ -1138,11 +1133,13 @@ def read_buckets(
     if not live:
         return None
     dirs = [f"{path}/gen={g}/_kb={b}" for b, g in sorted(live.items())]
-    schema = _recorded_schema(rec)
-    if schema is not None:
-        schema = StructType(schema.fields + [
-            StructField("gen", StringType()), StructField("_kb", IntegerType()),
-        ])
+    if rec.get("schema") is not None:
+        schema = StructType(
+            StructType.fromJson(json.loads(rec["schema"])).fields + [
+                StructField("gen", StringType()),
+                StructField("_kb", IntegerType()),
+            ]
+        )
         return read_parquet(
             spark, dirs, schema=schema, basePath=path
         ).drop("gen")
