@@ -1,5 +1,5 @@
 """Parquet reads: the package's one read primitive and the loaders for
-the driver's synthetic tables.
+the synthetic test tables.
 
 ``read_parquet`` is how every package read of parquet happens. A
 ``spark.read.parquet`` without a schema runs one Spark job to read a
@@ -26,8 +26,9 @@ a rewrite changes the listing, and the next read infers again. Reads
 of more than ``_MEMO_MAX_FILES`` files always infer.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
-lineitem events documents embeddings — one parquet file per table under
-``/root/testdata/sf{0.001,0.01,0.1}``. Schemas are never hard-coded:
+lineitem events documents embeddings — one parquet file per table in
+each scale-factor directory (sf0.001, sf0.01, sf0.1; ``DEFAULT_SF_DIR``).
+Schemas are never hard-coded:
 the testdata has shipped ``events.ts`` both as nanos-as-long and as
 ``TIMESTAMP_NTZ``, and ``load_table`` handles both.
 

@@ -1,8 +1,10 @@
 """Regression tests for the round-12 ADVICE findings + the verdict's
-typed-412 ask, fixed in round 13. Finding 1 is pinned in
-tests/test_knn.py, finding 4 in tests/test_merge.py and finding 5 (a
+typed-412 ask, fixed in round 13. The live-writer and completing-swap
+cases of finding 1 are pinned in tests/test_knn.py and finding 5 (a
 recovery rename losing to a concurrent healer) in tests/test_lease.py,
-next to the code each pins. The rest stay here:
+next to the shared swap; its lease-free heal is pinned in
+tests/test_knn.py too, and finding 4 in tests/test_merge.py. The
+findings:
 
   1. (medium) load_ivf called the swap recovery WITHOUT the writer
      lease: a reader landing between a LIVE rebuild's two renames

@@ -29,7 +29,7 @@ def _inferred(spark, *paths, **options):
 
 def _write_events(sf_dir, ts_type):
     """The fixture's events table re-encoded with ``ts`` as ``ts_type``
-    (pyarrow, as the driver's testdata generator writes it)."""
+    (with pyarrow, as the test data itself is written)."""
     t = pq.read_table(f"{SF_DIR}/events.parquet")
     i = t.schema.get_field_index("ts")
     t = t.set_column(i, "ts", t.column("ts").cast(ts_type))
